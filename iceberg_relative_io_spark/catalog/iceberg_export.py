@@ -1959,8 +1959,8 @@ def delete_positions_iceberg(
     live = read_iceberg(spark, table_dir, _with_positions=True)
     # recorded-path restore: normalized URI -> the manifest's exact path
     recorded = _head_data_file_paths(doc)
-    path_map = spark.createDataFrame(
-        [(n, p) for n, p in recorded.items()], "__ir_fp string, file_path string"
+    path_map = _local_frame(
+        spark, list(recorded.items()), "__ir_fp string, file_path string"
     )
     hits = (
         live.filter(condition)
@@ -2003,11 +2003,6 @@ def _head_data_file_paths(doc: dict) -> dict[str, str]:
     """Normalized path -> manifest-recorded path for every live data
     file of the current snapshot. O(files) metadata work, no data
     read."""
-    import re
-
-    def norm(p: str) -> str:
-        return "/" + re.sub(r"^([A-Za-z][A-Za-z0-9+.\-]*:)?/*", "", p)
-
     out: dict[str, str] = {}
     if doc.get("current-snapshot-id") is None:
         return out
@@ -2026,7 +2021,7 @@ def _head_data_file_paths(doc: dict) -> dict[str, str]:
             if e["status"] == 2 or e["data_file"]["content"] != 0:
                 continue
             p = e["data_file"]["file_path"]
-            out[norm(p)] = p
+            out[_norm_path_py(p)] = p
     return out
 
 
@@ -3460,7 +3455,8 @@ def snapshots_iceberg(spark: SparkSession, table_dir: str) -> DataFrame:
         )
         for s in doc["snapshots"]
     ]
-    return spark.createDataFrame(
+    return _local_frame(
+        spark,
         rows,
         "snapshot_id long, parent_id long, sequence_number long, "
         "operation string, is_current boolean",
@@ -3475,9 +3471,7 @@ def refs_iceberg(spark: SparkSession, table_dir: str) -> DataFrame:
         (name, r.get("type", "branch"), int(r["snapshot-id"]))
         for name, r in sorted(doc.get("refs", {}).items())
     ]
-    return spark.createDataFrame(
-        rows, "name string, type string, snapshot_id long"
-    )
+    return _local_frame(spark, rows, "name string, type string, snapshot_id long")
 
 
 def files_iceberg(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -3517,7 +3511,8 @@ def files_iceberg(spark: SparkSession, table_dir: str) -> DataFrame:
                         ),
                     )
                 )
-    return spark.createDataFrame(
+    return _local_frame(
+        spark,
         rows,
         "content int, record_count long, sequence_number long, "
         "partition string",
@@ -3558,9 +3553,166 @@ def _spark_type_of(tname, default: T.DataType | None = None) -> T.DataType:
         m = _DECIMAL_TYPE_RE.fullmatch(tname.strip())
         if m:
             return T.DecimalType(int(m.group(1)), int(m.group(2)))
+        if tname.startswith("fixed["):
+            return T.BinaryType()
     if default is not None:
         return default
     raise ValueError(f"unsupported column type {tname!r}")
+
+
+def _ident_value(tname, raw):
+    """Manifest identity-partition value -> the Python value of the
+    column's Spark type (``_spark_type_of(tname)``, uuid and other
+    unknown types as strings). Spec single-value encodings: date is days
+    since epoch, timestamp micros since epoch (UTC for timestamptz).
+    Values decoded from an external writer's avro manifests may arrive
+    as bytes: a uuid is its 16 raw bytes, fixed/binary stay bytes, and a
+    decimal is its unscaled two's-complement big-endian integer at the
+    type's scale."""
+    if raw is None:
+        return None
+    if not isinstance(tname, str):
+        tname = "string"
+    if tname == "date":
+        return date.fromordinal(_EPOCH.toordinal() + int(raw))
+    if tname in ("timestamptz", "timestamp"):
+        from datetime import timedelta
+
+        return datetime(1970, 1, 1) + timedelta(microseconds=int(raw))
+    if tname == "uuid" and isinstance(raw, bytes):
+        return str(uuid.UUID(bytes=raw))
+    dt = _spark_type_of(tname, default=T.StringType())
+    if isinstance(dt, T.BinaryType):
+        return raw.encode() if isinstance(raw, str) else bytes(raw)
+    if isinstance(dt, T.DecimalType):
+        from decimal import Decimal
+
+        if isinstance(raw, bytes):
+            unscaled = int.from_bytes(raw, "big", signed=True)
+            return Decimal(f"{unscaled}E-{dt.scale}")
+        return raw if isinstance(raw, Decimal) else Decimal(str(raw))
+    if isinstance(dt, T.StringType):
+        return raw if isinstance(raw, str) else str(raw)
+    if isinstance(dt, (T.DoubleType, T.FloatType)):
+        return float(raw) if isinstance(raw, (int, str)) else raw
+    if isinstance(dt, (T.LongType, T.IntegerType)) and isinstance(raw, str):
+        return int(raw)
+    return raw
+
+
+def _local_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """A frame of driver-made rows, built from a pyarrow table: Spark
+    plans it as a ``LocalTableScan`` inside the JVM and starts no Python
+    worker. (``createDataFrame`` on a list of tuples makes a pickled-RDD
+    relation that forks Python workers to unpickle it on every action.)
+    ``schema`` is a StructType or a DDL string; values must already be
+    of each field's Python type."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+_SCHEME_RE = re.compile(r"^([A-Za-z][A-Za-z0-9+.\-]*:)?/*")
+
+
+def _norm_path_py(p: str) -> str:
+    """Scheme-insensitive rooted form of a recorded path (Python twin of
+    ``_norm_path``: same regex, so driver-made keys and scan-time paths
+    normalize identically)."""
+    return "/" + _SCHEME_RE.sub("", p)
+
+
+def _norm_path(c):
+    """Scheme-insensitive path equality for position-delete matching:
+    Spark's ``_metadata.file_path`` is a URI (file:///…) while delete
+    files may record plain paths (or vice versa) — both normalize to a
+    single rooted form before joining."""
+    return F.concat(F.lit("/"), F.regexp_replace(c, _SCHEME_RE.pattern, ""))
+
+
+def _norm_meta_path(c):
+    """``_norm_path`` for ``_metadata.file_path``, which is additionally
+    a percent-ENCODED URI (space -> %20, literal % -> %25 — e.g. a
+    timestamp identity partition dir "th=... 00%3A00" arrives as
+    "...%2000%253A00"). Decode once, then strip the scheme, so it
+    matches the RAW path form the manifests and delete files record.
+    url_decode is FORM decoding, which also turns a literal '+' into a
+    space — but '+' is a legal URI path char the encoder leaves alone
+    (plausible in identity partition dirs like tz=+00:00), so it is
+    pre-protected as %2B before decoding."""
+    return _norm_path(F.url_decode(F.regexp_replace(c, r"\+", "%2B")))
+
+
+def _seq_tag(files: list[dict]):
+    """Column tagging each row of a scan over ``files`` (manifest
+    entries with ``path``/``seq``) with its file's sequence number,
+    keyed on ``_metadata.file_path`` — a literal when they share one."""
+    seqs = {_norm_path_py(d["path"]): d["seq"] for d in files}
+    if len(set(seqs.values())) == 1:
+        return F.lit(next(iter(seqs.values()))).cast("long")
+    lookup = F.create_map(
+        *[
+            x
+            for p, s in seqs.items()
+            for x in (F.lit(p), F.lit(s).cast("long"))
+        ]
+    )
+    return lookup[_norm_meta_path(F.col("_metadata.file_path"))]
+
+
+def _file_side_table(
+    spark: SparkSession, data_entries: list[dict], identity: list
+) -> DataFrame:
+    """One row per data file, keyed by its normalized path
+    (``__ir_fp``): its data sequence number (``__ir_seq``) and its
+    identity partition values under the source field's CURRENT name
+    (the spec-field name is frozen at spec creation and goes stale once
+    the source column is renamed)."""
+    fields = [
+        T.StructField("__ir_fp", T.StringType(), False),
+        T.StructField("__ir_seq", T.LongType(), False),
+    ] + [
+        T.StructField(
+            src["name"], _spark_type_of(src["type"], T.StringType()), True
+        )
+        for _, src in identity
+    ]
+    rows = {}
+    for e in data_entries:
+        rec = e["data_file"]
+        fp = _norm_path_py(rec["file_path"])
+        rows[fp] = (fp, e["sequence_number"]) + tuple(
+            _ident_value(src["type"], rec["partition"].get(name))
+            for name, src in identity
+        )
+    return _local_frame(spark, list(rows.values()), T.StructType(fields))
+
+
+def _resolve_aliases(df: DataFrame, alias_of: dict) -> DataFrame:
+    """Rename old-era columns to their current names
+    (``schema.name-mapping.default``); where a merged scan carries both
+    the alias and the current name, the current one wins per row."""
+    for alias, cur in alias_of.items():
+        if alias not in df.columns:
+            continue
+        if cur in df.columns:
+            df = df.withColumn(cur, F.coalesce(F.col(cur), F.col(alias))).drop(
+                alias
+            )
+        else:
+            df = df.withColumnRenamed(alias, cur)
+    return df
 
 
 _VERSION_FILE_RE = re.compile(r"^v(\d+)\.(?:gz\.)?metadata\.json$")
@@ -3865,7 +4017,7 @@ def read_iceberg(
     number, position deletes (``content=1``, parquet of
     ``file_path``/``pos``) to data files with sequence at or below the
     delete's — matched on ``_metadata.row_index`` (the row's ordinal in
-    its file, exactly the spec's ``pos``) via a broadcast anti-join.
+    its file, exactly the spec's ``pos``).
 
     ``eq_filters`` (``{source_column: value}``) applies those equality
     predicates AND prunes manifest entries by partition value first:
@@ -3874,12 +4026,18 @@ def read_iceberg(
     different bucket — the pruning path an external engine gets from
     the exported spec.
 
+    A read is one plan: one parquet scan over every kept data file, one
+    scan per delete kind (position deletes; equality deletes per
+    key-column set), each applied by one left-anti join whose condition
+    carries the sequence scoping, and one broadcast per-file side table
+    (normalized path -> data sequence number and identity partition
+    values) built from Arrow, so no Python worker starts. The join
+    strategy for a delete kind — broadcast or shuffled hash — follows
+    its manifest-recorded size (``_BROADCAST_DELETE_MAX_*``).
+
     Deliberately shares NOTHING with RelativeTable's read path — it
     consumes only the exported spec artifacts, so a round-trip equality
-    against the source table checks the export end to end. Data files
-    are grouped by partition tuple and unioned; at production scale a
-    reader would instead push the constants into a per-file schema
-    mapping, but the gate here is correctness of the artifacts."""
+    against the source table checks the export end to end."""
     doc = _load_metadata(table_dir)
     if sum(x is not None for x in (ref, snapshot_id, as_of_ms)) > 1:
         raise ValueError("pass at most one of ref / snapshot_id / as_of_ms")
@@ -4024,34 +4182,6 @@ def read_iceberg(
             spark.conf.get("spark.sql.session.timeZone", None),
         )
 
-    # group data files by (identity tuple, applicable delete sets): the
-    # spec applies an equality delete to data files with sequence
-    # strictly below the delete's, a position delete to data files with
-    # sequence at or below the delete's
-    groups: dict[tuple, list[str]] = {}
-    for e in data_entries:
-        rec = e["data_file"]
-        applicable = tuple(
-            sorted(
-                (d["path"], tuple(d["cols"]))
-                for d in eq_deletes
-                if d["seq"] > e["sequence_number"]
-            )
-        )
-        pos_applicable = tuple(
-            sorted(
-                d["path"]
-                for d in pos_deletes
-                if d["seq"] >= e["sequence_number"]
-            )
-        )
-        key = (
-            tuple((name, rec["partition"].get(name)) for name, _ in identity),
-            applicable,
-            pos_applicable,
-        )
-        groups.setdefault(key, []).append(rec["file_path"])
-
     # schema.name-mapping.default (spec): old-era file columns resolve
     # to current fields by field-id. alias -> current name, for aliases
     # that differ from the current name of their id.
@@ -4071,251 +4201,157 @@ def read_iceberg(
             if alias != cur:
                 alias_of[alias] = cur
 
-    # per-path delete stats for the broadcast-vs-shuffle decision
-    pos_stats = {d["path"]: (d["rows"], d["bytes"]) for d in pos_deletes}
-    eq_stats = {d["path"]: (d["rows"], d["bytes"]) for d in eq_deletes}
+    internal = ["__ir_fp", "__ir_pos"] if _with_positions else []
+    if not data_entries:
+        fields = [
+            T.StructField(
+                f["name"],
+                _spark_type_of(f["type"], default=T.StringType()),
+                not f["required"],
+            )
+            for f in schema["fields"]
+        ]
+        if _with_positions:
+            fields += [
+                T.StructField("__ir_fp", T.StringType(), False),
+                T.StructField("__ir_pos", T.LongType(), False),
+            ]
+        return _local_frame(spark, [], T.StructType(fields))
 
-    def _anti_join(left, dkeys, on, paths, stats):
-        rows = sum(stats[p][0] for p in paths)
-        nbytes = sum(stats[p][1] for p in paths)
+    # ONE plan per read. The spec's scan-planning rule applies a delete
+    # per data FILE by sequence number — an equality delete to files
+    # with a strictly smaller data sequence, a position delete to files
+    # at or below its own — and that rule is a join condition. So every
+    # kept data file is read in one scan, each delete kind in one scan
+    # tagged with its files' sequence numbers (equality deletes: one
+    # per key-column set), and each kind applies by one left-anti join
+    # whose condition carries the scoping. Per-file facts the data scan
+    # cannot see — the data sequence number and the identity partition
+    # values, which are absent from the files — attach through one
+    # broadcast side table keyed by the normalized path. Deletes that
+    # scope no kept file are never read; a kind whose deletes all scope
+    # every kept file needs no sequence condition, and with no such
+    # condition and no identity partition the side table is left out.
+    seqs = [e["sequence_number"] for e in data_entries]
+    lo, hi = min(seqs), max(seqs)
+    live_pos = [d for d in pos_deletes if d["seq"] >= lo]
+    pos_scoped = any(d["seq"] < hi for d in live_pos)
+    eq_sets: dict[tuple, list[dict]] = {}
+    for d in eq_deletes:
+        if d["seq"] > lo:
+            eq_sets.setdefault(tuple(d["cols"]), []).append(d)
+    eq_scoped = {
+        cols: any(d["seq"] <= hi for d in dels)
+        for cols, dels in eq_sets.items()
+    }
+    side = bool(identity) or pos_scoped or any(eq_scoped.values())
+
+    def _anti_join(left, dkeys, cond, dels):
+        # broadcast-vs-shuffle from the manifests' exact delete sizes
+        rows = sum(d["rows"] for d in dels)
+        nbytes = sum(d["bytes"] for d in dels)
         if rows <= _BROADCAST_DELETE_MAX_ROWS and nbytes <= _BROADCAST_DELETE_MAX_BYTES:
             dkeys = F.broadcast(dkeys)
         else:
             dkeys = dkeys.hint("shuffle_hash")
-        return left.join(dkeys, on=on, how="left_anti")
+        return left.join(dkeys, cond, "left_anti")
 
-    # scheme-insensitive path equality for position-delete matching:
-    # Spark's _metadata.file_path is a URI (file:///…) while delete
-    # files may record plain paths (or vice versa) — normalize both to
-    # a single rooted form before joining
-    def _norm_path(c):
-        return F.concat(
-            F.lit("/"),
-            F.regexp_replace(c, r"^([A-Za-z][A-Za-z0-9+.\-]*:)?/*", ""),
+    # ALWAYS merge file schemas: add-only evolution mixes eras in one
+    # scan, and a non-merged read samples an arbitrary file's footer —
+    # an added column would vanish, nondeterministically by listing
+    # order
+    data = spark.read.option("mergeSchema", "true").parquet(
+        *[e["data_file"]["file_path"] for e in data_entries]
+    )
+    # provenance is captured at scan time (before any rename):
+    # _metadata.row_index is the row's ordinal within its file — exactly
+    # the spec's `pos` — so a position delete is an anti-join on
+    # (file, pos); __ir_fp also keys the side table
+    prov = []
+    if side or live_pos or _with_positions:
+        prov.append(_norm_meta_path(F.col("_metadata.file_path")).alias("__ir_fp"))
+    if live_pos or _with_positions:
+        prov.append(F.col("_metadata.row_index").alias("__ir_pos"))
+    if prov:
+        data = data.select("*", *prov)
+    data = _resolve_aliases(data, alias_of)
+    if side:
+        # identity partition columns are restored BEFORE equality
+        # deletes apply — a delete keyed on a partition column is legal
+        # and must resolve
+        for _, src in identity:
+            if src["name"] in data.columns:
+                data = data.drop(src["name"])
+        data = data.join(
+            F.broadcast(_file_side_table(spark, data_entries, identity)),
+            "__ir_fp",
+            "left",
         )
 
-    def _norm_meta_path(c):
-        # _metadata.file_path is additionally a percent-ENCODED URI
-        # (space -> %20, literal % -> %25 — e.g. a timestamp identity
-        # partition dir "th=... 00%3A00" arrives as "...%2000%253A00").
-        # Decode once, then strip the scheme, so it matches the RAW
-        # path form the manifests and delete files record. url_decode
-        # is FORM decoding, which also turns a literal '+' into a
-        # space — but '+' is a legal URI path char the encoder leaves
-        # alone (plausible in identity partition dirs like tz=+00:00),
-        # so pre-protect it as %2B before decoding.
-        return _norm_path(F.url_decode(F.regexp_replace(c, r"\+", "%2B")))
-
-    # round 11 (guide §5/§6): fan the read by DELETE CLASS, not by
-    # partition tuple. The old loop issued one spark.read per group key
-    # (identity tuple x delete sets) — a py4j + footer-reading round
-    # trip per partition tuple (a41's 26-group export spent 2.4s of its
-    # 3.1 in those calls). Groups sharing (applicable, pos_applicable)
-    # now read in ONE call, and identity partition columns are restored
-    # PER FILE through a broadcast (normalized path -> partition values)
-    # map join — the "per-file schema mapping" the docstring names as
-    # the production shape. Delete scoping is unchanged: it was already
-    # keyed only by the class.
-    classes: dict[tuple, list] = {}
-    ident_of: dict[str, tuple] = {}
-    for (key, applicable, pos_applicable), paths in groups.items():
-        classes.setdefault((applicable, pos_applicable), []).extend(paths)
-        for p in paths:
-            ident_of[p] = key
-
-    def _norm_path_py(p: str) -> str:
-        # Python twin of _norm_path — same regex, so the map join keys
-        # and the scan-time _metadata.file_path normalize identically
-        return "/" + re.sub(r"^([A-Za-z][A-Za-z0-9+.\-]*:)?/*", "", p)
-
-    def _ident_value(src_field, raw):
-        tname = (
-            src_field["type"]
-            if isinstance(src_field["type"], str)
-            else "string"
+    if live_pos:
+        # no .distinct(): anti-join is set semantics, so duplicate
+        # (file, pos) rows (the spec allows re-deletion) are harmless,
+        # and a distinct would cost an extra Exchange of the delete set
+        # in the shuffle path. The schema is the spec's fixed one, so
+        # no footer is sampled.
+        scan = spark.read.schema("file_path string, pos long").parquet(
+            *[d["path"] for d in live_pos]
         )
-        val = raw
-        if raw is not None and tname == "date":
-            # spec partition value is days since epoch
-            val = date.fromordinal(_EPOCH.toordinal() + int(raw))
-        elif raw is not None and tname in ("timestamptz", "timestamp"):
-            # spec partition value is micros since epoch
-            from datetime import timedelta
-
-            val = datetime(1970, 1, 1) + timedelta(microseconds=int(raw))
-        elif raw is not None:
-            # createDataFrame's schema verification is STRICTER than a
-            # SQL cast: the restore frame raises TypeError when the
-            # Python value doesn't exactly match the Spark type (int
-            # into the StringType fallback for uuid/fixed, int into
-            # decimal/double, str into long). Coerce to the exact
-            # Python type the field expects — the same value the old
-            # per-group F.lit(raw).cast(dt) path produced.
-            dt = _spark_type_of(tname, default=T.StringType())
-            if isinstance(dt, T.StringType):
-                if not isinstance(val, str):
-                    val = str(val)
-            elif isinstance(dt, T.DecimalType):
-                from decimal import Decimal
-
-                if not isinstance(val, Decimal):
-                    val = Decimal(str(val))
-            elif isinstance(dt, (T.DoubleType, T.FloatType)):
-                if isinstance(val, int) and not isinstance(val, bool):
-                    val = float(val)
-            elif isinstance(dt, (T.LongType, T.IntegerType)):
-                if isinstance(val, str):
-                    val = int(val)
-        return val
-
-    out: DataFrame | None = None
-    for (applicable, pos_applicable), paths in classes.items():
-        # ALWAYS merge file schemas: even without renames, add-only
-        # evolution mixes eras in one class and a non-merged read
-        # samples an arbitrary file's footer — the added column would
-        # vanish or the later union would fail, nondeterministically by
-        # listing order
-        part = spark.read.option("mergeSchema", "true").parquet(*paths)
-        if pos_applicable or _with_positions or identity:
-            # capture provenance at scan time (before any rename):
-            # _metadata.row_index is the row's ordinal within its file —
-            # exactly the spec's `pos` — so a position delete becomes an
-            # anti-join on (file, pos): a map-side broadcast probe while
-            # the delete set is small, a shuffled hash join once the
-            # manifests say it is not (_anti_join above). __ir_fp also
-            # keys the per-file identity-restore map join below.
-            part = part.select(
-                "*",
-                _norm_meta_path(F.col("_metadata.file_path")).alias("__ir_fp"),
-                F.col("_metadata.row_index").alias("__ir_pos"),
-            )
-        for alias, cur in alias_of.items():
-            if alias not in part.columns:
-                continue
-            if cur in part.columns:
-                part = part.withColumn(
-                    cur, F.coalesce(F.col(cur), F.col(alias))
-                ).drop(alias)
-            else:
-                part = part.withColumnRenamed(alias, cur)
-        # identity partition columns are absent from the data files and
-        # must be restored BEFORE equality deletes apply — a delete
-        # keyed on a partition column is legal and must resolve. The
-        # restored column takes the source field's CURRENT name (the
-        # spec-field name is frozen at spec creation and goes stale if
-        # the source column is later renamed). Values attach per FILE
-        # via the broadcast map keyed on the normalized path.
-        if identity:
-            ifields = [T.StructField("__ir_fp", T.StringType(), False)] + [
-                T.StructField(
-                    src_field["name"],
-                    _spark_type_of(
-                        src_field["type"]
-                        if isinstance(src_field["type"], str)
-                        else "string",
-                        default=T.StringType(),
-                    ),
-                    True,
-                )
-                for _, src_field in identity
-            ]
-            irows = [
-                tuple(
-                    [_norm_path_py(p)]
-                    + [
-                        _ident_value(src_field, raw)
-                        for (_, src_field), (_, raw) in zip(
-                            identity, ident_of[p]
-                        )
-                    ]
-                )
-                for p in paths
-            ]
-            for _, src_field in identity:
-                if src_field["name"] in part.columns:
-                    part = part.drop(src_field["name"])
-            part = part.join(
-                F.broadcast(
-                    spark.createDataFrame(irows, T.StructType(ifields))
-                ),
-                "__ir_fp",
-                "left",
-            )
-        if pos_applicable:
-            # no .distinct(): anti-join is set semantics, so duplicate
-            # (file, pos) rows (the spec allows re-deletion) are
-            # harmless, and a distinct would cost an extra Exchange of
-            # the delete set in the shuffle path
-            dkeys = spark.read.parquet(*pos_applicable).select(
-                _norm_path(F.col("file_path")).alias("__ir_fp"),
-                F.col("pos").cast("long").alias("__ir_pos"),
-            )
-            part = _anti_join(
-                part,
-                dkeys,
-                ["__ir_fp", "__ir_pos"],
-                pos_applicable,
-                pos_stats,
-            )
-            if not _with_positions:
-                part = part.drop("__ir_fp", "__ir_pos")
-        # normalize the group to the CURRENT schema BEFORE equality
-        # deletes apply: fields no file in this group carries (added
-        # after these files were written) read as typed NULL — the
-        # spec's add-column rule, and a delete keyed on such a column
-        # correctly matches nothing here (NULL never equals) — while
-        # columns outside the current schema (dropped fields still
-        # present in old files) fall away
-        part = part.select(
-            *[
-                F.col(f["name"])
-                if f["name"] in part.columns
-                else F.lit(None)
-                .cast(_spark_type_of(f["type"], default=T.StringType()))
-                .alias(f["name"])
-                for f in schema["fields"]
-            ],
-            *(["__ir_fp", "__ir_pos"] if _with_positions else []),
+        dkeys = [
+            _norm_path(F.col("file_path")).alias("__ir_dfp"),
+            F.col("pos").alias("__ir_dpos"),
+        ]
+        cond = (F.col("__ir_fp") == F.col("__ir_dfp")) & (
+            F.col("__ir_pos") == F.col("__ir_dpos")
         )
-        for dpath, dcols in applicable:
-            # delete files record key columns by the NAME current at
-            # delete time; resolve pre-rename names through the mapping
-            dk = spark.read.parquet(dpath)
-            for alias, cur in alias_of.items():
-                if alias in dk.columns and cur not in dk.columns:
-                    dk = dk.withColumnRenamed(alias, cur)
-            dkeys = dk.select(*dcols)
-            part = _anti_join(part, dkeys, list(dcols), [dpath], eq_stats)
-        out = part if out is None else out.unionByName(part)
-    if out is None:
-        struct = T.StructType(
-            [
-                T.StructField(
-                    f["name"],
-                    _spark_type_of(f["type"], default=T.StringType()),
-                    not f["required"],
-                )
-                for f in schema["fields"]
-            ]
-            + (
-                [
-                    T.StructField("__ir_fp", T.StringType(), False),
-                    T.StructField("__ir_pos", T.LongType(), False),
-                ]
-                if _with_positions
-                else []
-            )
+        if pos_scoped:
+            dkeys.append(_seq_tag(live_pos).alias("__ir_dseq"))
+            cond = cond & (F.col("__ir_dseq") >= F.col("__ir_seq"))
+        data = _anti_join(data, scan.select(*dkeys), cond, live_pos)
+
+    # normalize to the CURRENT schema BEFORE equality deletes apply:
+    # fields no file carries (added after the files were written) read
+    # as typed NULL — the spec's add-column rule, and a delete keyed on
+    # such a column correctly matches nothing (NULL never equals) —
+    # while columns outside the current schema (dropped fields still
+    # present in old files) fall away
+    data = data.select(
+        *[
+            F.col(f["name"])
+            if f["name"] in data.columns
+            else F.lit(None)
+            .cast(_spark_type_of(f["type"], default=T.StringType()))
+            .alias(f["name"])
+            for f in schema["fields"]
+        ],
+        *[c for c in ("__ir_fp", "__ir_pos", "__ir_seq") if c in data.columns],
+    )
+    for cols, dels in eq_sets.items():
+        scan = spark.read.option("mergeSchema", "true").parquet(
+            *[d["path"] for d in dels]
         )
-        out = spark.createDataFrame([], struct)
+        if eq_scoped[cols]:
+            # tagged on the raw scan, where _metadata still resolves
+            scan = scan.select("*", _seq_tag(dels).alias("__ir_dseq"))
+        # delete files record key columns by the NAME current at delete
+        # time; resolve pre-rename names through the mapping
+        scan = _resolve_aliases(scan, alias_of)
+        keys = [f"__ir_k{i}" for i in range(len(cols))]
+        dkeys = [F.col(c).alias(k) for c, k in zip(cols, keys)]
+        conds = [F.col(c) == F.col(k) for c, k in zip(cols, keys)]
+        if eq_scoped[cols]:
+            dkeys.append(F.col("__ir_dseq"))
+            conds.append(F.col("__ir_dseq") > F.col("__ir_seq"))
+        cond = conds[0]
+        for c in conds[1:]:
+            cond = cond & c
+        data = _anti_join(data, scan.select(*dkeys), cond, dels)
+
     if eq_filters:
         for col, v in eq_filters.items():
-            if col in out.columns:
-                out = out.filter(F.col(col) == F.lit(v))
-    # every group was normalized to the current schema above
-    return out.select(
-        *[f["name"] for f in schema["fields"]],
-        *(["__ir_fp", "__ir_pos"] if _with_positions else []),
-    )
+            if col in data.columns:
+                data = data.filter(F.col(col) == F.lit(v))
+    return data.select(*[f["name"] for f in schema["fields"]], *internal)
 
 
 # ---------------------------------------------------------------------------

@@ -189,6 +189,10 @@ class RelativeBatchReader(DataSourceReader):
         ]
 
     def read(self, partition: FilePartition):
+        # when partitions() plans no file (filters pruned them all),
+        # Spark still runs one task and hands it None: it reads nothing
+        if partition is None:
+            return
         yield from _read_file_partition(
             self.io, self.schema, partition, self._cur_ids
         )

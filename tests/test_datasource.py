@@ -70,6 +70,22 @@ def test_partitioned_read_attaches_partition_column(spark, wh):
     assert rows == {(1, "x"), (2, "y"), (3, "x")}
 
 
+def test_read_pruning_every_file_returns_no_rows(spark, wh):
+    """A filter on an absent partition value prunes every file, so
+    partitions() plans nothing and Spark hands read() None: the read is
+    empty, not a crash."""
+    _make_table(spark, wh, name="pz", partition_by=["kind"])
+    df = (
+        spark.read.format("relative")
+        .option("warehouse", wh)
+        .option("table", "ns.pz")
+        .load()
+        .where(F.col("kind") == "absent")
+    )
+    assert df.count() == 0
+    assert df.collect() == []
+
+
 def test_push_filters_prune_files(spark, wh):
     """Two appends with disjoint id ranges -> a pushed id filter must plan
     strictly fewer file partitions, and results stay exact."""

@@ -856,6 +856,169 @@ def test_equality_delete_large_set_degrades_to_shuffled_hash(
 
 
 # ---------------------------------------------------------------------------
+# one plan per read: one data scan, one scan per delete kind, sequence
+# scoping in the anti-join condition
+# ---------------------------------------------------------------------------
+
+def _plan_file_scans(df) -> list[set]:
+    """Input files of every parquet scan in ``df``'s physical plan, as
+    normalized paths."""
+    from urllib.parse import unquote
+
+    out = []
+    stack = [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+        if node.nodeName().startswith("Scan parquet"):
+            files = node.relation().location().inputFiles()
+            out.append(
+                {iceberg_export._norm_path_py(unquote(f)) for f in files}
+            )
+    return out
+
+
+def _head_walk(dest) -> tuple[list, list, list]:
+    """(data entries, equality deletes, position deletes) of the head
+    snapshot."""
+    doc = iceberg_export._load_metadata(dest)
+    snap = next(
+        s for s in doc["snapshots"]
+        if s["snapshot-id"] == doc["current-snapshot-id"]
+    )
+    with open(snap["manifest-list"], "rb") as fh:
+        _, _, mls = avro_ocf.read_ocf(fh.read())
+    return iceberg_export._walk_manifests(mls)
+
+
+def _live_files(dest) -> tuple[set, dict]:
+    """Normalized paths of the head snapshot's data files, and its
+    delete files grouped by kind: "pos" or the equality key ids."""
+    data, eq, pos = _head_walk(dest)
+    norm = iceberg_export._norm_path_py
+    kinds: dict = {}
+    for d in pos:
+        kinds.setdefault("pos", set()).add(norm(d["path"]))
+    for d in eq:
+        kinds.setdefault(tuple(d["ids"]), set()).add(norm(d["path"]))
+    return {norm(e["data_file"]["file_path"]) for e in data}, kinds
+
+
+def test_read_iceberg_is_one_plan_with_sequence_scoped_anti_joins(
+    spark, sf_dir
+):
+    """A mirror whose data files see different delete sets (an append
+    after an equality delete, position deletes, a merge, an equality
+    delete keyed on the identity partition column) reads as ONE plan:
+    one parquet scan over every data file, at most one scan per delete
+    kind and key set, and no pickled-RDD relation (no Python worker).
+    The spec's scoping holds inside that plan: a key re-appended after
+    its equality delete survives (strict <), a position delete does not
+    touch a file with a higher sequence (<=), and an equality delete
+    keyed on the partition column applies through the restored
+    column."""
+    base = spark.range(40).select(
+        F.col("id"),
+        (F.col("id") % 4).cast("int").alias("p"),
+        F.lit("base").alias("v"),
+    )
+    table = _table(spark, base, partition_by=["p"])
+    dest = tempfile.mkdtemp(prefix="iceexp_oneplan_")
+    iceberg_export.export_iceberg(table, dest)
+    schema = "id long, p int, v string"
+
+    iceberg_export.delete_where_iceberg(spark, dest, F.col("id") == 5, ["id"])
+    iceberg_export.append_iceberg(
+        spark, dest, spark.createDataFrame([(5, 1, "back")], schema)
+    )
+    iceberg_export.delete_positions_iceberg(spark, dest, F.col("id") == 6)
+    # a position delete pinned below the re-appended file's sequence:
+    # it names the file's row 0 but must not touch it
+    back_file = next(
+        e["data_file"]["file_path"]
+        for e in _head_walk(dest)[0]
+        if e["sequence_number"] == 3
+    )
+    iceberg_export.write_position_deletes(dest, {back_file: [0]}, sequence=2)
+    iceberg_export.merge_iceberg(
+        spark,
+        dest,
+        spark.createDataFrame([(8, 0, "merged"), (100, 0, "new")], schema),
+        ["id"],
+    )
+    iceberg_export.delete_where_iceberg(spark, dest, F.col("p") == 3, ["p"])
+    iceberg_export.append_iceberg(
+        spark, dest, spark.createDataFrame([(103, 3, "after")], schema)
+    )
+
+    df = iceberg_export.read_iceberg(spark, dest)
+    data_files, kinds = _live_files(dest)
+    assert len(kinds) == 3  # position, equality on id, equality on p
+    scans = _plan_file_scans(df)
+    data_scans = [s for s in scans if s & data_files]
+    assert data_scans == [data_files]
+    delete_scans = [s for s in scans if not s & data_files]
+    assert len(scans) == 1 + len(delete_scans)
+    assert len(delete_scans) <= len(kinds)
+    for s in delete_scans:
+        assert sum(s <= files for files in kinds.values()) == 1
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+
+    got = sorted((r.id, r.p, r.v) for r in df.collect())
+    want = sorted(
+        [
+            (i, i % 4, "base")
+            for i in range(40)
+            if i not in (5, 6, 8) and i % 4 != 3
+        ]
+        + [(5, 1, "back"), (8, 0, "merged"), (100, 0, "new"), (103, 3, "after")]
+    )
+    assert got == want
+    # the partition-pruned read applies the same scoping
+    p1 = iceberg_export.read_iceberg(spark, dest, eq_filters={"p": 1})
+    assert sorted(r.id for r in p1.collect()) == sorted(
+        i for i, p, _ in want if p == 1
+    )
+
+
+def test_ident_value_decodes_manifest_partition_values():
+    """Identity partition values restore to the column's Python type,
+    including the bytes an external writer's avro manifest carries for
+    uuid, fixed, binary and decimal."""
+    import uuid
+    from datetime import date, datetime
+    from decimal import Decimal
+
+    iv = iceberg_export._ident_value
+    u = uuid.UUID("12345678-1234-5678-1234-567812345678")
+    assert iv("uuid", u.bytes) == str(u)
+    assert iv("uuid", str(u)) == str(u)
+    assert iv("fixed[3]", b"\x00\xff\x10") == b"\x00\xff\x10"
+    assert iv("binary", b"\x01\x02") == b"\x01\x02"
+    # decimal: unscaled two's-complement big-endian at the type's scale
+    dec = (12345).to_bytes(2, "big", signed=True)
+    assert iv("decimal(9, 2)", dec) == Decimal("123.45")
+    assert iv("decimal(9, 2)", b"\xfb") == Decimal("-0.05")
+    big = 10**37 + 1  # past float and default-context precision
+    assert iv("decimal(38, 10)", big.to_bytes(16, "big", signed=True)) == Decimal(
+        "1" + "0" * 27 + ".0000000001"
+    )
+    assert iv("decimal(9, 2)", "1.50") == Decimal("1.50")
+    assert iv("date", 19723) == date(2024, 1, 1)
+    assert iv("timestamptz", 86_400_000_001) == datetime(1970, 1, 2, 0, 0, 0, 1)
+    assert iv("long", "42") == 42
+    assert iv("double", 3) == 3.0
+    assert iv("string", 7) == "7"
+    assert iv("int", None) is None
+    # a restored fixed column is binary-typed in Spark
+    from pyspark.sql import types as T
+
+    assert iceberg_export._spark_type_of("fixed[16]") == T.BinaryType()
+
+
+# ---------------------------------------------------------------------------
 # append_iceberg — incremental commits onto an exported table
 # ---------------------------------------------------------------------------
 
