@@ -33,12 +33,14 @@ against one chunk landing in a noisy window on this VM (documented
 fresh-session re-times). After the chunked run the parent compares
 every query against its previous BENCH_FULL.json record; any query
 slower than $SPARK_GRAFT_BENCH_OUTLIER_RATIO (default 2.0) times its
-prior record — or, since round 12, FASTER than the inverse ratio
+prior record — or, since round 12, FASTER than 1 / that ratio
 (lucky-fast chunks used to ratchet records downward on noise, the
 round-11 verdict's item 7) — is re-timed once more in ONE extra fresh
-subprocess, and the recorded value is the RE-TIMED one (the dedicated
-quiet-window measurement), not the min of mixed-window runs. A genuine
-regression or speedup stays visible because the re-time reproduces it.
+subprocess. A slow outlier records min(chunk, re-time), so a re-time
+that itself lands in a noisy window cannot inflate an honest chunk
+value; a fast outlier records the RE-TIMED value, so a lucky-fast chunk
+does not lower the record. A genuine regression or speedup stays
+visible because the re-time reproduces it.
 """
 
 from __future__ import annotations
@@ -174,10 +176,10 @@ def main() -> None:
 
         # Symmetric outlier re-time pass (see module docstring): one
         # extra fresh subprocess for every query that came back >RATIO x
-        # its prior BENCH_FULL record OR <1/RATIO' x it (RATIO' fixed at
-        # 2.0 — i.e. <0.5x of record), and the RE-TIMED value is kept:
-        # the dedicated subprocess is the quiet-window measurement, so
-        # neither a noisy spike nor a lucky-fast chunk enters the record.
+        # its prior BENCH_FULL record OR <1/RATIO x it. A slow outlier
+        # keeps min(chunk, re-time): one noisy re-time must not inflate
+        # an honest chunk value. A fast outlier takes the re-timed
+        # value, so a lucky-fast chunk does not enter the record.
         ratio = float(os.environ.get("SPARK_GRAFT_BENCH_OUTLIER_RATIO", "2.0"))
         prev_path = REPO / "BENCH_FULL.json"
         prev: dict[str, float] = {}
@@ -191,12 +193,14 @@ def main() -> None:
             for n, t in times.items()
             if n in prev
             and prev[n] > 0
-            and (t > ratio * prev[n] or t < 0.5 * prev[n])
+            and (t > ratio * prev[n] or t < prev[n] / ratio)
         )
         if outliers:
             print(f"re-timing {len(outliers)} outliers: {outliers}", file=sys.stderr)
             got = _run_chunk(outliers, "outlier re-time")
             for n, t in (got or {}).items():
+                if times[n] > ratio * prev[n]:
+                    t = min(times[n], t)
                 if t != times[n]:
                     print(
                         f"outlier {n}: {times[n]} -> {t} (prev {prev[n]})",

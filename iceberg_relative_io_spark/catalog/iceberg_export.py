@@ -3540,12 +3540,14 @@ _DECIMAL_TYPE_RE = re.compile(r"decimal\(\s*(\d+)\s*,\s*(\d+)\s*\)")
 
 
 def _spark_type_of(tname, default: T.DataType | None = None) -> T.DataType:
-    """Spark type for an Iceberg primitive type string, INCLUDING the
-    parametrized ``decimal(p, s)`` (a bare dict lookup silently degraded
-    decimal columns to the caller's string fallback — wrong schema on
-    the empty-read / added-column / stream-source paths). ``default``
-    is returned for unknown/nested types where the caller tolerates
-    them; ``None`` raises instead."""
+    """Spark type for an Iceberg type — the inverse of ``_iceberg_type``:
+    primitive strings INCLUDING the parametrized ``decimal(p, s)`` (a
+    bare dict lookup silently degraded decimal columns to the caller's
+    string fallback — wrong schema on the empty-read / added-column /
+    stream-source paths), and ``struct`` / ``list`` / ``map`` with the
+    required flags mapped back to nullability. ``fixed[N]`` reads as
+    binary. ``default`` is returned for other types where the caller
+    tolerates them; ``None`` raises instead."""
     if isinstance(tname, str):
         dt = _ICEBERG_TO_SPARK.get(tname)
         if dt is not None:
@@ -3555,6 +3557,30 @@ def _spark_type_of(tname, default: T.DataType | None = None) -> T.DataType:
             return T.DecimalType(int(m.group(1)), int(m.group(2)))
         if tname.startswith("fixed["):
             return T.BinaryType()
+    elif isinstance(tname, dict):
+        kind = tname.get("type")
+        if kind == "list":
+            return T.ArrayType(
+                _spark_type_of(tname["element"], default),
+                not tname.get("element-required", False),
+            )
+        if kind == "map":
+            return T.MapType(
+                _spark_type_of(tname["key"], default),
+                _spark_type_of(tname["value"], default),
+                not tname.get("value-required", False),
+            )
+        if kind == "struct":
+            return T.StructType(
+                [
+                    T.StructField(
+                        f["name"],
+                        _spark_type_of(f["type"], default),
+                        not f.get("required", False),
+                    )
+                    for f in tname["fields"]
+                ]
+            )
     if default is not None:
         return default
     raise ValueError(f"unsupported column type {tname!r}")
@@ -3699,19 +3725,30 @@ def _file_side_table(
     return _local_frame(spark, list(rows.values()), T.StructType(fields))
 
 
+def _scan_schema(fields: list[dict], alias_of: dict) -> T.StructType:
+    """Parquet read schema for ``fields`` (schema-JSON fields) from
+    table metadata: each field under its current name and under every
+    name-mapping alias of it (``alias_of``: alias -> current name), so
+    ``_resolve_aliases`` can resolve old-era files. A name no file
+    carries reads as NULL."""
+    out = []
+    for f in fields:
+        dt = _spark_type_of(f["type"])
+        names = [f["name"]] + [a for a, cur in alias_of.items() if cur == f["name"]]
+        out += [T.StructField(n, dt, True) for n in names]
+    return T.StructType(out)
+
+
 def _resolve_aliases(df: DataFrame, alias_of: dict) -> DataFrame:
-    """Rename old-era columns to their current names
-    (``schema.name-mapping.default``); where a merged scan carries both
-    the alias and the current name, the current one wins per row."""
+    """Fold old-era columns into their current names
+    (``schema.name-mapping.default``) in a scan read with
+    ``_scan_schema``, which carries each alias next to its current
+    name: the current one wins per row."""
     for alias, cur in alias_of.items():
-        if alias not in df.columns:
-            continue
-        if cur in df.columns:
+        if alias in df.columns:
             df = df.withColumn(cur, F.coalesce(F.col(cur), F.col(alias))).drop(
                 alias
             )
-        else:
-            df = df.withColumnRenamed(alias, cur)
     return df
 
 
@@ -4026,6 +4063,14 @@ def read_iceberg(
     different bucket — the pruning path an external engine gets from
     the exported spec.
 
+    Scans take their schema from the table metadata, never from file
+    footers: the data scan reads the resolved era's fields plus every
+    ``schema.name-mapping.default`` alias of them, an equality-delete
+    scan its key columns plus their aliases. Building the read samples
+    no footer; the only job it can start is Spark's file listing of a
+    scan over more than 32 paths, sized to the cores by
+    ``session.ensure_runtime_confs``.
+
     A read is one plan: one parquet scan over every kept data file, one
     scan per delete kind (position deletes; equality deletes per
     key-column set), each applied by one left-anti join whose condition
@@ -4183,9 +4228,11 @@ def read_iceberg(
         )
 
     # schema.name-mapping.default (spec): old-era file columns resolve
-    # to current fields by field-id. alias -> current name, for aliases
-    # that differ from the current name of their id.
+    # to current fields by field-id. alias -> current name; Spark
+    # matches parquet columns case-insensitively, so a name is taken
+    # once and a current field's name is never an alias.
     id_to_current = {f["id"]: f["name"] for f in schema["fields"]}
+    taken = {n.lower() for n in id_to_current.values()}
     alias_of: dict[str, str] = {}
     try:
         mapping = json.loads(
@@ -4198,7 +4245,8 @@ def read_iceberg(
         if cur is None:
             continue
         for alias in m.get("names", []):
-            if alias != cur:
+            if alias.lower() not in taken:
+                taken.add(alias.lower())
                 alias_of[alias] = cur
 
     internal = ["__ir_fp", "__ir_pos"] if _with_positions else []
@@ -4256,11 +4304,13 @@ def read_iceberg(
             dkeys = dkeys.hint("shuffle_hash")
         return left.join(dkeys, cond, "left_anti")
 
-    # ALWAYS merge file schemas: add-only evolution mixes eras in one
-    # scan, and a non-merged read samples an arbitrary file's footer —
-    # an added column would vanish, nondeterministically by listing
-    # order
-    data = spark.read.option("mergeSchema", "true").parquet(
+    # the scan's schema is the metadata's, never a footer's, so no job
+    # samples or merges footers: a name-mapping alias reads old-era
+    # files, columns outside the schema (dropped fields still in old
+    # files) are never read, and a field no file carries (added after
+    # the files were written) reads as typed NULL — the spec's
+    # add-column rule, so a delete keyed on it matches nothing
+    data = spark.read.schema(_scan_schema(schema["fields"], alias_of)).parquet(
         *[e["data_file"]["file_path"] for e in data_entries]
     )
     # provenance is captured at scan time (before any rename):
@@ -4309,27 +4359,10 @@ def read_iceberg(
             cond = cond & (F.col("__ir_dseq") >= F.col("__ir_seq"))
         data = _anti_join(data, scan.select(*dkeys), cond, live_pos)
 
-    # normalize to the CURRENT schema BEFORE equality deletes apply:
-    # fields no file carries (added after the files were written) read
-    # as typed NULL — the spec's add-column rule, and a delete keyed on
-    # such a column correctly matches nothing (NULL never equals) —
-    # while columns outside the current schema (dropped fields still
-    # present in old files) fall away
-    data = data.select(
-        *[
-            F.col(f["name"])
-            if f["name"] in data.columns
-            else F.lit(None)
-            .cast(_spark_type_of(f["type"], default=T.StringType()))
-            .alias(f["name"])
-            for f in schema["fields"]
-        ],
-        *[c for c in ("__ir_fp", "__ir_pos", "__ir_seq") if c in data.columns],
-    )
     for cols, dels in eq_sets.items():
-        scan = spark.read.option("mergeSchema", "true").parquet(
-            *[d["path"] for d in dels]
-        )
+        scan = spark.read.schema(
+            _scan_schema([fields_by_name[c] for c in cols], alias_of)
+        ).parquet(*[d["path"] for d in dels])
         if eq_scoped[cols]:
             # tagged on the raw scan, where _metadata still resolves
             scan = scan.select("*", _seq_tag(dels).alias("__ir_dseq"))

@@ -10,6 +10,15 @@ real target — a many-executor cluster reading ~100 TB:
 - ``nanosAsLong`` because the events fixture carries parquet
   TIMESTAMP(NANOS), which Spark's vectorized reader otherwise rejects;
   loaders convert the raw nanos to TimestampType (µs) on load.
+- File listing sized to the cores, not the file count. A scan of more
+  than ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+  paths lists them in a Spark job of min(paths, ``...parallelism``)
+  tasks, and every task deserializes the whole Hadoop configuration.
+  At the stock parallelism of 10000 that is one task per file (an
+  88-file mirror read lists in 88 tasks); while it is still stock,
+  ``ensure_runtime_confs`` sets it to the core count, as Spark's docs
+  advise ("to prevent file listing from generating too many tasks").
+  Listing stays distributed; a value someone set is left alone.
 """
 
 from __future__ import annotations
@@ -53,7 +62,8 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     session still has the stock 200 shuffle partitions (nobody tuned it),
     right-size to the local core count — AQE coalesces most exchanges
     anyway, but streaming state-store partitioning is fixed at plan time
-    and 200 state partitions on a laptop-scale box is pure overhead.
+    and 200 state partitions on a laptop-scale box is pure overhead. The
+    same rule sizes file listing (see the module docstring).
     """
     for k, v in _RUNTIME_CONFS.items():
         try:
@@ -63,11 +73,18 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
             # non-settable in this deployment: leave as-is
             pass
     try:
-        if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-            cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
-            spark.conf.set("spark.sql.shuffle.partitions", str(max(8, cores)))
-    except Exception:
-        pass
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
+    except ValueError:
+        return spark
+    for k, stock, v in (
+        ("spark.sql.shuffle.partitions", "200", max(8, cores)),
+        ("spark.sql.sources.parallelPartitionDiscovery.parallelism", "10000", cores),
+    ):
+        try:
+            if spark.conf.get(k, stock) == stock:
+                spark.conf.set(k, str(v))
+        except Exception:
+            pass
     return spark
 
 

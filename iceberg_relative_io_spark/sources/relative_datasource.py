@@ -261,6 +261,10 @@ def _read_file_partition(io, schema: StructType, partition: FilePartition, cur_i
     yield from out.to_batches()
 
 
+_NAN = float("nan")
+_FLOAT_SEG = {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}
+
+
 def _write_task_batches(io, base_dir: str, part_cols: list, iterator) -> list:
     """Executor-side hive-layout writer shared by the batch and stream
     sinks: split each Arrow batch by identity-partition value, write one
@@ -285,7 +289,9 @@ def _write_task_batches(io, base_dir: str, part_cols: list, iterator) -> list:
             continue
         tbl = pa.Table.from_batches([batch])
         combos = {
-            tuple(t)  # raw values: None must stay distinct, not "None"
+            # raw values: None must stay distinct, not "None"; every NaN
+            # is the one _NAN object, so NaN rows make one combo
+            tuple(_NAN if v != v else v for v in t)
             for t in zip(*[tbl.column(c).to_pylist() for c in part_cols])
         }
         _NULL_SEG = "__HIVE_DEFAULT_PARTITION__"  # Spark's hive sentinel
@@ -297,16 +303,26 @@ def _write_task_batches(io, base_dir: str, part_cols: list, iterator) -> list:
                     # NULL-mask rows — NULL partitions were silently
                     # LOST; null-test explicitly instead
                     eq = pc.is_null(tbl[c])
+                elif v is _NAN:
+                    eq = pc.fill_null(pc.is_nan(tbl[c]), False)
                 else:
+                    # typed equality: a string cast of the column and
+                    # str(v) disagree for bool, timestamp and whole
+                    # doubles ('true' vs 'True'), which lost those rows
                     eq = pc.fill_null(
-                        pc.equal(pc.cast(tbl[c], pa.string()), str(v)),
+                        pc.equal(tbl[c], pa.scalar(v, type=tbl[c].type)),
                         False,
                     )
                 mask = eq if mask is None else pc.and_(mask, eq)
             sub = tbl.filter(mask).drop(part_cols)
             if combo not in writers:
+                # Spark parses a double partition value with
+                # Double.parseDouble, which knows no 'nan' / 'inf'
                 seg_vals = [
-                    _NULL_SEG if v is None else str(v) for v in combo
+                    _NULL_SEG if v is None
+                    else _FLOAT_SEG.get(str(v), str(v)) if isinstance(v, float)
+                    else str(v)
+                    for v in combo
                 ]
                 segs = "/".join(
                     f"{c}={v}" for c, v in zip(part_cols, seg_vals)

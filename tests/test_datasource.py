@@ -3,6 +3,7 @@ relative-path format (the PySpark-native analogue of the reference's
 SparkCatalog plugin wiring, reference README.md:8-11)."""
 
 import tempfile
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -642,6 +643,59 @@ def test_dsv2_writer_keeps_null_partition_rows(spark, wh):
     # the native read path agrees
     t = RelativeTable(cat.load_table(("ns",), "np"))
     assert {(r.id, r.kind) for r in t.read(spark).collect()} == got
+
+
+@pytest.mark.parametrize(
+    "ddl, values",
+    [
+        ("p boolean", [True, False, True]),
+        (
+            "p timestamp",
+            [
+                datetime(2024, 1, 1, 0, 0, 0),
+                datetime(2024, 1, 1, 0, 0, 0),
+                datetime(2024, 5, 6, 7, 8, 9, 123456),
+            ],
+        ),
+        ("p double", [1.0, 2.0, 2.5, float("nan"), float("nan"), float("-inf")]),
+    ],
+    ids=["boolean", "timestamp", "double"],
+)
+def test_dsv2_writer_typed_partition_values_round_trip(spark, wh, ddl, values):
+    """The writer picks each partition's rows by typed equality. It
+    used to compare a string cast of the column with str(v), which
+    disagree for booleans ('true' / 'True'), timestamps and whole-valued
+    doubles ('1' / '1.0'), and those rows were silently dropped. NaN
+    rows, which equal nothing, make one partition, and NaN and infinite
+    partition values are written as Spark parses them. Values compare
+    as strings so NaN compares equal to itself."""
+    name = "tp_" + ddl.split()[1]
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(values)], f"id long, {ddl}"
+    )
+    cat = FsCatalog(wh)
+    if ("ns",) not in cat.list_namespaces():
+        cat.create_namespace(("ns",))
+    cat.create_table(("ns",), name, df.schema.jsonValue(), partition_by=["p"])
+    (
+        df.write.format("relative")
+        .option("warehouse", wh)
+        .option("table", f"ns.{name}")
+        .mode("append")
+        .save()
+    )
+    want = sorted((r.id, str(r.p)) for r in df.collect())
+    got = sorted(
+        (r.id, str(r.p))
+        for r in spark.read.format("relative")
+        .option("warehouse", wh)
+        .option("table", f"ns.{name}")
+        .load()
+        .collect()
+    )
+    assert got == want
+    t = RelativeTable(cat.load_table(("ns",), name))
+    assert sorted((r.id, str(r.p)) for r in t.read(spark).collect()) == want
 
 
 def test_stream_sink_dedup_scoped_to_checkpoint(spark, wh):

@@ -1018,6 +1018,158 @@ def test_ident_value_decodes_manifest_partition_values():
     assert iceberg_export._spark_type_of("fixed[16]") == T.BinaryType()
 
 
+def test_spark_type_of_inverts_iceberg_type():
+    """``_spark_type_of`` is the exact inverse of ``_iceberg_type`` for
+    every type the export emits, nested ones included, with required
+    flags mapped back to nullability; a type it never emits (other
+    than ``fixed[N]``, read as binary) raises naming it."""
+    from pyspark.sql import types as T
+
+    counter = iter(range(100, 1000))
+    for dt in [
+        T.BooleanType(), T.IntegerType(), T.LongType(), T.FloatType(),
+        T.DoubleType(), T.StringType(), T.BinaryType(), T.DateType(),
+        T.TimestampType(), T.TimestampNTZType(), T.DecimalType(12, 3),
+        T.ArrayType(T.LongType(), True),
+        T.ArrayType(T.StringType(), False),
+        T.MapType(T.StringType(), T.LongType(), True),
+        T.MapType(T.IntegerType(), T.DecimalType(5, 1), False),
+        T.StructType([
+            T.StructField("x", T.IntegerType(), True),
+            T.StructField("y", T.StringType(), False),
+            T.StructField(
+                "z",
+                T.ArrayType(
+                    T.StructType([T.StructField("w", T.DateType(), True)]),
+                    True,
+                ),
+                True,
+            ),
+        ]),
+    ]:
+        ice = iceberg_export._iceberg_type(dt, lambda: next(counter))
+        assert iceberg_export._spark_type_of(ice) == dt, dt
+    for bad in ("uuid", "time", {"type": "variant"}):
+        with pytest.raises(ValueError, match="unsupported column type"):
+            iceberg_export._spark_type_of(bad)
+    assert iceberg_export._spark_type_of("uuid", T.StringType()) == T.StringType()
+
+
+def test_read_iceberg_nested_types_round_trip(spark, sf_dir):
+    """Scans take their schema from table metadata, so nested columns
+    (list, map, struct) must map back from their Iceberg types: the
+    mirror reads the source's rows under the source's schema."""
+    src = spark.createDataFrame(
+        [
+            (1, [1, 2], {"a": 1}, (1, "x"), "p0"),
+            (2, [], {}, (None, "y"), "p0"),
+            (3, None, None, None, "p1"),
+            (4, [None, 5], {"b": None}, (4, None), "p1"),
+        ],
+        "id long, arr array<long>, m map<string,long>, "
+        "s struct<x:int,y:string>, part string",
+    )
+    table = _table(spark, src, partition_by=["part"])
+    dest, _ = _round_trip(spark, table)  # same rows
+    got = iceberg_export.read_iceberg(spark, dest)
+    assert got.schema == table.read(spark).select(*got.columns).schema
+
+
+def _jobs_started(spark, build):
+    """(result of ``build()``, task counts of the Spark jobs it started).
+    A marker job in a later group is waited for, so every job of the
+    build's group has reached the status tracker."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "construct only", False)
+    try:
+        out = build()
+        sc.setJobGroup(group + "-marker", "marker", False)
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 10
+    while not tracker.getJobIdsForGroup(group + "-marker"):
+        assert time.monotonic() < deadline
+        time.sleep(0.01)
+    tasks = [
+        sum(tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(j).stageIds)
+        for j in tracker.getJobIdsForGroup(group)
+    ]
+    return out, tasks
+
+
+def test_read_iceberg_plans_from_metadata(spark, sf_dir):
+    """A mirror with more than 32 live data files, an added column, a
+    renamed column (an alias in the name mapping) and equality deletes
+    keyed on the renamed column, one written under its old name. The
+    read takes every schema from metadata: building a partition-pruned
+    read starts no Spark job (no footer is sampled or merged), and an
+    unfiltered read starts only Spark's file listing, sized to the
+    cores rather than one task per file. Both return the model's rows."""
+    from iceberg_relative_io_spark.session import ensure_runtime_confs
+
+    ensure_runtime_confs(spark)
+    cores = int(
+        spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.parallelism")
+    )
+    schema = "id long, name string, p int"
+    first = spark.createDataFrame([(i, f"n{i % 16}", i % 8) for i in range(16)], schema)
+    table = _table(spark, first.coalesce(1), partition_by=["p"])
+    model = {i: (f"n{i % 16}", i % 8, None) for i in range(16)}
+    for b in range(1, 5):
+        rows = [(b * 100 + i, f"n{i}", i % 8) for i in range(16)]
+        table.append(spark.createDataFrame(rows, schema).coalesce(1))
+        model.update({r[0]: (r[1], r[2], None) for r in rows})
+    dest = tempfile.mkdtemp(prefix="iceexp_meta_")
+    iceberg_export.export_iceberg(table, dest)
+    # keyed on "name", which the rename below turns into an alias
+    iceberg_export.delete_where_iceberg(
+        spark, dest, F.col("name") == "n3", ["name"]
+    )
+    model = {k: v for k, v in model.items() if v[0] != "n3"}
+    iceberg_export.evolve_schema_iceberg(
+        dest, add={"extra": "long"}, rename={"name": "label"}
+    )
+    late = [(900, "n3", 3, 7), (901, "n5", 5, 8)]
+    iceberg_export.append_iceberg(
+        spark,
+        dest,
+        spark.createDataFrame(late, "id long, label string, p int, extra long"),
+    )
+    model.update({r[0]: r[1:] for r in late})
+    iceberg_export.delete_where_iceberg(
+        spark, dest, F.col("label") == "n5", ["label"]
+    )
+    model = {k: v for k, v in model.items() if v[0] != "n5"}
+
+    data_files, kinds = _live_files(dest)
+    assert len(data_files) > 32 and len(kinds) == 1
+    doc = iceberg_export._load_metadata(dest)
+    mapping = json.loads(doc["properties"]["schema.name-mapping.default"])
+    assert any(set(m["names"]) == {"name", "label"} for m in mapping)
+
+    df, tasks = _jobs_started(spark, lambda: iceberg_export.read_iceberg(spark, dest))
+    assert len(tasks) == 1 and tasks[0] <= cores, tasks
+    assert df.columns == ["id", "label", "p", "extra"]
+    assert sorted(map(tuple, df.collect())) == sorted(
+        (k, *v) for k, v in model.items()
+    )
+
+    p3, tasks = _jobs_started(
+        spark, lambda: iceberg_export.read_iceberg(spark, dest, eq_filters={"p": 3})
+    )
+    assert tasks == []
+    assert sorted(map(tuple, p3.collect())) == sorted(
+        (k, *v) for k, v in model.items() if v[1] == 3
+    )
+
+
 # ---------------------------------------------------------------------------
 # append_iceberg — incremental commits onto an exported table
 # ---------------------------------------------------------------------------
