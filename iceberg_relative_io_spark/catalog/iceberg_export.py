@@ -96,6 +96,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from iceberg_relative_io_spark.catalog import avro_ocf
+from iceberg_relative_io_spark.catalog.scan import (
+    _local_frame, _norm_path_py, net_diff, plan_scan,
+)
 from iceberg_relative_io_spark.catalog.spark_table import (
     _STREAM_EPOCH_PROP,
     RelativeTable,
@@ -1225,8 +1228,7 @@ def write_position_deletes(
         s for s in doc["snapshots"]
         if s["snapshot-id"] == doc["current-snapshot-id"]
     )
-    with open(cur["manifest-list"], "rb") as fh:
-        _, _, prior = avro_ocf.read_ocf(fh.read())
+    prior = _avro_records(cur["manifest-list"])
     ml_records = list(prior) + [
         {
             "manifest_path": manifest_path,
@@ -1495,8 +1497,7 @@ def append_iceberg(
             s for s in doc["snapshots"]
             if s["snapshot-id"] == doc["current-snapshot-id"]
         )
-        with open(cur["manifest-list"], "rb") as fh:
-            _, _, prior = avro_ocf.read_ocf(fh.read())
+        prior = _avro_records(cur["manifest-list"])
     ml_records = list(prior) + [
         {
             "manifest_path": manifest_path,
@@ -1696,8 +1697,7 @@ def rewrite_manifests_iceberg(table_dir: str) -> dict:
         s for s in doc["snapshots"]
         if s["snapshot-id"] == doc["current-snapshot-id"]
     )
-    with open(cur["manifest-list"], "rb") as fh:
-        _, _, mls = avro_ocf.read_ocf(fh.read())
+    mls = _avro_records(cur["manifest-list"])
 
     spec_fields = _spec_fields_from_doc(doc)
     entry_schema = _manifest_entry_schema(spec_fields)
@@ -1717,8 +1717,7 @@ def rewrite_manifests_iceberg(table_dir: str) -> dict:
             delete_mfs.append(mf)
             continue
         n_data_manifests += 1
-        with open(mf["manifest_path"], "rb") as fh:
-            _, _, entries = avro_ocf.read_ocf(fh.read())
+        entries = _avro_records(mf["manifest_path"])
         for e in entries:
             if e["status"] == 2:  # DELETED — drop from the merge
                 continue
@@ -2010,13 +2009,11 @@ def _head_data_file_paths(doc: dict) -> dict[str, str]:
         s for s in doc["snapshots"]
         if s["snapshot-id"] == doc["current-snapshot-id"]
     )
-    with open(cur["manifest-list"], "rb") as fh:
-        _, _, manifests = avro_ocf.read_ocf(fh.read())
+    manifests = _avro_records(cur["manifest-list"])
     for mf in manifests:
         if mf["content"] == 1:
             continue
-        with open(mf["manifest_path"], "rb") as fh:
-            _, _, mf_entries = avro_ocf.read_ocf(fh.read())
+        mf_entries = _avro_records(mf["manifest_path"])
         for e in mf_entries:
             if e["status"] == 2 or e["data_file"]["content"] != 0:
                 continue
@@ -2037,11 +2034,8 @@ def _write_position_delete_files(
     each part file) under ``<table>/data/posdel-<uuid>`` — distributed,
     like ``_write_delete_key_files`` — and return the ``content=1``
     manifest entries plus the row count. Clustering by ``file_path``
-    keeps each data file's positions in one delete part file, so a
-    reader's per-group anti-join build side stays proportional to that
-    group's own deletes."""
+    keeps each data file's positions in one delete part file."""
     import pyarrow.parquet as pq
-    from pyspark.sql import types as _T
 
     ids = {"file_path": 2147483546, "pos": 2147483545}
     tagged = hits.select(
@@ -2146,8 +2140,7 @@ def _commit_delete_manifest(
             s for s in doc["snapshots"]
             if s["snapshot-id"] == doc["current-snapshot-id"]
         )
-        with open(cur["manifest-list"], "rb") as fh:
-            _, _, prior = avro_ocf.read_ocf(fh.read())
+        prior = _avro_records(cur["manifest-list"])
     ml_records = list(prior) + [
         {
             "manifest_path": manifest_path,
@@ -2387,8 +2380,7 @@ def _commit_mor_overwrite(
             s for s in doc["snapshots"]
             if s["snapshot-id"] == doc["current-snapshot-id"]
         )
-        with open(cur["manifest-list"], "rb") as fh:
-            _, _, prior = avro_ocf.read_ocf(fh.read())
+        prior = _avro_records(cur["manifest-list"])
     ml_records = list(prior) + new_ml_records
     ml_path = os.path.join(
         table_dir, "metadata", f"snap-{snap_id}-1-{uuid.uuid4()}.avro"
@@ -2701,8 +2693,7 @@ def overwrite_partitions_iceberg(
             s for s in doc["snapshots"]
             if s["snapshot-id"] == doc["current-snapshot-id"]
         )
-        with open(cur["manifest-list"], "rb") as fh:
-            _, _, prior_mls = avro_ocf.read_ocf(fh.read())
+        prior_mls = _avro_records(cur["manifest-list"])
     delete_mfs: list[dict] = []
     rewritten: list[dict] = []
     kept_rows = doomed_rows = 0
@@ -2718,8 +2709,7 @@ def overwrite_partitions_iceberg(
                 f"under spec {mf['partition_spec_id']} (default is "
                 f"{doc['default-spec-id']}) — compact_iceberg first"
             )
-        with open(mf["manifest_path"], "rb") as fh:
-            _, _, entries = avro_ocf.read_ocf(fh.read())
+        entries = _avro_records(mf["manifest_path"])
         for e in entries:
             if e["status"] == 2:
                 continue
@@ -3161,13 +3151,11 @@ def evolve_schema_iceberg(
             s for s in doc["snapshots"]
             if s["snapshot-id"] == doc["current-snapshot-id"]
         )
-        with open(cur["manifest-list"], "rb") as fh:
-            _, _, mls = avro_ocf.read_ocf(fh.read())
+        mls = _avro_records(cur["manifest-list"])
         for mf in mls:
             if mf["content"] != 1:
                 continue
-            with open(mf["manifest_path"], "rb") as fh:
-                _, _, entries = avro_ocf.read_ocf(fh.read())
+            entries = _avro_records(mf["manifest_path"])
             for e in entries:
                 if e["status"] == 2:
                     continue
@@ -3264,12 +3252,10 @@ def _snapshot_refs(
     manifests: set = set()
     files: set = set()
     for s in snaps:
-        with open(s["manifest-list"], "rb") as fh:
-            _, _, mls = avro_ocf.read_ocf(fh.read())
+        mls = _avro_records(s["manifest-list"])
         for mf in mls:
             manifests.add(mf["manifest_path"])
-            with open(mf["manifest_path"], "rb") as fh:
-                _, _, entries = avro_ocf.read_ocf(fh.read())
+            entries = _avro_records(mf["manifest_path"])
             files |= {
                 e["data_file"]["file_path"]
                 for e in entries
@@ -3488,11 +3474,9 @@ def files_iceberg(spark: SparkSession, table_dir: str) -> DataFrame:
             s for s in doc["snapshots"]
             if s["snapshot-id"] == doc["current-snapshot-id"]
         )
-        with open(snap["manifest-list"], "rb") as fh:
-            _, _, mls = avro_ocf.read_ocf(fh.read())
+        mls = _avro_records(snap["manifest-list"])
         for mf in mls:
-            with open(mf["manifest_path"], "rb") as fh:
-                _, _, entries = avro_ocf.read_ocf(fh.read())
+            entries = _avro_records(mf["manifest_path"])
             for e in entries:
                 if e["status"] == 2:
                     continue
@@ -3626,132 +3610,6 @@ def _ident_value(tname, raw):
     return raw
 
 
-def _local_frame(
-    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
-) -> DataFrame:
-    """A frame of driver-made rows, built from a pyarrow table: Spark
-    plans it as a ``LocalTableScan`` inside the JVM and starts no Python
-    worker. (``createDataFrame`` on a list of tuples makes a pickled-RDD
-    relation that forks Python workers to unpickle it on every action.)
-    ``schema`` is a StructType or a DDL string; values must already be
-    of each field's Python type."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
-    arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) if rows else [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
-        schema=arrow,
-    )
-    return spark.createDataFrame(table, schema)
-
-
-_SCHEME_RE = re.compile(r"^([A-Za-z][A-Za-z0-9+.\-]*:)?/*")
-
-
-def _norm_path_py(p: str) -> str:
-    """Scheme-insensitive rooted form of a recorded path (Python twin of
-    ``_norm_path``: same regex, so driver-made keys and scan-time paths
-    normalize identically)."""
-    return "/" + _SCHEME_RE.sub("", p)
-
-
-def _norm_path(c):
-    """Scheme-insensitive path equality for position-delete matching:
-    Spark's ``_metadata.file_path`` is a URI (file:///…) while delete
-    files may record plain paths (or vice versa) — both normalize to a
-    single rooted form before joining."""
-    return F.concat(F.lit("/"), F.regexp_replace(c, _SCHEME_RE.pattern, ""))
-
-
-def _norm_meta_path(c):
-    """``_norm_path`` for ``_metadata.file_path``, which is additionally
-    a percent-ENCODED URI (space -> %20, literal % -> %25 — e.g. a
-    timestamp identity partition dir "th=... 00%3A00" arrives as
-    "...%2000%253A00"). Decode once, then strip the scheme, so it
-    matches the RAW path form the manifests and delete files record.
-    url_decode is FORM decoding, which also turns a literal '+' into a
-    space — but '+' is a legal URI path char the encoder leaves alone
-    (plausible in identity partition dirs like tz=+00:00), so it is
-    pre-protected as %2B before decoding."""
-    return _norm_path(F.url_decode(F.regexp_replace(c, r"\+", "%2B")))
-
-
-def _seq_tag(files: list[dict]):
-    """Column tagging each row of a scan over ``files`` (manifest
-    entries with ``path``/``seq``) with its file's sequence number,
-    keyed on ``_metadata.file_path`` — a literal when they share one."""
-    seqs = {_norm_path_py(d["path"]): d["seq"] for d in files}
-    if len(set(seqs.values())) == 1:
-        return F.lit(next(iter(seqs.values()))).cast("long")
-    lookup = F.create_map(
-        *[
-            x
-            for p, s in seqs.items()
-            for x in (F.lit(p), F.lit(s).cast("long"))
-        ]
-    )
-    return lookup[_norm_meta_path(F.col("_metadata.file_path"))]
-
-
-def _file_side_table(
-    spark: SparkSession, data_entries: list[dict], identity: list
-) -> DataFrame:
-    """One row per data file, keyed by its normalized path
-    (``__ir_fp``): its data sequence number (``__ir_seq``) and its
-    identity partition values under the source field's CURRENT name
-    (the spec-field name is frozen at spec creation and goes stale once
-    the source column is renamed)."""
-    fields = [
-        T.StructField("__ir_fp", T.StringType(), False),
-        T.StructField("__ir_seq", T.LongType(), False),
-    ] + [
-        T.StructField(
-            src["name"], _spark_type_of(src["type"], T.StringType()), True
-        )
-        for _, src in identity
-    ]
-    rows = {}
-    for e in data_entries:
-        rec = e["data_file"]
-        fp = _norm_path_py(rec["file_path"])
-        rows[fp] = (fp, e["sequence_number"]) + tuple(
-            _ident_value(src["type"], rec["partition"].get(name))
-            for name, src in identity
-        )
-    return _local_frame(spark, list(rows.values()), T.StructType(fields))
-
-
-def _scan_schema(fields: list[dict], alias_of: dict) -> T.StructType:
-    """Parquet read schema for ``fields`` (schema-JSON fields) from
-    table metadata: each field under its current name and under every
-    name-mapping alias of it (``alias_of``: alias -> current name), so
-    ``_resolve_aliases`` can resolve old-era files. A name no file
-    carries reads as NULL."""
-    out = []
-    for f in fields:
-        dt = _spark_type_of(f["type"])
-        names = [f["name"]] + [a for a, cur in alias_of.items() if cur == f["name"]]
-        out += [T.StructField(n, dt, True) for n in names]
-    return T.StructType(out)
-
-
-def _resolve_aliases(df: DataFrame, alias_of: dict) -> DataFrame:
-    """Fold old-era columns into their current names
-    (``schema.name-mapping.default``) in a scan read with
-    ``_scan_schema``, which carries each alias next to its current
-    name: the current one wins per row."""
-    for alias, cur in alias_of.items():
-        if alias in df.columns:
-            df = df.withColumn(cur, F.coalesce(F.col(cur), F.col(alias))).drop(
-                alias
-            )
-    return df
-
-
 _VERSION_FILE_RE = re.compile(r"^v(\d+)\.(?:gz\.)?metadata\.json$")
 
 
@@ -3837,18 +3695,10 @@ def _load_metadata(table_dir: str) -> dict:
     return _load_metadata_versioned(table_dir)[0]
 
 
-# A delete build side is only broadcast while it provably fits in every
-# executor (and the driver, which relays the broadcast): parquet decodes
-# to roughly 5-10x its on-disk size, so cap the compressed bytes far
-# below any sane spark.sql.autoBroadcastJoinThreshold. Above the cap the
-# anti-join becomes a SHUFFLE_HASH join instead — both sides partition
-# by (file, pos) / equality key and the delete side is hash-built per
-# partition, so the 100 TB probe side is never sorted (SMJ would) and no
-# single JVM ever holds the whole delete set. Manifests carry the exact
-# per-file record_count/file_size_in_bytes (required spec fields), so
-# the choice is made from metadata alone, before any scan.
-_BROADCAST_DELETE_MAX_BYTES = 32 << 20
-_BROADCAST_DELETE_MAX_ROWS = 4_000_000
+def _avro_records(path: str) -> list[dict]:
+    """The records of an avro manifest list or manifest."""
+    with open(path, "rb") as fh:
+        return avro_ocf.read_ocf(fh.read())[2]
 
 
 def _walk_manifests(manifests: list[dict]) -> tuple[list, list, list]:
@@ -3865,8 +3715,7 @@ def _walk_manifests(manifests: list[dict]) -> tuple[list, list, list]:
     eq_deletes: list[dict] = []  # {seq, path, ids, rows, bytes}
     pos_deletes: list[dict] = []  # {seq, path, rows, bytes}
     for mf in manifests:
-        with open(mf["manifest_path"], "rb") as fh:
-            _, _, entries = avro_ocf.read_ocf(fh.read())
+        entries = _avro_records(mf["manifest_path"])
         for e in entries:
             if e["status"] == 2:  # DELETED
                 continue
@@ -3921,8 +3770,7 @@ def _changelog_file_plan(
         )
         if snap is None:
             raise ValueError(f"no such snapshot: {sid}")
-        with open(snap["manifest-list"], "rb") as fh:
-            _, _, manifests = avro_ocf.read_ocf(fh.read())
+        manifests = _avro_records(snap["manifest-list"])
         data_entries, eq_d, pos_d = _walk_manifests(manifests)
         st: dict[str, tuple] = {}
         for e in data_entries:
@@ -3995,40 +3843,12 @@ def changelog_iceberg(
         # head read: the head resolves under the CURRENT schema (the
         # branch rule), so the diff does too
         to_schema_id = doc["current-schema-id"]
-    old = read_iceberg(
-        spark,
-        table_dir,
-        snapshot_id=from_snapshot_id,
-        _keep_paths=keep_from,
-        _use_schema_id=to_schema_id,
-    )
-    new = read_iceberg(
-        spark,
-        table_dir,
-        snapshot_id=to_sid,
-        _keep_paths=keep_to,
-        _use_schema_id=to_schema_id,
-    )
-    cols = [f.name for f in new.schema.fields]
-    for f in new.schema.fields:
-        if f.name not in old.columns:
-            old = old.withColumn(f.name, F.lit(None).cast(f.dataType))
-    old = old.select(*cols)
-    tagged = new.withColumn("_w", F.lit(1)).unionByName(
-        old.withColumn("_w", F.lit(-1))
-    )
-    net = (
-        tagged.groupBy(*cols)
-        .agg(F.sum("_w").alias("_net"))
-        .filter(F.col("_net") != 0)
-    )
-    return net.select(
-        *cols,
-        F.when(F.col("_net") > 0, F.lit("INSERT"))
-        .otherwise(F.lit("DELETE"))
-        .alias("_change_type"),
-        F.abs(F.col("_net")).cast("long").alias("_n"),
-    )
+    def side(sid: int, keep: set) -> DataFrame:
+        return read_iceberg(
+            spark, table_dir, snapshot_id=sid, _keep_paths=keep, _use_schema_id=to_schema_id
+        )
+
+    return net_diff(side(from_snapshot_id, keep_from), side(to_sid, keep_to))
 
 
 def read_iceberg(
@@ -4063,26 +3883,15 @@ def read_iceberg(
     different bucket — the pruning path an external engine gets from
     the exported spec.
 
-    Scans take their schema from the table metadata, never from file
-    footers: the data scan reads the resolved era's fields plus every
-    ``schema.name-mapping.default`` alias of them, an equality-delete
-    scan its key columns plus their aliases. Building the read samples
-    no footer; the only job it can start is Spark's file listing of a
-    scan over more than 32 paths, sized to the cores by
-    ``session.ensure_runtime_confs``.
-
-    A read is one plan: one parquet scan over every kept data file, one
-    scan per delete kind (position deletes; equality deletes per
-    key-column set), each applied by one left-anti join whose condition
-    carries the sequence scoping, and one broadcast per-file side table
-    (normalized path -> data sequence number and identity partition
-    values) built from Arrow, so no Python worker starts. The join
-    strategy for a delete kind — broadcast or shuffled hash — follows
-    its manifest-recorded size (``_BROADCAST_DELETE_MAX_*``).
-
-    Deliberately shares NOTHING with RelativeTable's read path — it
-    consumes only the exported spec artifacts, so a round-trip equality
-    against the source table checks the export end to end."""
+    The read is one plan of the merge-on-read planner both formats
+    share (``scan.plan_scan``): one data scan, one scan per delete kind,
+    sequence-scoped anti-joins. Its inputs come from the avro manifests
+    and metadata.json alone — scan schemas from the resolved era schema
+    plus every ``schema.name-mapping.default`` alias, never from a file
+    footer — and never from the source table's JSON manifests, so a
+    round-trip equality against the source table still checks the
+    export end to end. The only job building a read can start is
+    Spark's listing of a scan over more than 32 paths."""
     doc = _load_metadata(table_dir)
     if sum(x is not None for x in (ref, snapshot_id, as_of_ms)) > 1:
         raise ValueError("pass at most one of ref / snapshot_id / as_of_ms")
@@ -4115,8 +3924,7 @@ def read_iceberg(
     snap = next(
         s for s in doc["snapshots"] if s["snapshot-id"] == want_sid
     )
-    with open(snap["manifest-list"], "rb") as fh:
-        _, _, manifests = avro_ocf.read_ocf(fh.read())
+    manifests = _avro_records(snap["manifest-list"])
 
     # explicit time travel (snapshot_id / as_of_ms) and TAG refs
     # resolve under the schema CURRENT WHEN THE SNAPSHOT WAS COMMITTED
@@ -4249,142 +4057,51 @@ def read_iceberg(
                 taken.add(alias.lower())
                 alias_of[alias] = cur
 
-    internal = ["__ir_fp", "__ir_pos"] if _with_positions else []
-    if not data_entries:
-        fields = [
-            T.StructField(
-                f["name"],
-                _spark_type_of(f["type"], default=T.StringType()),
-                not f["required"],
-            )
-            for f in schema["fields"]
-        ]
-        if _with_positions:
-            fields += [
-                T.StructField("__ir_fp", T.StringType(), False),
-                T.StructField("__ir_pos", T.LongType(), False),
-            ]
-        return _local_frame(spark, [], T.StructType(fields))
-
-    # ONE plan per read. The spec's scan-planning rule applies a delete
-    # per data FILE by sequence number — an equality delete to files
-    # with a strictly smaller data sequence, a position delete to files
-    # at or below its own — and that rule is a join condition. So every
-    # kept data file is read in one scan, each delete kind in one scan
-    # tagged with its files' sequence numbers (equality deletes: one
-    # per key-column set), and each kind applies by one left-anti join
-    # whose condition carries the scoping. Per-file facts the data scan
-    # cannot see — the data sequence number and the identity partition
-    # values, which are absent from the files — attach through one
-    # broadcast side table keyed by the normalized path. Deletes that
-    # scope no kept file are never read; a kind whose deletes all scope
-    # every kept file needs no sequence condition, and with no such
-    # condition and no identity partition the side table is left out.
-    seqs = [e["sequence_number"] for e in data_entries]
-    lo, hi = min(seqs), max(seqs)
-    live_pos = [d for d in pos_deletes if d["seq"] >= lo]
-    pos_scoped = any(d["seq"] < hi for d in live_pos)
-    eq_sets: dict[tuple, list[dict]] = {}
-    for d in eq_deletes:
-        if d["seq"] > lo:
-            eq_sets.setdefault(tuple(d["cols"]), []).append(d)
-    eq_scoped = {
-        cols: any(d["seq"] <= hi for d in dels)
-        for cols, dels in eq_sets.items()
+    # one era: a field sits under its current name or an alias of it.
+    # Delete files record key columns by the name current at delete
+    # time, which resolves the same way.
+    era = {
+        f["name"]: [f["name"]] + [a for a, cur in alias_of.items() if cur == f["name"]]
+        for f in schema["fields"]
     }
-    side = bool(identity) or pos_scoped or any(eq_scoped.values())
-
-    def _anti_join(left, dkeys, cond, dels):
-        # broadcast-vs-shuffle from the manifests' exact delete sizes
-        rows = sum(d["rows"] for d in dels)
-        nbytes = sum(d["bytes"] for d in dels)
-        if rows <= _BROADCAST_DELETE_MAX_ROWS and nbytes <= _BROADCAST_DELETE_MAX_BYTES:
-            dkeys = F.broadcast(dkeys)
-        else:
-            dkeys = dkeys.hint("shuffle_hash")
-        return left.join(dkeys, cond, "left_anti")
-
-    # the scan's schema is the metadata's, never a footer's, so no job
-    # samples or merges footers: a name-mapping alias reads old-era
-    # files, columns outside the schema (dropped fields still in old
-    # files) are never read, and a field no file carries (added after
-    # the files were written) reads as typed NULL — the spec's
-    # add-column rule, so a delete keyed on it matches nothing
-    data = spark.read.schema(_scan_schema(schema["fields"], alias_of)).parquet(
-        *[e["data_file"]["file_path"] for e in data_entries]
+    # an empty read types what it cannot scan as string
+    default = None if data_entries else T.StringType()
+    data = plan_scan(
+        spark,
+        [
+            T.StructField(f["name"], _spark_type_of(f["type"], default), not f["required"])
+            for f in schema["fields"]
+        ],
+        [
+            {
+                "path": e["data_file"]["file_path"],
+                "seq": e["sequence_number"],
+                "era": 0,
+                # under the source field's CURRENT name: the spec-field
+                # name is frozen at spec creation and goes stale on rename
+                "ident": {
+                    src["name"]: _ident_value(
+                        src["type"], e["data_file"]["partition"].get(name)
+                    )
+                    for name, src in identity
+                },
+            }
+            for e in data_entries
+        ],
+        [{**d, "kind": "pos"} for d in pos_deletes]
+        + [{**d, "kind": "eq", "names": [era[c] for c in d["cols"]]} for d in eq_deletes],
+        {0: {"cols": era}},
+        [
+            T.StructField(src["name"], _spark_type_of(src["type"], T.StringType()))
+            for _, src in identity
+        ],
+        with_positions=_with_positions,
     )
-    # provenance is captured at scan time (before any rename):
-    # _metadata.row_index is the row's ordinal within its file — exactly
-    # the spec's `pos` — so a position delete is an anti-join on
-    # (file, pos); __ir_fp also keys the side table
-    prov = []
-    if side or live_pos or _with_positions:
-        prov.append(_norm_meta_path(F.col("_metadata.file_path")).alias("__ir_fp"))
-    if live_pos or _with_positions:
-        prov.append(F.col("_metadata.row_index").alias("__ir_pos"))
-    if prov:
-        data = data.select("*", *prov)
-    data = _resolve_aliases(data, alias_of)
-    if side:
-        # identity partition columns are restored BEFORE equality
-        # deletes apply — a delete keyed on a partition column is legal
-        # and must resolve
-        for _, src in identity:
-            if src["name"] in data.columns:
-                data = data.drop(src["name"])
-        data = data.join(
-            F.broadcast(_file_side_table(spark, data_entries, identity)),
-            "__ir_fp",
-            "left",
-        )
-
-    if live_pos:
-        # no .distinct(): anti-join is set semantics, so duplicate
-        # (file, pos) rows (the spec allows re-deletion) are harmless,
-        # and a distinct would cost an extra Exchange of the delete set
-        # in the shuffle path. The schema is the spec's fixed one, so
-        # no footer is sampled.
-        scan = spark.read.schema("file_path string, pos long").parquet(
-            *[d["path"] for d in live_pos]
-        )
-        dkeys = [
-            _norm_path(F.col("file_path")).alias("__ir_dfp"),
-            F.col("pos").alias("__ir_dpos"),
-        ]
-        cond = (F.col("__ir_fp") == F.col("__ir_dfp")) & (
-            F.col("__ir_pos") == F.col("__ir_dpos")
-        )
-        if pos_scoped:
-            dkeys.append(_seq_tag(live_pos).alias("__ir_dseq"))
-            cond = cond & (F.col("__ir_dseq") >= F.col("__ir_seq"))
-        data = _anti_join(data, scan.select(*dkeys), cond, live_pos)
-
-    for cols, dels in eq_sets.items():
-        scan = spark.read.schema(
-            _scan_schema([fields_by_name[c] for c in cols], alias_of)
-        ).parquet(*[d["path"] for d in dels])
-        if eq_scoped[cols]:
-            # tagged on the raw scan, where _metadata still resolves
-            scan = scan.select("*", _seq_tag(dels).alias("__ir_dseq"))
-        # delete files record key columns by the NAME current at delete
-        # time; resolve pre-rename names through the mapping
-        scan = _resolve_aliases(scan, alias_of)
-        keys = [f"__ir_k{i}" for i in range(len(cols))]
-        dkeys = [F.col(c).alias(k) for c, k in zip(cols, keys)]
-        conds = [F.col(c) == F.col(k) for c, k in zip(cols, keys)]
-        if eq_scoped[cols]:
-            dkeys.append(F.col("__ir_dseq"))
-            conds.append(F.col("__ir_dseq") > F.col("__ir_seq"))
-        cond = conds[0]
-        for c in conds[1:]:
-            cond = cond & c
-        data = _anti_join(data, scan.select(*dkeys), cond, dels)
-
     if eq_filters:
         for col, v in eq_filters.items():
             if col in data.columns:
                 data = data.filter(F.col(col) == F.lit(v))
-    return data.select(*[f["name"] for f in schema["fields"]], *internal)
+    return data
 
 
 # ---------------------------------------------------------------------------
@@ -4534,13 +4251,11 @@ def import_iceberg(spark: SparkSession, catalog, namespace, name: str,
         for s in doc["snapshots"]
         if s["snapshot-id"] == doc["current-snapshot-id"]
     )
-    with open(snap["manifest-list"], "rb") as fh:
-        _, _, manifests = avro_ocf.read_ocf(fh.read())
+    manifests = _avro_records(snap["manifest-list"])
     data_by_seq: dict[int, list] = {}
     dels_by_seq: dict[int, list] = {}
     for mf in manifests:
-        with open(mf["manifest_path"], "rb") as fh:
-            _, _, entries = avro_ocf.read_ocf(fh.read())
+        entries = _avro_records(mf["manifest_path"])
         for e in entries:
             if e["status"] == 2:
                 continue

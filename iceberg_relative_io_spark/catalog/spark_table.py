@@ -24,8 +24,9 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
+from iceberg_relative_io_spark.catalog.scan import net_diff, plan_scan
 from iceberg_relative_io_spark.catalog.table_ops import CommitFailedError, TableOperations
 
 _COMMIT_RETRIES = 4
@@ -36,6 +37,9 @@ _COMMIT_RETRIES = 4
 # probe survives expire_snapshots (one bounded property per checkpoint,
 # not per epoch — epochs commit in order, so the max is complete)
 _STREAM_EPOCH_PROP = "stream.epoch."
+
+# Spark's hive-layout directory value for a NULL partition
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _epoch_key_parts(epoch_key) -> tuple[str, int] | None:
@@ -141,13 +145,6 @@ def _transform_value(fdef: dict, v):
     return None
 
 
-# Broadcast cap for MOR equality-delete build sides, compared against
-# the manifest's compressed size-bytes (parquet decodes ~5-10x larger).
-# Above it the reader's anti-join degrades to a shuffled hash join —
-# see the MOR read path below and iceberg_export.py for the rationale.
-_BROADCAST_DELETE_MAX_BYTES = 32 << 20
-
-
 class RelativeTable:
     def __init__(self, ops: TableOperations):
         self.ops = ops
@@ -166,8 +163,8 @@ class RelativeTable:
         record the TRUE partition value — partition_filter pruning
         compares predicate values, in_layout range-prunes by string
         order (':' is 0x3A but its escape '%3A' starts at 0x25, so an
-        escaped timestamp at a range bound was wrongly skipped), and the
-        DSv2 readers re-attach the stored string as the column value —
+        escaped timestamp at a range bound was wrongly skipped), and
+        both readers restore the stored string as the column value —
         all of which silently diverge on the escaped form."""
         from urllib.parse import unquote
 
@@ -613,18 +610,22 @@ class RelativeTable:
         snap_dir = self.ops.data_location(f"snap-{uuid.uuid4()}")
         abs_dir = self.ops.io.spark_path(snap_dir)
         keys.coalesce(1).write.mode("overwrite").parquet(abs_dir)
+        column_ids = self.ops.current().get("column-ids")
         deletes = []
         for fi in self.ops.io.list_prefix(snap_dir):
             name = fi.location.rsplit("/", 1)[-1]
             if name.startswith("_") or name.startswith("."):
                 continue
-            deletes.append(
-                {
-                    "path": fi.location,
-                    "size-bytes": fi.size,
-                    "equality-cols": list(equality_cols),
-                }
-            )
+            entry = {
+                "path": fi.location,
+                "size-bytes": fi.size,
+                "equality-cols": list(equality_cols),
+            }
+            if column_ids:
+                # key names -> stable ids: the delete keeps applying after
+                # a key column is renamed
+                entry["column-ids"] = dict(column_ids)
+            deletes.append(entry)
         return self._commit_snapshot(
             "delete-mor",
             [],
@@ -929,6 +930,20 @@ class RelativeTable:
     # snapshot operations that EXTEND the parent file set (vs reset it)
     _CHAIN_OPS = ("append", "delete-mor", "dynamic-overwrite")
 
+    def _chain(self, meta: dict, snapshot_id: int | None) -> list[dict]:
+        """The snapshots whose manifests make up a snapshot's file set,
+        newest first: its parent chain back to the nearest snapshot
+        that resets the file set (an overwrite / replace)."""
+        chain: list[dict] = []
+        sid = snapshot_id
+        while sid is not None:
+            snap = self._snapshot_entry(meta, sid)
+            chain.append(snap)
+            if snap["operation"] not in self._CHAIN_OPS:
+                break  # file set resets here; older history is shadowed
+            sid = snap["parent-snapshot-id"]
+        return chain
+
     def _data_files(self, meta: dict, snapshot_id: int) -> list[dict]:
         """Reconstruct a snapshot's live file set by walking its parent
         chain: 'append'/'delete-mor' contribute to the parent set;
@@ -940,16 +955,8 @@ class RelativeTable:
         ``rewrite_manifests``) keeps its ORIGINAL sequence in a persisted
         ``seq`` field — Iceberg's data-sequence-number inheritance — so
         older equality deletes still apply after the rewrite."""
-        chain: list[dict] = []
-        sid: int | None = snapshot_id
-        while sid is not None:
-            snap = self._snapshot_entry(meta, sid)
-            chain.append(snap)
-            if snap["operation"] not in self._CHAIN_OPS:
-                break  # file set resets here; older history is shadowed
-            sid = snap["parent-snapshot-id"]
         files: list[dict] = []
-        for snap in reversed(chain):
+        for snap in reversed(self._chain(meta, snapshot_id)):
             man = self._manifest_for(meta, snap["snapshot-id"])
             if snap["operation"] == "dynamic-overwrite":
                 # backfill semantics: drop the parent's files in the
@@ -975,16 +982,8 @@ class RelativeTable:
         'delete-mor' snapshots and carried forward — with their original
         sequence persisted as ``seq`` — by metadata-only 'replace'
         snapshots (``rewrite_manifests``), so both are collected here."""
-        chain: list[dict] = []
-        sid: int | None = snapshot_id
-        while sid is not None:
-            snap = self._snapshot_entry(meta, sid)
-            chain.append(snap)
-            if snap["operation"] not in self._CHAIN_OPS:
-                break
-            sid = snap["parent-snapshot-id"]
         out: list[dict] = []
-        for snap in chain:
+        for snap in self._chain(meta, snapshot_id):
             # only delete-mor and carried-forward replace manifests have a
             # delete-files list; skip the manifest read for the rest
             if snap["operation"] != "delete-mor" and not snap.get("summary", {}).get(
@@ -1177,13 +1176,9 @@ class RelativeTable:
             snap = refs[branch]
         else:
             snap = self._resolve_snapshot(meta, snapshot_id, as_of_timestamp_ms)
-        schema = StructType.fromJson(meta["schema"])
-        if snap is None:
-            return spark.createDataFrame([], schema)
+        # an empty table (no snapshot) walks no chain and reads no file
         entries = self._prune(self._data_files(meta, snap), partition_filter, column_ranges)
-        return self._read_entries(
-            spark, meta, schema, entries, deletes=self._delete_files(meta, snap)
-        )
+        return self._scan(spark, meta, entries, self._delete_files(meta, snap))
 
     def _changelog_plan(
         self, meta: dict, from_sid: int, to_sid: int
@@ -1205,11 +1200,7 @@ class RelativeTable:
             dels = self._delete_files(meta, sid)
             view = {
                 f["path"]: (
-                    tuple(
-                        sorted(
-                            d["path"] for d in dels if d["_snap"] > f["_snap"]
-                        )
-                    ),
+                    sorted(d["path"] for d in dels if d["_snap"] > f["_snap"]),
                     f["_snap"],
                 )
                 for f in files
@@ -1244,8 +1235,6 @@ class RelativeTable:
         metadata-first (:meth:`_changelog_plan`) so unchanged files
         never scan and the single hash aggregation shuffles only rows
         from files that changed."""
-        from pyspark.sql import functions as F
-
         meta = self.ops.current()
         to_sid = (
             to_snapshot_id
@@ -1257,136 +1246,96 @@ class RelativeTable:
         # a scan (an expired snapshot's unreferenced files are deleted)
         self._resolve_snapshot(meta, from_snapshot_id, None)
         self._resolve_snapshot(meta, to_sid, None)
-        schema = StructType.fromJson(meta["schema"])
         old_e, new_e, _, dels_f, dels_t = self._changelog_plan(
             meta, from_snapshot_id, to_sid
         )
-        old = self._read_entries(spark, meta, schema, old_e, deletes=dels_f)
-        new = self._read_entries(spark, meta, schema, new_e, deletes=dels_t)
-        cols = [fld.name for fld in schema.fields]
-        tagged = (
-            new.select(*cols)
-            .withColumn("_w", F.lit(1))
-            .unionByName(old.select(*cols).withColumn("_w", F.lit(-1)))
-        )
-        net = (
-            tagged.groupBy(*cols)
-            .agg(F.sum("_w").alias("_net"))
-            .filter(F.col("_net") != 0)
-        )
-        return net.select(
-            *cols,
-            F.when(F.col("_net") > 0, F.lit("INSERT"))
-            .otherwise(F.lit("DELETE"))
-            .alias("_change_type"),
-            F.abs(F.col("_net")).cast("long").alias("_n"),
+        return net_diff(
+            self._scan(spark, meta, old_e, dels_f),
+            self._scan(spark, meta, new_e, dels_t),
         )
 
-    def _read_entries(
+    @staticmethod
+    def _delete_keys(d: dict, cur_ids: dict) -> list[tuple[str, str]]:
+        """(name in the delete file, current name) per equality key of a
+        MOR delete entry: by id where the entry records ``column-ids``,
+        so a key column renamed after the delete still matches, else by
+        the current name."""
+        ids = d.get("column-ids") if cur_ids else None
+        if not ids:
+            return [(c, c) for c in d["equality-cols"]]
+        name_of = {i: n for n, i in cur_ids.items()}
+        for c in d["equality-cols"]:
+            if ids.get(c) not in name_of:
+                raise ValueError(
+                    f"equality delete {d['path']!r} keys on column {c!r}, "
+                    "which the current schema dropped; compact before "
+                    "dropping delete-key columns"
+                )
+        return [(c, name_of[ids[c]]) for c in d["equality-cols"]]
+
+    def _scan(
         self,
         spark: SparkSession,
         meta: dict,
-        schema: StructType,
         entries: list[dict],
-        deletes: list[dict] | None = None,
+        deletes: list[dict] = (),
     ) -> DataFrame:
-        """Scan a set of manifest entries under the current schema.
-
-        Files are grouped by the column-id mapping recorded at their write
-        time; each group reads with its own physical names and is aliased
-        onto the current logical schema by id (renamed columns resolve,
-        ids absent from the file — added or dropped-and-readded later —
-        surface NULL). An unevolved table is one group with an identity
-        mapping: exactly the single-scan fast path."""
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import StructField
-
-        if not entries:
-            return spark.createDataFrame([], schema)
+        """Read manifest entries under the current schema, as one plan of
+        the merge-on-read planner both formats share (``scan.plan_scan``).
+        An entry's data sequence is its ``_snap``; each ``column-ids``
+        map is a column era, resolving the file's physical names to the
+        current fields by id (a renamed column resolves; an id the file
+        lacks — added, or dropped and re-added — reads NULL); identity
+        partition values come from the manifest's ``partition`` tuple,
+        typed by a cast to the column's type. Nothing is inferred from
+        the file system."""
+        schema = StructType.fromJson(meta["schema"])
         cur_ids = meta.get("column-ids") or {}
-        # group by (column-id mapping, partition layout): after partition
-        # evolution a snapshot mixes file eras with different directory
-        # layouts, and Spark's partition discovery needs each read to see
-        # one consistent layout
-        def layout_prefix(path: str) -> str:
-            """Directory above the first key=value segment: Spark's
-            partition discovery needs every path in one read to share a
-            consistent structure below basePath, and per-snapshot data
-            dirs (data/snap-X/day=.../file) would otherwise conflict."""
-            segs = path.split("/")
-            for i, s in enumerate(segs[:-1]):
-                if "=" in s:
-                    return "/".join(segs[:i])
-            return ""
-
-        deletes = deletes or []
-        groups: dict[str, list[dict]] = {}
+        eras: dict[str, dict] = {}  # column-ids map (as JSON) -> era
+        files = []
         for e in entries:
-            # merge-on-read scoping: a delete applies only to data files
-            # added strictly before it; files with different applicable
-            # delete sets must read (and anti-join) separately
-            applicable = sorted(
-                d["_snap"] for d in deletes if d["_snap"] > e.get("_snap", -1)
+            file_ids = e.get("column-ids") if cur_ids else None
+            key = json.dumps(file_ids, sort_keys=True)
+            if key not in eras:
+                phys = {i: n for n, i in (file_ids or {}).items()}
+                eras[key] = {
+                    # legacy entries were written under the current names
+                    "cols": {
+                        f.name: [phys[cur_ids[f.name]] if file_ids else f.name]
+                        for f in schema.fields
+                        if not file_ids or cur_ids.get(f.name) in phys
+                    },
+                    "other": [n for i, n in phys.items() if i not in cur_ids.values()],
+                }
+            part = e.get("partition", {})
+            files.append(
+                {
+                    "path": self.ops.io.spark_path(e["path"]),
+                    "seq": e.get("_snap", 0),
+                    "era": key,
+                    "ident": {
+                        f: None if part[n] == _HIVE_NULL else part[n]
+                        for f, (n,) in eras[key]["cols"].items()
+                        if n in part
+                    },
+                }
             )
-            key = json.dumps(
-                [
-                    e.get("column-ids"),
-                    sorted(e.get("partition", {})),
-                    applicable,
-                    layout_prefix(e["path"]) if e.get("partition") else "",
-                ],
-                sort_keys=True,
+        dels = []
+        for d in deletes:
+            keys = self._delete_keys(d, cur_ids)
+            dels.append(
+                {
+                    "kind": "eq",
+                    "path": self.ops.io.spark_path(d["path"]),
+                    "seq": d["_snap"],
+                    "bytes": int(d.get("size-bytes") or 0),
+                    "cols": [cur for _, cur in keys],
+                    "names": [[phys] for phys, _ in keys],
+                }
             )
-            groups.setdefault(key, []).append(e)
-
-        parts: list[DataFrame] = []
-        for key, es in groups.items():
-            file_ids, part_keys, applicable, prefix = json.loads(key)
-            files = [self.ops.io.spark_path(f["path"]) for f in es]
-            base_path = self.ops.io.spark_path(prefix) if prefix else None
-            if not file_ids or not cur_ids:
-                # legacy entries: written with the current logical names
-                reader = spark.read.schema(schema)
-                if part_keys and base_path:
-                    reader = reader.option("basePath", base_path)
-                df = reader.parquet(*files).select(*[f.name for f in schema.fields])
-            else:
-                id_to_phys = {v: k for k, v in file_ids.items()}
-                read_fields, select_cols = [], []
-                for f in schema.fields:
-                    phys = id_to_phys.get(cur_ids.get(f.name))
-                    if phys is None:
-                        select_cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-                    else:
-                        read_fields.append(StructField(phys, f.dataType, True))
-                        select_cols.append(F.col(phys).alias(f.name))
-                reader = spark.read.schema(StructType(read_fields))
-                if part_keys and base_path:
-                    reader = reader.option("basePath", base_path)
-                df = reader.parquet(*files).select(*select_cols)
-            # merge-on-read: anti-join each applicable equality-delete file.
-            # Key-tuple files are normally broadcast-sized, but a MOR
-            # delete of a huge distinct-key set (1B user_ids at 100 TB)
-            # must not be shipped whole to every executor: above the cap
-            # (decided from the manifest's size-bytes, no scan needed)
-            # the build side flips to a SHUFFLE_HASH hint — both sides
-            # partition by the equality key, the delete side hash-builds
-            # per partition, and the probe side is never sorted.
-            for d in deletes:
-                if d["_snap"] not in applicable:
-                    continue
-                keys = spark.read.parquet(self.ops.io.spark_path(d["path"]))
-                if int(d.get("size-bytes") or 0) <= _BROADCAST_DELETE_MAX_BYTES:
-                    keys = F.broadcast(keys)
-                else:
-                    keys = keys.hint("shuffle_hash")
-                df = df.join(
-                    keys, on=list(d["equality-cols"]), how="left_anti"
-                )
-            parts.append(df)
-        return reduce(lambda a, b: a.unionByName(b), parts)
+        identity = dict.fromkeys(f for x in files for f in x["ident"])
+        identity = [StructField(f, StringType()) for f in identity]
+        return plan_scan(spark, schema.fields, files, dels, eras, identity)
 
     def incremental_files(
         self, from_snapshot_id: int | None, to_snapshot_id: int | None = None
@@ -1429,10 +1378,8 @@ class RelativeTable:
         to_snapshot_id: int | None = None,
     ) -> DataFrame:
         """Rows appended between two snapshots (exclusive, inclusive)."""
-        meta = self.ops.current()
-        schema = StructType.fromJson(meta["schema"])
         entries = self.incremental_files(from_snapshot_id, to_snapshot_id)
-        return self._read_entries(spark, meta, schema, entries)
+        return self._scan(spark, self.ops.current(), entries)
 
     def scan_files(
         self,
@@ -1443,8 +1390,6 @@ class RelativeTable:
         """Planned file list (for tests / the `.files` metadata view)."""
         meta = self.ops.current()
         snap = self._resolve_snapshot(meta, snapshot_id, None)
-        if snap is None:
-            return []
         return self._prune(self._data_files(meta, snap), partition_filter, column_ranges)
 
     # -- maintenance ------------------------------------------------------------
@@ -1474,15 +1419,9 @@ class RelativeTable:
             if all(s["snapshot-id"] in retained for s in live):
                 return {"expired": 0, "deleted_files": 0}
             # manifests needed: every chain ancestor of a retained snapshot
-            needed = set()
-            for sid in retained:
-                cur: int | None = sid
-                while cur is not None:
-                    snap = self._snapshot_entry(meta, cur)
-                    needed.add(cur)
-                    if snap["operation"] not in self._CHAIN_OPS:
-                        break
-                    cur = snap["parent-snapshot-id"]
+            needed = {
+                s["snapshot-id"] for sid in retained for s in self._chain(meta, sid)
+            }
             live_files = set()
             for sid in retained:
                 live_files.update(f["path"] for f in self._data_files(meta, sid))
@@ -1878,10 +1817,11 @@ class RelativeTable:
         """Partition evolution (Iceberg parity): change how FUTURE writes
         are laid out, as a metadata-only commit. Existing files keep the
         layout of the spec they were written under — each manifest entry
-        records its own partition tuple, the read path groups files by
-        per-file layout, and pruning only skips a file when the filtered
-        key is actually present in its tuple (old-layout files are
-        conservatively kept). This is what lets a 100 TB table switch
+        records its own partition tuple, the read path restores identity
+        values from that tuple per file (a file from before the key was
+        added keeps the column it holds), and pruning only skips a file
+        when the filtered key is actually present in its tuple
+        (old-layout files are conservatively kept). This is what lets a 100 TB table switch
         from daily to hourly partitioning without rewriting history."""
 
         def mutate(meta: dict) -> None:
@@ -1961,23 +1901,18 @@ class RelativeTable:
         ``rewrite_manifests``. Rows are oldest-first (chain order)."""
         meta = self.ops.current()
         rows = []
-        sid = meta.get("current-snapshot-id")
-        while sid is not None:
-            snap = self._snapshot_entry(meta, sid)
-            man = self._manifest_for(meta, sid)
+        for snap in self._chain(meta, meta.get("current-snapshot-id")):
+            man = self._manifest_for(meta, snap["snapshot-id"])
             rows.append(
                 (
                     snap["manifest"],
                     len(self.ops.io.read_bytes(snap["manifest"])),
-                    sid,
+                    snap["snapshot-id"],
                     snap["operation"],
                     len(man.get("added-files", [])),
                     len(man.get("delete-files") or []),
                 )
             )
-            if snap["operation"] not in self._CHAIN_OPS:
-                break  # file set resets here; older manifests are shadowed
-            sid = snap["parent-snapshot-id"]
         return spark.createDataFrame(
             rows[::-1],
             "manifest_path string, length long, snapshot_id long, "

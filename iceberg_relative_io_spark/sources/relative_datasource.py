@@ -75,7 +75,7 @@ class FilePartition(InputPartition):
     path: str  # relative to the warehouse
     partition_json: str
     column_ids_json: str  # name->id mapping in force when the file was written
-    deletes_json: str = "[]"  # applicable MOR equality deletes [(path, cols)]
+    deletes_json: str = "[]"  # MOR equality deletes [(path, [(file name, name)])]
 
 
 @dataclass
@@ -171,7 +171,8 @@ class RelativeBatchReader(DataSourceReader):
         # delete_where_mor, silently diverging from RelativeTable.read
         meta = table.ops.current()
         snap = table._resolve_snapshot(meta, self.snapshot_id, None)
-        dels = table._delete_files(meta, snap) if snap is not None else []
+        dels = table._delete_files(meta, snap)
+        keys = {d["path"]: table._delete_keys(d, self._cur_ids) for d in dels}
         return [
             FilePartition(
                 e["path"],
@@ -179,7 +180,7 @@ class RelativeBatchReader(DataSourceReader):
                 json.dumps(e.get("column-ids", {})),
                 json.dumps(
                     [
-                        (d["path"], list(d["equality-cols"]))
+                        (d["path"], keys[d["path"]])
                         for d in dels
                         if d["_snap"] > e.get("_snap", 0)
                     ]
@@ -211,24 +212,28 @@ def _read_file_partition(io, schema: StructType, partition: FilePartition, cur_i
     target = to_arrow_schema(schema)
     tbl = pq.read_table(io._fs_path(partition.path), filesystem=io.fs)
     part_values = json.loads(partition.partition_json)
-    # current logical name -> name physically written in this file
-    # (identity for unevolved tables; resolved by stable column id after
-    # a rename, same reconciliation as RelativeTable._read_entries)
+    # current logical name -> name physically written in this file, by
+    # stable column id (RelativeTable._scan's column eras): an id the
+    # file lacks reads NULL even where the file holds a dropped column
+    # under that name. Only legacy files resolve by the current name.
     file_ids = json.loads(partition.column_ids_json)
     id_to_phys = {v: k for k, v in file_ids.items()}
     cols = []
     for field in target:
-        phys = id_to_phys.get(cur_ids.get(field.name), field.name)
+        if file_ids and cur_ids:
+            phys = id_to_phys.get(cur_ids.get(field.name))
+        else:
+            phys = field.name
         if phys in tbl.column_names:
             cols.append(tbl.column(phys).cast(field.type))
-        elif field.name in part_values:
+        elif phys in part_values:
             # partition column physically split out of the file:
             # re-attach as a constant from the manifest's tuple.
             # Spark's hive layout writes NULL partitions as the
             # __HIVE_DEFAULT_PARTITION__ sentinel — decode it back
             # to NULL (casting it to int/date would crash; leaving
             # it on strings returned the literal sentinel)
-            v = part_values[field.name]
+            v = part_values[phys]
             if v == "__HIVE_DEFAULT_PARTITION__":
                 cols.append(pa.nulls(len(tbl), field.type))
             else:
@@ -238,24 +243,25 @@ def _read_file_partition(io, schema: StructType, partition: FilePartition, cur_i
             # column added (or dropped-and-readded) after this file
             cols.append(pa.nulls(len(tbl), field.type))
     out = pa.table(dict(zip(target.names, cols))).cast(target)
-    for dpath, dcols in json.loads(partition.deletes_json):
+    for dpath, dkeys in json.loads(partition.deletes_json):
         # equality-delete anti-join (the spec's strictly-newer
         # scoping was applied at planning): drop rows whose key
         # tuple appears in the delete file. Key sets are the
         # deleted-row keys — small relative to the data; the join
-        # runs per file inside the task
+        # runs per file inside the task. Each key is read under its
+        # name in the delete file and matched on its current name.
         dk = pq.read_table(
             io._fs_path(dpath), filesystem=io.fs,
-            columns=list(dcols),
+            columns=[k for k, _ in dkeys],
         )
         doomed = set(
-            zip(*[dk.column(c).to_pylist() for c in dcols])
+            zip(*[dk.column(k).to_pylist() for k, _ in dkeys])
         ) if len(dk) else set()
         if not doomed:
             continue
         keep_mask = [
             t not in doomed
-            for t in zip(*[out.column(c).to_pylist() for c in dcols])
+            for t in zip(*[out.column(c).to_pylist() for _, c in dkeys])
         ]
         out = out.filter(pa.array(keep_mask, pa.bool_()))
     yield from out.to_batches()

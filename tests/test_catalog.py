@@ -496,9 +496,28 @@ def test_schema_evolution_rename_column(spark, catalog):
         table.rename_column("name", "x")
 
 
-def test_schema_evolution_drop_then_readd_does_not_resurrect(spark, catalog):
+def _both_reads(spark, warehouse, table, name):
+    """The native read and the DSv2 ``relative`` read of one table."""
+    from iceberg_relative_io_spark.sources.relative_datasource import (
+        RelativeDataSource,
+    )
+
+    spark.dataSource.register(RelativeDataSource)
+    dsv2 = (
+        spark.read.format("relative")
+        .option("warehouse", warehouse)
+        .option("table", name)
+        .load()
+    )
+    return [table.read(spark), dsv2]
+
+
+def test_schema_evolution_drop_then_readd_does_not_resurrect(spark, catalog, warehouse):
     """The Iceberg id-semantics test: drop a column, re-add the same name
-    — values written before the drop must NOT resurface."""
+    — values written before the drop must NOT resurface. Likewise after
+    a rename and a re-add of the old name: the old files hold the
+    renamed column under the re-added name, and must read NULL for it.
+    Both readers."""
     table = _make_table(spark, catalog, [(1, "old")], ns=("ev",), name="dr")
     table.drop_column("name")
     table.ops._should_refresh = True
@@ -506,8 +525,40 @@ def test_schema_evolution_drop_then_readd_does_not_resurrect(spark, catalog):
     table.add_column("name", "string")
     table.ops._should_refresh = True
     table.append(spark.createDataFrame([(2, "new")], "id long, name string"))
-    rows = {r.id: r.name for r in table.read(spark).collect()}
-    assert rows == {1: None, 2: "new"}, "pre-drop values must stay buried"
+    for df in _both_reads(spark, warehouse, table, "ev.dr"):
+        rows = {r.id: r.name for r in df.collect()}
+        assert rows == {1: None, 2: "new"}, "pre-drop values must stay buried"
+
+    table = _make_table(spark, catalog, [(1, "old")], ns=("ev",), name="rr")
+    table.rename_column("name", "label")
+    table.ops._should_refresh = True
+    table.add_column("name", "string")
+    table.ops._should_refresh = True
+    table.append(
+        spark.createDataFrame([(2, "lbl", "new")], "id long, label string, name string")
+    )
+    for df in _both_reads(spark, warehouse, table, "ev.rr"):
+        rows = {r.id: (r.label, r.name) for r in df.collect()}
+        assert rows == {1: ("old", None), 2: ("lbl", "new")}
+
+
+def test_mor_delete_survives_key_column_rename(spark, catalog, warehouse):
+    """An equality delete records its key columns' ids, so renaming the
+    key column afterwards neither breaks a read nor revives the deleted
+    row, and a key re-appended after the rename survives the delete.
+    Both readers."""
+    from pyspark.sql import functions as F
+
+    table = _make_table(spark, catalog, [(1, "a"), (2, "b")], ns=("ev",), name="mr")
+    table.delete_where_mor(spark, F.col("name") == "a", ["name"])
+    table.ops._should_refresh = True
+    table.rename_column("name", "kk")
+    table.ops._should_refresh = True
+    for df in _both_reads(spark, warehouse, table, "ev.mr"):
+        assert {(r.id, r.kk) for r in df.collect()} == {(2, "b")}
+    table.append(spark.createDataFrame([(3, "a")], "id long, kk string"))
+    for df in _both_reads(spark, warehouse, table, "ev.mr"):
+        assert {(r.id, r.kk) for r in df.collect()} == {(2, "b"), (3, "a")}
 
 
 def test_protocol_change_reread(spark, catalog):
@@ -1211,14 +1262,14 @@ def test_mor_delete_large_keyset_degrades_to_shuffled_hash(
     to take that path on fixture data)."""
     from pyspark.sql import functions as F
 
-    from iceberg_relative_io_spark.catalog import spark_table
+    from iceberg_relative_io_spark.catalog import scan
 
     table = _make_table(
         spark, catalog, [(i, f"n{i}") for i in range(10)], ns=("mor",), name="big"
     )
     table.delete_where_mor(spark, F.col("id") < 4, equality_cols=["id"])
     table.ops._should_refresh = True
-    monkeypatch.setattr(spark_table, "_BROADCAST_DELETE_MAX_BYTES", 0)
+    monkeypatch.setattr(scan, "_BROADCAST_DELETE_MAX_BYTES", 0)
     df = table.read(spark)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ShuffledHashJoin" in plan and "LeftAnti" in plan
@@ -1374,8 +1425,9 @@ def test_dynamic_partition_overwrite(spark, catalog):
 
 def test_partitioned_reads_across_multiple_appends(spark, catalog):
     """Regression: partitioned files from different per-snapshot data
-    dirs must read in one scan group per layout prefix (Spark's partition
-    discovery rejects mixed structures under one basePath)."""
+    dirs read in one scan. Spark's partition discovery rejected mixed
+    directory structures under one basePath; the read now takes identity
+    values from the manifest and discovers nothing from the paths."""
     catalog.create_namespace(("ma",))
     df1 = spark.createDataFrame([(1, "x")], "id long, k string")
     ops = catalog.create_table(("ma",), "t", df1.schema.jsonValue(), partition_by=["k"])
@@ -1386,6 +1438,95 @@ def test_partitioned_reads_across_multiple_appends(spark, catalog):
     got = {(r.id, r.k) for r in table.read(spark).collect()}
     assert got == {(1, "x"), (2, "y"), (3, "x")}
     assert {r.id for r in table.read(spark, partition_filter={"k": "x"}).collect()} == {1, 3}
+
+
+def test_native_read_is_one_plan_with_sequence_scoped_anti_joins(spark, catalog):
+    """An identity-partitioned table with appends in several snapshot
+    dirs and two MOR equality deletes at different sequences reads as
+    ONE plan: one parquet scan over every data file, at most one scan
+    per equality key set, and no pickled-RDD relation. Building a
+    pruned read starts no Spark job: every schema and partition value
+    comes from the manifests. The scoping holds inside the plan: a key
+    re-appended after its delete survives."""
+    import time
+    import uuid
+    from urllib.parse import unquote
+
+    from pyspark.sql import functions as F
+
+    from iceberg_relative_io_spark.catalog.scan import _norm_path_py
+
+    catalog.create_namespace(("op",))
+    schema = "id long, v string, part int"
+
+    def batch(b):
+        return [(b * 100 + i, f"v{i % 5}", i % 4) for i in range(12)]
+
+    ops = catalog.create_table(
+        ("op",), "t", spark.createDataFrame([], schema).schema.jsonValue(),
+        partition_by=["part"],
+    )
+    table = RelativeTable(ops)
+    rows = []
+    for b in range(2):
+        table.append(spark.createDataFrame(batch(b), schema))
+        rows += batch(b)
+    table.delete_where_mor(spark, F.col("id") < 3, ["id"])
+    rows = [r for r in rows if r[0] >= 3]
+    table.append(spark.createDataFrame(batch(2) + [(1, "back", 1)], schema))
+    rows += batch(2) + [(1, "back", 1)]
+    table.delete_where_mor(spark, F.col("v") == "v4", ["v"])
+    rows = [r for r in rows if r[1] != "v4"]
+    table.append(spark.createDataFrame(batch(3) + [(204, "v4", 0)], schema))
+    rows += batch(3) + [(204, "v4", 0)]
+    table.ops._should_refresh = True
+
+    meta = table.ops.current()
+    dels = table._delete_files(meta, meta["current-snapshot-id"])
+    assert len({d["_snap"] for d in dels}) == 2
+    norm = lambda p: _norm_path_py(table.ops.io.spark_path(p))  # noqa: E731
+    data_files = {norm(f["path"]) for f in table.scan_files()}
+    assert len(data_files) <= 32
+    kinds: dict = {}
+    for d in dels:
+        kinds.setdefault(tuple(d["equality-cols"]), set()).add(norm(d["path"]))
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "construct only", False)
+    try:
+        df = table.read(spark)
+        pruned = table.read(spark, partition_filter={"part": 1})
+        # a later job that has reached the tracker: so has every earlier one
+        sc.setJobGroup(group + "-marker", "marker", False)
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 10
+    while not tracker.getJobIdsForGroup(group + "-marker"):
+        assert time.monotonic() < deadline
+        time.sleep(0.01)
+    assert list(tracker.getJobIdsForGroup(group)) == []
+
+    scans = []
+    stack = [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+        if node.nodeName().startswith("Scan parquet"):
+            files = node.relation().location().inputFiles()
+            scans.append({_norm_path_py(unquote(f)) for f in files})
+    assert [s for s in scans if s & data_files] == [data_files]
+    delete_scans = [s for s in scans if not s & data_files]
+    assert len(scans) == 1 + len(delete_scans) and len(delete_scans) <= len(kinds)
+    for s in delete_scans:
+        assert sum(s <= files for files in kinds.values()) == 1
+    assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()
+
+    assert sorted(map(tuple, df.collect())) == sorted(rows)
+    assert sorted(map(tuple, pruned.collect())) == sorted(r for r in rows if r[2] == 1)
 
 
 def test_metadata_gc_runs_parallel_and_keeps_window(tmp_path):

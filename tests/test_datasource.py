@@ -645,6 +645,39 @@ def test_dsv2_writer_keeps_null_partition_rows(spark, wh):
     assert {(r.id, r.kind) for r in t.read(spark).collect()} == got
 
 
+def test_identity_values_read_from_manifest(spark, wh):
+    """Both readers take identity partition values from the manifest,
+    never from directory names: after a DSv2 write, a value Spark's
+    hive-dir discovery would unescape ("a%41b" read as "aAb"), one
+    holding "=", one with a space, and NULL all read back unchanged."""
+    values = ["a%41b", "x=y", "a b", None]
+    df = spark.createDataFrame(list(enumerate(values)), "id long, k string")
+    cat = FsCatalog(wh)
+    if ("ns",) not in cat.list_namespaces():
+        cat.create_namespace(("ns",))
+    cat.create_table(("ns",), "esc", df.schema.jsonValue(), partition_by=["k"])
+    (
+        df.write.format("relative")
+        .option("warehouse", wh)
+        .option("table", "ns.esc")
+        .mode("append")
+        .save()
+    )
+    t = RelativeTable(cat.load_table(("ns",), "esc"))
+    assert {f["partition"]["k"] for f in t.scan_files()} == {
+        "a%41b", "x=y", "a b", "__HIVE_DEFAULT_PARTITION__"
+    }
+    want = set(enumerate(values))
+    dsv2 = (
+        spark.read.format("relative")
+        .option("warehouse", wh)
+        .option("table", "ns.esc")
+        .load()
+    )
+    for df in (dsv2, t.read(spark)):
+        assert {(r.id, r.k) for r in df.collect()} == want
+
+
 @pytest.mark.parametrize(
     "ddl, values",
     [

@@ -19,7 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from iceberg_relative_io_spark.catalog import FsCatalog, RelativeTable
-from iceberg_relative_io_spark.catalog import avro_ocf, iceberg_export
+from iceberg_relative_io_spark.catalog import avro_ocf, iceberg_export, scan
 from iceberg_relative_io_spark.sources.tables import load_table
 
 
@@ -820,8 +820,8 @@ def test_position_delete_large_set_degrades_to_shuffled_hash(
     iceberg_export.write_position_deletes(
         dest, {_first_data_file(dest): [0, 3, 7]}
     )
-    monkeypatch.setattr(iceberg_export, "_BROADCAST_DELETE_MAX_BYTES", 0)
-    monkeypatch.setattr(iceberg_export, "_BROADCAST_DELETE_MAX_ROWS", 0)
+    monkeypatch.setattr(scan, "_BROADCAST_DELETE_MAX_BYTES", 0)
+    monkeypatch.setattr(scan, "_BROADCAST_DELETE_MAX_ROWS", 0)
     df = iceberg_export.read_iceberg(spark, dest)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ShuffledHashJoin" in plan and "LeftAnti" in plan
@@ -841,8 +841,8 @@ def test_equality_delete_large_set_degrades_to_shuffled_hash(
     table.delete_where_mor(spark, F.col("n_regionkey") == 0, ["n_regionkey"])
     dest = tempfile.mkdtemp(prefix="iceexp_out_")
     iceberg_export.export_iceberg(table, dest)
-    monkeypatch.setattr(iceberg_export, "_BROADCAST_DELETE_MAX_BYTES", 0)
-    monkeypatch.setattr(iceberg_export, "_BROADCAST_DELETE_MAX_ROWS", 0)
+    monkeypatch.setattr(scan, "_BROADCAST_DELETE_MAX_BYTES", 0)
+    monkeypatch.setattr(scan, "_BROADCAST_DELETE_MAX_ROWS", 0)
     df = iceberg_export.read_iceberg(spark, dest)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ShuffledHashJoin" in plan and "LeftAnti" in plan
