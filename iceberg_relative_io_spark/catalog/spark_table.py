@@ -41,6 +41,20 @@ _STREAM_EPOCH_PROP = "stream.epoch."
 # Spark's hive-layout directory value for a NULL partition
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
+# the characters Spark's ExternalCatalogUtils.escapePathName encodes as
+# %XX in a partition directory name (its non-Windows set)
+_HIVE_ESCAPED = frozenset("\"#%'*/:=?\\\x7f{[]^" + "".join(map(chr, range(1, 32))))
+
+
+def hive_segment(key: str, value: str) -> str:
+    """The ``key=value`` directory segment Spark writes for one identity
+    partition value; :meth:`RelativeTable._partition_values` inverts it."""
+
+    def esc(s: str) -> str:
+        return "".join(f"%{ord(c):02X}" if c in _HIVE_ESCAPED else c for c in s)
+
+    return f"{esc(key)}={esc(value)}"
+
 
 def _epoch_key_parts(epoch_key) -> tuple[str, int] | None:
     """Split a checkpoint-scoped epoch key ``<ckpt-hash>:<batchId>``;
@@ -165,14 +179,15 @@ class RelativeTable:
         order (':' is 0x3A but its escape '%3A' starts at 0x25, so an
         escaped timestamp at a range bound was wrongly skipped), and
         both readers restore the stored string as the column value —
-        all of which silently diverge on the escaped form."""
+        all of which silently diverge on the escaped form. Inverts
+        :func:`hive_segment`."""
         from urllib.parse import unquote
 
         out = {}
         for seg in rel_path.split("/")[:-1]:
             if "=" in seg:
                 k, _, v = seg.partition("=")
-                out[k] = unquote(v)
+                out[unquote(k)] = unquote(v)
         return out
 
     def _write_snapshot_files(

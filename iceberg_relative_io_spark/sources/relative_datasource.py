@@ -275,10 +275,13 @@ def _write_task_batches(io, base_dir: str, part_cols: list, iterator) -> list:
     """Executor-side hive-layout writer shared by the batch and stream
     sinks: split each Arrow batch by identity-partition value, write one
     parquet file per (task, partition), return (rel, size, partition_json)
-    tuples for the driver-side manifest."""
+    tuples for the driver-side manifest. Directory segments are escaped
+    as Spark escapes them; the manifest keeps the raw values."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
+
+    from iceberg_relative_io_spark.catalog.spark_table import hive_segment
 
     def _open(rel: str, schema):
         io.fs.create_dir(io._fs_path(rel.rsplit("/", 1)[0]), recursive=True)
@@ -331,7 +334,7 @@ def _write_task_batches(io, base_dir: str, part_cols: list, iterator) -> list:
                     for v in combo
                 ]
                 segs = "/".join(
-                    f"{c}={v}" for c, v in zip(part_cols, seg_vals)
+                    hive_segment(c, v) for c, v in zip(part_cols, seg_vals)
                 )
                 rel = f"{base_dir}/{segs}/part-{uuid.uuid4().hex}.parquet"
                 writers[combo] = [
@@ -349,6 +352,26 @@ def _write_task_batches(io, base_dir: str, part_cols: list, iterator) -> list:
     return files
 
 
+def _committed_entries(table, messages, column_ids: dict | None) -> list[dict]:
+    """Driver side: the manifest entries for the files the write tasks
+    report. Each records the ``column-ids`` map its files were written
+    under, so a later rename still reads them by id."""
+    entries = []
+    for m in messages:
+        if m is None:
+            continue
+        for rel, size, pjson in m.files:
+            entry = {"path": rel, "size-bytes": size}
+            part = json.loads(pjson)
+            if part:
+                entry["partition"] = part
+            if column_ids:
+                entry["column-ids"] = dict(column_ids)
+            entry.update(table._file_stats(rel))
+            entries.append(entry)
+    return entries
+
+
 class RelativeWriter(DataSourceArrowWriter):
     def __init__(self, options, schema: StructType, overwrite: bool):
         from iceberg_relative_io_spark.catalog.spark_table import parse_partition_field
@@ -363,6 +386,8 @@ class RelativeWriter(DataSourceArrowWriter):
         self.part_cols = [f["name"] for f in fields]
         self.options = options
         self.io = table.ops.io
+        # the names the tasks write under are the schema's at planning
+        self.column_ids = table.ops.current().get("column-ids")
         self.snap_dir = table.ops.data_location(f"snap-{uuid.uuid4()}")
         self.overwrite = overwrite
 
@@ -379,17 +404,7 @@ class RelativeWriter(DataSourceArrowWriter):
     def commit(self, messages):
         """Driver side: commit messages -> manifest entries -> snapshot."""
         table = _load_table(self.options)
-        entries = []
-        for m in messages:
-            if m is None:
-                continue
-            for rel, size, pjson in m.files:
-                entry = {"path": rel, "size-bytes": size}
-                part = json.loads(pjson)
-                if part:
-                    entry["partition"] = part
-                entry.update(table._file_stats(rel))
-                entries.append(entry)
+        entries = _committed_entries(table, messages, self.column_ids)
         table._commit_snapshot("overwrite" if self.overwrite else "append", entries)
 
     def abort(self, messages):
@@ -422,6 +437,7 @@ class RelativeStreamWriter(DataSourceStreamArrowWriter):
         self.part_cols = [f["name"] for f in fields]
         self.options = options
         self.io = table.ops.io
+        self.column_ids = table.ops.current().get("column-ids")
         self.data_root = table.ops.data_location("stream")
 
     def write(self, iterator):
@@ -451,20 +467,9 @@ class RelativeStreamWriter(DataSourceStreamArrowWriter):
         # snapshot alone could be expired between crash and replay)
         if table.seen_stream_epoch(self._batch_key(batchId)):
             return
-        entries = []
-        for m in messages:
-            if m is None:
-                continue
-            for rel, size, pjson in m.files:
-                entry = {"path": rel, "size-bytes": size}
-                part = json.loads(pjson)
-                if part:
-                    entry["partition"] = part
-                entry.update(table._file_stats(rel))
-                entries.append(entry)
         table._commit_snapshot(
             "append",
-            entries,
+            _committed_entries(table, messages, self.column_ids),
             extra_summary={"stream-batch-id": self._batch_key(batchId)},
         )
 

@@ -678,6 +678,90 @@ def test_identity_values_read_from_manifest(spark, wh):
         assert {(r.id, r.k) for r in df.collect()} == want
 
 
+def test_dsv2_writer_escapes_partition_segments(spark, wh):
+    """The DSv2 writer escapes each partition directory segment as Spark
+    does: a "/" no longer nests directories and a "%" survives the
+    re-parse. The manifest keeps the raw value, parsing each written
+    path gives it back, and both readers return every row."""
+    values = ["a/b", "x=y", "50%", "12:00"]
+    df = spark.createDataFrame(list(enumerate(values)), "id long, k string")
+    cat = FsCatalog(wh)
+    if ("ns",) not in cat.list_namespaces():
+        cat.create_namespace(("ns",))
+    cat.create_table(("ns",), "seg", df.schema.jsonValue(), partition_by=["k"])
+    (
+        df.write.format("relative")
+        .option("warehouse", wh)
+        .option("table", "ns.seg")
+        .mode("append")
+        .save()
+    )
+    t = RelativeTable(cat.load_table(("ns",), "seg"))
+    files = t.scan_files()
+    assert sorted(f["partition"]["k"] for f in files) == sorted(values)
+    for f in files:
+        assert RelativeTable._partition_values(f["path"]) == f["partition"]
+    want = set(enumerate(values))
+    dsv2 = (
+        spark.read.format("relative")
+        .option("warehouse", wh)
+        .option("table", "ns.seg")
+        .load()
+    )
+    for read in (dsv2, t.read(spark)):
+        assert {(r.id, r.k) for r in read.collect()} == want
+
+
+@pytest.mark.parametrize("sink", ["batch", "stream"])
+def test_dsv2_written_files_survive_rename(spark, wh, sink):
+    """Both DSv2 sinks record the table's column ids on every entry they
+    commit, so a column renamed after the write still reads its values
+    through both readers (without the ids it read NULL)."""
+    df = spark.createDataFrame([(1, "a")], "id long, name string")
+    cat = FsCatalog(wh)
+    if ("ns",) not in cat.list_namespaces():
+        cat.create_namespace(("ns",))
+    name = f"rn_{sink}"
+    cat.create_table(("ns",), name, df.schema.jsonValue())
+    if sink == "batch":
+        (
+            df.write.format("relative")
+            .option("warehouse", wh)
+            .option("table", f"ns.{name}")
+            .mode("append")
+            .save()
+        )
+    else:
+        src = RelativeTable(cat.create_table(("ns",), f"{name}_src", df.schema.jsonValue()))
+        src.append(df)
+        q = (
+            spark.readStream.format("relative")
+            .option("warehouse", wh)
+            .option("table", f"ns.{name}_src")
+            .load()
+            .writeStream.format("relative")
+            .option("warehouse", wh)
+            .option("table", f"ns.{name}")
+            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_rn_"))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    t = RelativeTable(cat.load_table(("ns",), name))
+    assert all("column-ids" in f for f in t.scan_files())
+    t.rename_column("name", "label")
+    dsv2 = (
+        spark.read.format("relative")
+        .option("warehouse", wh)
+        .option("table", f"ns.{name}")
+        .load()
+    )
+    for read in (t.read(spark), dsv2):
+        assert [tuple(r) for r in read.select("id", "label").collect()] == [(1, "a")]
+
+
 @pytest.mark.parametrize(
     "ddl, values",
     [
