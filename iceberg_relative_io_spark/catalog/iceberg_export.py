@@ -30,6 +30,15 @@ from the export side: ``export_iceberg(table, dest)`` writes
 ``write.metadata.compression=gzip`` switches the metadata artifact to
 ``v1.gz.metadata.json`` (A30 parity); ``read_iceberg`` probes both.
 
+Every metadata version — the export's v1 and each mirror commit — is
+loaded and committed through ``TableOperations`` (table_ops.py), the
+one commit protocol both table formats share: version hint, forward
+probe, directory-scan recovery, stale-base CAS with an atomic
+rename-if-absent, gzip codec. This module keeps only what is specific
+to the mirror: the ``format-version`` check, the spec's
+``metadata-log`` with its ``write.metadata.previous-versions-max`` cap,
+and a lost race surfacing as ``ValueError("concurrent commit: ...")``.
+
 Data files are NOT rewritten: manifests reference the table's existing
 parquet by absolute URI (valid Iceberg — locations may be absolute
 anywhere). Identity-partitioned columns are absent from those files
@@ -66,8 +75,8 @@ Beyond the one-shot export, the module maintains LIVE mirrors:
 ``append_iceberg`` commits incremental APPEND snapshots directly onto
 an exported directory (new data files laid out per the partition spec,
 a new manifest, every prior manifest carried forward so deletes keep
-their sequence scoping, and a ``v{N+1}`` metadata.json behind an atomic
-create-if-absent CAS); ``write_position_deletes`` commits external-style
+their sequence scoping, and a ``v{N+1}`` metadata.json committed
+through ``TableOperations``); ``write_position_deletes`` commits external-style
 ``content=1`` delete snapshots; ``rewrite_manifests_iceberg`` merges the
 accumulated per-commit manifests metadata-only (status=EXISTING,
 sequence numbers preserved) so a streaming mirror's planning cost stays
@@ -96,6 +105,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from iceberg_relative_io_spark.catalog import avro_ocf
+from iceberg_relative_io_spark.catalog.fileio import RelativeFileIO
+from iceberg_relative_io_spark.catalog.paths import is_absolute
 from iceberg_relative_io_spark.catalog.scan import (
     _local_frame, _norm_path_py, net_diff, plan_scan,
 )
@@ -104,6 +115,11 @@ from iceberg_relative_io_spark.catalog.spark_table import (
     RelativeTable,
     _epoch_key_parts,
     parse_partition_field,
+)
+from iceberg_relative_io_spark.catalog.table_ops import (
+    CommitFailedError,
+    NoSuchTableError,
+    TableOperations,
 )
 
 _EPOCH = date(1970, 1, 1)
@@ -1059,25 +1075,22 @@ def export_iceberg(
         "snapshot-log": snapshot_log,
         "metadata-log": [],
     }
-    # A30 parity: honor write.metadata.compression=gzip — the codec the
-    # reference probes for (HadoopRelativeTableOperations.java:160-162);
-    # read_iceberg probes plain first, then .gz, like our own reader
-    gz = (
-        meta.get("properties", {}).get("write.metadata.compression", "none")
-        == "gzip"
-    )
-    if gz:
-        import gzip as _gzip
-
+    # A30 parity: honor write.metadata.compression=gzip — the commit
+    # takes v1's codec from this property (reference
+    # HadoopRelativeTableOperations.java:160-162)
+    if meta.get("properties", {}).get("write.metadata.compression") == "gzip":
         doc["properties"]["write.metadata.compression"] = "gzip"
-        meta_path = os.path.join(dest_dir, "metadata", "v1.gz.metadata.json")
-        with _gzip.open(meta_path, "wt") as fh:
-            json.dump(doc, fh, indent=2)
-    else:
-        meta_path = os.path.join(dest_dir, "metadata", "v1.metadata.json")
-        with open(meta_path, "w") as fh:
-            json.dump(doc, fh, indent=2)
-    _write_version_hint(dest_dir, 1)
+    ops = _mirror_ops(dest_dir)
+    try:
+        ops.commit(0, doc)
+    except CommitFailedError as exc:
+        # v1 is create-if-absent: over an existing mirror the forward
+        # probe would never reach a rewritten v1, so refuse instead
+        raise ValueError(
+            f"export_iceberg: {dest_dir} already holds Iceberg metadata "
+            f"({exc}); export into an empty directory"
+        ) from None
+    meta_path = ops.io.absolute(ops.find_metadata_file(1))
     return {
         "metadata": meta_path,
         "manifest-list": head_info["manifest-list"],
@@ -1148,7 +1161,7 @@ def write_position_deletes(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    doc, version = _load_metadata_versioned(table_dir)
+    ops, doc, version = _open_mirror(table_dir)
     spec_fields = _spec_fields_from_doc(doc)
     entry_schema = _manifest_entry_schema(spec_fields)
 
@@ -1282,7 +1295,7 @@ def write_position_deletes(
     new_doc["snapshot-log"] = doc.get("snapshot-log", []) + [
         {"timestamp-ms": now_ms, "snapshot-id": snap_id}
     ]
-    meta_path = _commit_next_metadata(table_dir, version, doc, new_doc)
+    meta_path = _commit_mirror(ops, version, doc, new_doc)
     return {
         "delete-file": del_path,
         "manifest": manifest_path,
@@ -1433,11 +1446,12 @@ def append_iceberg(
     them), a new snapshot in a ``v{N+1}`` metadata.json, and the bumped
     version hint. ``write.metadata.compression=gzip`` is honored.
 
-    Concurrency: the new metadata file is created with an atomic
-    create-if-absent (temp write + ``os.link``), so two racing appends
-    cannot both claim version N+1 — the loser gets a ``FileExistsError``
-    wrapped in ``ValueError`` and must reload + retry, the same
-    optimistic-commit contract as the native format (table_ops.py) and
+    Concurrency: the new metadata file is committed through
+    ``TableOperations.commit`` (table_ops.py), the protocol the native
+    format uses: a stale-base check, then an atomic rename-if-absent to
+    ``v{N+1}``, so two racing appends cannot both claim version N+1 —
+    the loser gets ``ValueError("concurrent commit: ...")`` and must
+    reload + retry, the optimistic-commit contract of
     HadoopTableOperations.
 
     Partitioned specs are honored: identity / day / month / bucket[N]
@@ -1448,7 +1462,7 @@ def append_iceberg(
     bucket/partition pruning keeps working on appended files). Refused
     with the remedy in the message: schema mismatch, and truncate on
     non-string sources (the native layout never produces those)."""
-    doc, version = _load_metadata_versioned(table_dir)
+    ops, doc, version = _open_mirror(table_dir)
 
     spec = next(
         p for p in doc["partition-specs"] if p["spec-id"] == doc["default-spec-id"]
@@ -1569,7 +1583,7 @@ def append_iceberg(
     new_doc["snapshot-log"] = doc.get("snapshot-log", []) + [
         {"timestamp-ms": now_ms, "snapshot-id": snap_id}
     ]
-    meta_path = _commit_next_metadata(table_dir, version, doc, new_doc)
+    meta_path = _commit_mirror(ops, version, doc, new_doc)
     return {
         "metadata": meta_path,
         "manifest": manifest_path,
@@ -1613,14 +1627,16 @@ def seen_stream_epoch_iceberg(table_dir: str, epoch_key: str) -> bool:
     )
 
 
-def _commit_next_metadata(
-    table_dir: str, version: int, doc: dict, new_doc: dict
+def _commit_mirror(
+    ops: TableOperations, version: int, doc: dict, new_doc: dict
 ) -> str:
-    """Write ``new_doc`` as metadata version N+1 with an atomic
-    create-if-absent (temp write + ``os.link`` — content is complete at
-    link time, so a concurrent reader never sees a partial file, and a
-    racing committer gets a conflict instead of an overwrite), then bump
-    the version hint. Honors ``write.metadata.compression=gzip``.
+    """Commit ``new_doc`` as version N+1 of the mirror ``ops`` loaded
+    (``_open_mirror``) through ``TableOperations.commit`` — the one
+    commit protocol both formats share: stale-base CAS, atomic
+    rename-if-absent to ``v{N+1}``, version hint, codec from the base's
+    ``write.metadata.compression``. A lost race surfaces as
+    ``ValueError("concurrent commit: ...")``; callers reload and retry.
+    Returns the absolute path of the new metadata file.
 
     EVERY committed version records its predecessor in metadata-log
     here — centralized so metadata-only commits (evolution, refs,
@@ -1629,7 +1645,7 @@ def _commit_next_metadata(
     new_doc["metadata-log"] = doc.get("metadata-log", []) + [
         {
             "timestamp-ms": doc["last-updated-ms"],
-            "metadata-file": _current_metadata_file(table_dir, version),
+            "metadata-file": ops.io.absolute(ops.find_metadata_file(version)),
         }
     ]
     # cap the log like Iceberg's write.metadata.previous-versions-max
@@ -1637,7 +1653,7 @@ def _commit_next_metadata(
     # times, and an uncapped log makes every metadata.json O(commits)
     # — the one part of a commit that would otherwise grow without
     # bound. Oldest entries drop first; the files themselves stay on
-    # disk (delete-after-commit is a separate property in Iceberg too).
+    # disk unless write.metadata.delete-after-commit.enabled is set.
     try:
         max_prev = int(
             doc.get("properties", {}).get(
@@ -1648,34 +1664,20 @@ def _commit_next_metadata(
         max_prev = 100
     if max_prev > 0 and len(new_doc["metadata-log"]) > max_prev:
         new_doc["metadata-log"] = new_doc["metadata-log"][-max_prev:]
-    gz = doc.get("properties", {}).get("write.metadata.compression") == "gzip"
-    suffix = "gz.metadata.json" if gz else "metadata.json"
-    meta_path = os.path.join(table_dir, "metadata", f"v{version + 1}.{suffix}")
-    tmp_path = os.path.join(
-        table_dir, "metadata", f".tmp-{uuid.uuid4()}.{suffix}"
-    )
-    if gz:
-        import gzip as _gzip
-
-        with _gzip.open(tmp_path, "wt") as fh:
-            json.dump(new_doc, fh, indent=2)
-    else:
-        with open(tmp_path, "w") as fh:
-            json.dump(new_doc, fh, indent=2)
     try:
-        os.link(tmp_path, meta_path)
-    except FileExistsError:
+        new_version = ops.commit(version, new_doc)
+    except CommitFailedError as exc:
         raise ValueError(
-            f"concurrent commit: metadata version {version + 1} already "
-            "exists — reload and retry the append"
+            f"concurrent commit: {exc} — reload and retry"
         ) from None
-    finally:
-        try:
-            os.unlink(tmp_path)
-        except OSError:
-            pass
-    _write_version_hint(table_dir, version + 1)
-    return meta_path
+    return ops.io.absolute(ops.find_metadata_file(new_version))
+
+
+def _commit_next_metadata(
+    table_dir: str, version: int, doc: dict, new_doc: dict
+) -> str:
+    """``_commit_mirror`` on a fresh ops for ``table_dir``."""
+    return _commit_mirror(_mirror_ops(table_dir), version, doc, new_doc)
 
 
 def rewrite_manifests_iceberg(table_dir: str) -> dict:
@@ -1692,7 +1694,7 @@ def rewrite_manifests_iceberg(table_dir: str) -> dict:
     ``replace`` snapshot through the same metadata CAS as the append
     path. No data file is touched: cost is O(manifest entries), metadata
     only — the exported twin of ``RelativeTable.rewrite_manifests``."""
-    doc, version = _load_metadata_versioned(table_dir)
+    ops, doc, version = _open_mirror(table_dir)
     cur = next(
         s for s in doc["snapshots"]
         if s["snapshot-id"] == doc["current-snapshot-id"]
@@ -1795,7 +1797,7 @@ def rewrite_manifests_iceberg(table_dir: str) -> dict:
     new_doc["snapshot-log"] = doc.get("snapshot-log", []) + [
         {"timestamp-ms": now_ms, "snapshot-id": snap_id}
     ]
-    meta_path = _commit_next_metadata(table_dir, version, doc, new_doc)
+    meta_path = _commit_mirror(ops, version, doc, new_doc)
     return {
         "metadata": meta_path,
         "manifest": manifest_path,
@@ -1878,7 +1880,7 @@ def delete_where_iceberg(
     appended later — the exact semantics of the native
     ``RelativeTable.delete_where_mor`` (spark_table.py), re-expressed as
     external Iceberg artifacts."""
-    doc, version = _load_metadata_versioned(table_dir)
+    ops, doc, version = _open_mirror(table_dir)
     schema_json = next(
         s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
     )
@@ -1905,6 +1907,7 @@ def delete_where_iceberg(
     # apart from this helper before the round-7 review merged them)
     return _commit_delete_manifest(
         table_dir,
+        ops,
         doc,
         version,
         entries,
@@ -1953,7 +1956,7 @@ def delete_positions_iceberg(
     tuple is smaller than the position list); use position deletes when
     re-deriving the key set is the expensive part or the rows are
     identified by provenance."""
-    doc, version = _load_metadata_versioned(table_dir)
+    ops, doc, version = _open_mirror(table_dir)
 
     live = read_iceberg(spark, table_dir, _with_positions=True)
     # recorded-path restore: normalized URI -> the manifest's exact path
@@ -1984,6 +1987,7 @@ def delete_positions_iceberg(
         }
     return _commit_delete_manifest(
         table_dir,
+        ops,
         doc,
         version,
         entries,
@@ -2096,6 +2100,7 @@ def _write_position_delete_files(
 
 def _commit_delete_manifest(
     table_dir: str,
+    ops: TableOperations,
     doc: dict,
     version: int,
     entries: list[dict],
@@ -2190,7 +2195,7 @@ def _commit_delete_manifest(
     new_doc["snapshot-log"] = doc.get("snapshot-log", []) + [
         {"timestamp-ms": now_ms, "snapshot-id": snap_id}
     ]
-    meta_path = _commit_next_metadata(table_dir, version, doc, new_doc)
+    meta_path = _commit_mirror(ops, version, doc, new_doc)
     return {
         "metadata": meta_path,
         "manifest": manifest_path,
@@ -2232,7 +2237,7 @@ def update_where_iceberg(
     ``RelativeTable.update_where_mor`` semantics (spark_table.py) as
     external Iceberg v2 artifacts; parity target is the reference's
     Iceberg 1.6.1 / format-version 2 row-level DML (README.md:25,94)."""
-    doc, version = _load_metadata_versioned(table_dir)
+    ops, doc, version = _open_mirror(table_dir)
     schema_json = next(
         s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
     )
@@ -2290,6 +2295,7 @@ def update_where_iceberg(
 
     meta_path, ml_path = _commit_mor_overwrite(
         table_dir,
+        ops,
         version,
         doc,
         data_entries,
@@ -2311,6 +2317,7 @@ def update_where_iceberg(
 
 def _commit_mor_overwrite(
     table_dir: str,
+    ops: TableOperations,
     version: int,
     doc: dict,
     data_entries: list[dict],
@@ -2419,16 +2426,8 @@ def _commit_mor_overwrite(
     new_doc["snapshot-log"] = doc.get("snapshot-log", []) + [
         {"timestamp-ms": now_ms, "snapshot-id": snap_id}
     ]
-    meta_path = _commit_next_metadata(table_dir, version, doc, new_doc)
+    meta_path = _commit_mirror(ops, version, doc, new_doc)
     return meta_path, ml_path
-
-
-def _current_metadata_file(table_dir: str, version: int) -> str:
-    """Path of the metadata file for ``version`` (plain or gzip)."""
-    plain = os.path.join(table_dir, "metadata", f"v{version}.metadata.json")
-    if os.path.exists(plain):
-        return plain
-    return os.path.join(table_dir, "metadata", f"v{version}.gz.metadata.json")
 
 
 def _merge_matched_keys(
@@ -2486,7 +2485,7 @@ def merge_iceberg(
     if when_not_matched not in ("insert", None):
         raise ValueError(f"when_not_matched must be 'insert' or None, got {when_not_matched!r}")
 
-    doc, version = _load_metadata_versioned(table_dir)
+    ops, doc, version = _open_mirror(table_dir)
     schema_json = next(
         s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
     )
@@ -2587,6 +2586,7 @@ def merge_iceberg(
 
     meta_path, ml_path = _commit_mor_overwrite(
         table_dir,
+        ops,
         version,
         doc,
         data_entries,
@@ -2630,7 +2630,7 @@ def overwrite_partitions_iceberg(
     written under a non-default partition spec (partition tuples would
     not be comparable), and truncate-on-non-string layouts (via
     ``_write_data_files``)."""
-    doc, version = _load_metadata_versioned(table_dir)
+    ops, doc, version = _open_mirror(table_dir)
     schema_json = next(
         s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
     )
@@ -2819,7 +2819,7 @@ def overwrite_partitions_iceberg(
     new_doc["snapshot-log"] = doc.get("snapshot-log", []) + [
         {"timestamp-ms": now_ms, "snapshot-id": snap_id}
     ]
-    meta_path = _commit_next_metadata(table_dir, version, doc, new_doc)
+    meta_path = _commit_mirror(ops, version, doc, new_doc)
     return {
         "metadata": meta_path,
         "manifest-list": ml_path,
@@ -2844,7 +2844,7 @@ def compact_iceberg(spark: SparkSession, table_dir: str) -> dict:
     reaps the superseded artifacts the mirror owns. This is also the
     unlock for ``import_iceberg`` on position-deleted tables: compact in
     place, then import the materialized state zero-copy."""
-    doc, version = _load_metadata_versioned(table_dir)
+    ops, doc, version = _open_mirror(table_dir)
     schema_json = next(
         s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
     )
@@ -2932,7 +2932,7 @@ def compact_iceberg(spark: SparkSession, table_dir: str) -> dict:
     new_doc["snapshot-log"] = doc.get("snapshot-log", []) + [
         {"timestamp-ms": now_ms, "snapshot-id": snap_id}
     ]
-    meta_path = _commit_next_metadata(table_dir, version, doc, new_doc)
+    meta_path = _commit_mirror(ops, version, doc, new_doc)
     return {
         "metadata": meta_path,
         "manifest": manifest_path,
@@ -2957,7 +2957,7 @@ def expire_snapshots_iceberg(table_dir: str, keep_last: int = 1) -> dict:
     Commits through the same metadata CAS as append/rewrite. Completes
     the mirror lifecycle: append (O(batch) commits) → rewrite (O(1)
     planning) → expire (bounded storage)."""
-    doc, version = _load_metadata_versioned(table_dir)
+    ops, doc, version = _open_mirror(table_dir)
     by_id = {s["snapshot-id"]: s for s in doc["snapshots"]}
     chain = []
     sid = doc.get("current-snapshot-id")
@@ -3026,7 +3026,7 @@ def expire_snapshots_iceberg(table_dir: str, keep_last: int = 1) -> dict:
         h for h in doc.get("snapshot-log", [])
         if h["snapshot-id"] in retained_ids
     ]
-    meta_path = _commit_next_metadata(table_dir, version, doc, new_doc)
+    meta_path = _commit_mirror(ops, version, doc, new_doc)
     return {
         "expired": len(expired),
         "deleted-files": deleted,
@@ -3071,7 +3071,7 @@ def evolve_schema_iceberg(
     if not add and not rename and not drop:
         raise ValueError("nothing to evolve: pass add=, rename=, or drop=")
 
-    doc, version = _load_metadata_versioned(table_dir)
+    ops, doc, version = _open_mirror(table_dir)
     schema_json = next(
         s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
     )
@@ -3229,7 +3229,7 @@ def evolve_schema_iceberg(
         **doc.get("properties", {}),
         "schema.name-mapping.default": json.dumps(new_mapping),
     }
-    meta_path = _commit_next_metadata(table_dir, version, doc, new_doc)
+    meta_path = _commit_mirror(ops, version, doc, new_doc)
     return {
         "metadata": meta_path,
         "schema-id": new_schema_id,
@@ -3284,7 +3284,7 @@ def remove_orphan_files_iceberg(
     Unreadable metadata aborts the cleanup rather than misclassifying
     the files it references. The native twin is
     ``RelativeTable.remove_orphan_files``."""
-    doc, _version = _load_metadata_versioned(table_dir)
+    doc = _load_metadata(table_dir)
     mls, files = _snapshot_refs(doc["snapshots"], skip_deleted=False)
     referenced = {os.path.realpath(p) for p in mls | files} | {
         os.path.realpath(s["manifest-list"]) for s in doc["snapshots"]
@@ -3316,7 +3316,7 @@ def remove_orphan_files_iceberg(
         # only avro manifests / manifest lists and abandoned temp files
         # are candidates — metadata.json versions and the hint are the
         # commit history itself
-        if not (name.endswith(".avro") or name.startswith(".tmp-")):
+        if not (name.endswith((".avro", ".tmp")) or name.startswith(".tmp-")):
             continue
         p = os.path.realpath(os.path.join(meta_root, name))
         if p not in referenced:
@@ -3352,7 +3352,7 @@ def set_ref_iceberg(
         raise ValueError("refusing to set 'main' — use rollback_iceberg")
     if ref_type not in ("tag", "branch"):
         raise ValueError(f"ref_type must be 'tag' or 'branch', got {ref_type!r}")
-    doc, version = _load_metadata_versioned(table_dir)
+    ops, doc, version = _open_mirror(table_dir)
     sid = snapshot_id if snapshot_id is not None else doc["current-snapshot-id"]
     if sid is None or all(s["snapshot-id"] != sid for s in doc["snapshots"]):
         raise ValueError(
@@ -3365,7 +3365,7 @@ def set_ref_iceberg(
         **doc.get("refs", {}),
         name: {"snapshot-id": sid, "type": ref_type},
     }
-    meta_path = _commit_next_metadata(table_dir, version, doc, new_doc)
+    meta_path = _commit_mirror(ops, version, doc, new_doc)
     return {"metadata": meta_path, "ref": name, "snapshot-id": sid, "type": ref_type}
 
 
@@ -3374,7 +3374,7 @@ def drop_ref_iceberg(table_dir: str, name: str) -> dict:
     missing ref is an error so callers notice typos."""
     if name == "main":
         raise ValueError("refusing to drop 'main'")
-    doc, version = _load_metadata_versioned(table_dir)
+    ops, doc, version = _open_mirror(table_dir)
     refs = dict(doc.get("refs", {}))
     if name not in refs:
         raise ValueError(f"no such ref: {name!r}")
@@ -3382,7 +3382,7 @@ def drop_ref_iceberg(table_dir: str, name: str) -> dict:
     new_doc = dict(doc)
     new_doc["last-updated-ms"] = int(time.time() * 1000)
     new_doc["refs"] = refs
-    meta_path = _commit_next_metadata(table_dir, version, doc, new_doc)
+    meta_path = _commit_mirror(ops, version, doc, new_doc)
     return {"metadata": meta_path, "ref": name, "was": dropped}
 
 
@@ -3397,7 +3397,7 @@ def rollback_iceberg(table_dir: str, snapshot_id: int) -> dict:
     Rolling back to an expired snapshot is refused by name — the same
     contract the native format pins (a reaped ancestor cannot be
     restored; see tools/fuzz_evolution.py)."""
-    doc, version = _load_metadata_versioned(table_dir)
+    ops, doc, version = _open_mirror(table_dir)
     if all(s["snapshot-id"] != snapshot_id for s in doc["snapshots"]):
         raise ValueError(
             f"snapshot {snapshot_id} not in table metadata — it may have "
@@ -3414,7 +3414,7 @@ def rollback_iceberg(table_dir: str, snapshot_id: int) -> dict:
     new_doc["snapshot-log"] = doc.get("snapshot-log", []) + [
         {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
     ]
-    meta_path = _commit_next_metadata(table_dir, version, doc, new_doc)
+    meta_path = _commit_mirror(ops, version, doc, new_doc)
     return {
         "metadata": meta_path,
         "snapshot-id": snapshot_id,
@@ -3610,89 +3610,47 @@ def _ident_value(tname, raw):
     return raw
 
 
-_VERSION_FILE_RE = re.compile(r"^v(\d+)\.(?:gz\.)?metadata\.json$")
+def _mirror_ops(table_dir: str) -> TableOperations:
+    """``TableOperations`` over a mirror directory: its parent is the
+    IO's warehouse and its name the ops' location, so the protocol's
+    files land under ``<table_dir>/metadata/``."""
+    path = table_dir.rstrip("/")
+    if not is_absolute(path):
+        path = os.path.abspath(path)
+    parent, name = path.rsplit("/", 1)
+    return TableOperations(RelativeFileIO(parent or "/"), name)
 
 
-def _write_version_hint(table_dir: str, version: int) -> None:
-    """Atomically replace ``version-hint.text`` (temp + ``os.replace``)
-    so a concurrent reader never observes a truncated/empty hint — the
-    hint is advisory (written after the metadata CAS), but it must never
-    be *corrupt*."""
-    meta = os.path.join(table_dir, "metadata")
-    tmp = os.path.join(meta, f".hint-{uuid.uuid4()}")
-    with open(tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(tmp, meta + "/version-hint.text")
-
-
-def _version_exists(table_dir: str, version: int) -> bool:
-    meta = os.path.join(table_dir, "metadata")
-    return os.path.exists(
-        os.path.join(meta, f"v{version}.metadata.json")
-    ) or os.path.exists(os.path.join(meta, f"v{version}.gz.metadata.json"))
+def _open_mirror(table_dir: str) -> tuple[TableOperations, dict, int]:
+    """The mirror's ops with its current document and that document's
+    version, resolved at one instant (pairing a doc with a version read
+    later is the lost-update hazard under concurrent commits). Pass the
+    ops on to ``_commit_mirror``: it already holds the base document."""
+    ops = _mirror_ops(table_dir)
+    doc = ops.refresh()
+    if doc["format-version"] != 2:
+        raise ValueError("only format-version 2 supported")
+    return ops, doc, ops.current_version()
 
 
 def _current_version(table_dir: str) -> int:
-    """Resolve the current metadata version the way the reference's
-    HadoopRelativeTableOperations does (A25/A28): best-effort hint, then
-    FORWARD PROBE past it (the hint is written after the commit CAS, so
-    it can trail a just-landed commit or be missing after a crash), and
-    a directory-scan recovery when the hint points at nothing (e.g. the
-    hinted file was never written or the hint is unreadable)."""
-    try:
-        with open(
-            os.path.join(table_dir, "metadata", "version-hint.text")
-        ) as fh:
-            version = int(fh.read().strip())
-    except (OSError, ValueError):
-        version = 0
-    while _version_exists(table_dir, version + 1):
-        version += 1
-    if version > 0 and _version_exists(table_dir, version):
-        return version
-    found = 0
-    try:
-        for name in os.listdir(os.path.join(table_dir, "metadata")):
-            m = _VERSION_FILE_RE.match(name)
-            if m:
-                found = max(found, int(m.group(1)))
-    except OSError:
-        pass
-    if found == 0:
-        raise FileNotFoundError(
-            f"no metadata versions under {table_dir}/metadata"
-        )
-    return found
+    """The mirror's head version (``TableOperations.find_version``)."""
+    version = _mirror_ops(table_dir).find_version()
+    if version == 0:
+        raise NoSuchTableError(f"no metadata versions under {table_dir}/metadata")
+    return version
 
 
 def _load_metadata_versioned(table_dir: str) -> tuple[dict, int]:
-    """Resolve the current version, then load exactly THAT version's
-    document — returning the pair keeps committers from pairing a doc
-    with a version resolved at a different instant (the lost-update
-    hazard under concurrent commits)."""
-    version = _current_version(table_dir)
-    plain = os.path.join(table_dir, "metadata", f"v{version}.metadata.json")
-    if os.path.exists(plain):
-        with open(plain) as fh:
-            doc = json.load(fh)
-    else:  # gzip codec probe (write.metadata.compression=gzip)
-        import gzip as _gzip
-
-        with _gzip.open(
-            os.path.join(table_dir, "metadata", f"v{version}.gz.metadata.json"),
-            "rt",
-        ) as fh:
-            doc = json.load(fh)
-    if doc["format-version"] != 2:
-        raise ValueError("only format-version 2 supported")
-    return doc, version
+    """``(doc, version)`` of the mirror's current metadata."""
+    return _open_mirror(table_dir)[1:]
 
 
 def _load_metadata(table_dir: str) -> dict:
-    """version-hint (+ forward probe) -> current metadata.json — the one
-    loader shared by ``read_iceberg`` and ``import_iceberg`` so the two
-    entry points cannot drift."""
-    return _load_metadata_versioned(table_dir)[0]
+    """The mirror's current metadata document — the one loader shared by
+    ``read_iceberg`` and ``import_iceberg`` so the entry points cannot
+    drift."""
+    return _open_mirror(table_dir)[1]
 
 
 def _avro_records(path: str) -> list[dict]:

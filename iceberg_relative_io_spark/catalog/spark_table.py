@@ -759,21 +759,16 @@ class RelativeTable:
     # -- branches (refs) -----------------------------------------------------------
     def create_branch(self, name: str, snapshot_id: int | None = None) -> None:
         """Create a named ref at a snapshot (default: current head)."""
-        for _ in range(_COMMIT_RETRIES):
-            meta = json.loads(json.dumps(self.ops.current()))
-            base = self.ops.current_version()
+
+        def mutate(meta: dict) -> None:
             refs = meta.setdefault("refs", {})
             if name in refs:
                 raise ValueError(f"branch {name!r} already exists")
             refs[name] = (
                 snapshot_id if snapshot_id is not None else meta.get("current-snapshot-id")
             )
-            try:
-                self.ops.commit(base, meta)
-                return
-            except CommitFailedError:
-                self.ops._should_refresh = True
-        raise CommitFailedError(f"create_branch({name}) lost all commit races")
+
+        self._evolve(f"create_branch({name})", mutate)
 
     def branches(self) -> dict:
         return dict(self.ops.current().get("refs", {}))
@@ -782,9 +777,8 @@ class RelativeTable:
         """Immutable named ref (Iceberg tag): pins a snapshot under a
         human name — 'v1-release', 'audit-2026-08' — for reproducible
         reads. Unlike a branch, a tag can never be committed to."""
-        for _ in range(_COMMIT_RETRIES):
-            meta = json.loads(json.dumps(self.ops.current()))
-            base = self.ops.current_version()
+
+        def mutate(meta: dict) -> None:
             tags = meta.setdefault("tags", {})
             if name in tags:
                 raise ValueError(f"tag {name!r} already exists")
@@ -795,12 +789,8 @@ class RelativeTable:
                 raise ValueError("cannot tag an empty table")
             self._snapshot_entry(meta, snap)  # must exist
             tags[name] = snap
-            try:
-                self.ops.commit(base, meta)
-                return
-            except CommitFailedError:
-                self.ops._should_refresh = True
-        raise CommitFailedError(f"create_tag({name}) lost all commit races")
+
+        self._evolve(f"create_tag({name})", mutate)
 
     def tags(self) -> dict:
         return dict(self.ops.current().get("tags", {}))
@@ -811,9 +801,8 @@ class RelativeTable:
         commits. History is preserved (the rolled-back snapshots stay
         time-travelable until expired); the snapshot-log records the
         rollback like any other head move."""
-        for _ in range(_COMMIT_RETRIES):
-            meta = json.loads(json.dumps(self.ops.current()))
-            base = self.ops.current_version()
+
+        def mutate(meta: dict) -> None:
             target = self._snapshot_entry(meta, snapshot_id)
             if target.get("expired"):
                 raise ValueError(f"snapshot {snapshot_id} has been expired")
@@ -843,12 +832,8 @@ class RelativeTable:
             meta["snapshot-log"].append(
                 {"timestamp-ms": int(time.time() * 1000), "snapshot-id": snapshot_id}
             )
-            try:
-                self.ops.commit(base, meta)
-                return
-            except CommitFailedError:
-                self.ops._should_refresh = True
-        raise CommitFailedError(f"rollback_to_snapshot({snapshot_id}) lost all commit races")
+
+        self._evolve(f"rollback_to_snapshot({snapshot_id})", mutate)
 
     def fast_forward(self, branch: str) -> None:
         """Write-audit-publish: point main at a branch's head. Appends
@@ -861,9 +846,8 @@ class RelativeTable:
         diverged main would drop every commit main gained since the
         branch was cut — data loss disguised as a publish. The caller
         re-stages on a fresh branch (or cherry-picks) instead."""
-        for _ in range(_COMMIT_RETRIES):
-            meta = json.loads(json.dumps(self.ops.current()))
-            base = self.ops.current_version()
+
+        def mutate(meta: dict) -> None:
             refs = meta.get("refs", {})
             if branch not in refs:
                 raise ValueError(f"no such branch {branch!r}")
@@ -893,12 +877,8 @@ class RelativeTable:
             meta["snapshot-log"].append(
                 {"timestamp-ms": int(time.time() * 1000), "snapshot-id": head}
             )
-            try:
-                self.ops.commit(base, meta)
-                return
-            except CommitFailedError:
-                self.ops._should_refresh = True
-        raise CommitFailedError(f"fast_forward({branch}) lost all commit races")
+
+        self._evolve(f"fast_forward({branch})", mutate)
 
     def cherry_pick_snapshot(self, snapshot_id: int) -> dict:
         """Iceberg's cherrypick_snapshot: re-apply ONE append snapshot's
@@ -1559,10 +1539,8 @@ class RelativeTable:
             raise ValueError(
                 "migrate_bucket_hash: table has no bucket[] partition field"
             )
-        last_err: Exception | None = None
-        for _ in range(_COMMIT_RETRIES):
-            meta = json.loads(json.dumps(self.ops.current()))
-            base_version = self.ops.current_version()
+
+        def mutate(meta: dict) -> dict:
             if meta.get("bucket-hash") == "murmur3":
                 raise ValueError(
                     "migrate_bucket_hash: table already hashes buckets "
@@ -1582,19 +1560,9 @@ class RelativeTable:
             if mig_snap is not None:
                 meta["bucket-hash-migration-snap"] = mig_snap
             meta["last-updated-ms"] = int(time.time() * 1000)
-            try:
-                self.ops.commit(base_version, meta)
-                return {
-                    "bucket-hash": "murmur3",
-                    "migration-snap": mig_snap,
-                }
-            except CommitFailedError as err:
-                last_err = err
-                self.ops._should_refresh = True
-        raise CommitFailedError(
-            f"migrate_bucket_hash failed after {_COMMIT_RETRIES} retries: "
-            f"{last_err}"
-        )
+            return {"bucket-hash": "murmur3", "migration-snap": mig_snap}
+
+        return self._evolve("migrate_bucket_hash", mutate)
 
     def rewrite_manifests(self) -> dict:
         """Manifest compaction (Iceberg's `rewrite_manifests` procedure):
@@ -1850,14 +1818,18 @@ class RelativeTable:
 
         self._evolve(f"update_partition_spec({new_spec})", mutate)
 
-    def _evolve(self, what: str, mutate) -> None:
+    def _evolve(self, what: str, mutate):
+        """The retry loop of every metadata-only commit: ``mutate`` edits
+        a copy of the current metadata (raising to refuse), the copy
+        commits, a lost race refreshes and re-runs ``mutate``. Returns
+        ``mutate``'s result."""
         for _ in range(_COMMIT_RETRIES):
             meta = json.loads(json.dumps(self.ops.current()))
             base = self.ops.current_version()
-            mutate(meta)
+            result = mutate(meta)
             try:
                 self.ops.commit(base, meta)
-                return
+                return result
             except CommitFailedError:
                 self.ops._should_refresh = True
         raise CommitFailedError(f"{what} lost {_COMMIT_RETRIES} races")

@@ -5,23 +5,32 @@ Python re-expression of the reference's
 HadoopRelativeTableOperations.java:56-416):
 
 - metadata lives at ``<table>/metadata/v{N}.metadata.json`` (optionally
-  gzip: ``v{N}.gz.metadata.json``, codec from the
-  ``write.metadata.compression`` table property — reference :160-162,
+  gzip: ``v{N}.gz.metadata.json``, codec from the base document's
+  ``write.metadata.compression`` property — reference :160-162,
   :244-250),
 - ``metadata/version-hint.text`` points at the newest version, written
   best-effort after each commit (reference :283-300),
-- refresh walks forward from the hinted version probing ``v{N+1}`` until
-  a miss (reference :127-132),
-- when the hint is missing, recovery scans ``metadata/`` for the max
-  ``v(\\d+)`` (reference :302-337),
+- the head is found from the hint, probing forward ``v{N+1}`` until a
+  miss (reference :127-132); when the hint is torn, missing or names a
+  version with no file, a scan of ``metadata/`` for the max ``v(\\d+)``
+  replaces it (reference :302-337),
 - commit = stale-base CAS check, write a temp ``{uuid}.metadata.json``,
   atomically rename to ``v{N+1}.metadata.json`` — the loser of the race
   gets CommitFailedError (reference :143-180, :346-376),
 - old metadata GC after commit, bounded by
   ``write.metadata.previous-versions-max`` (reference :400-416).
 
-All paths *inside* metadata documents are relative to the warehouse; the
-IO layer absolutizes on open (reference's layering, see fileio.py).
+One protocol serves both table formats: the native format (relative
+``location``, this module's ``new_table_metadata``) and the Iceberg-v2
+mirror (``iceberg_export``, absolute ``location``). ``TableOperations``
+owns only the files and their versions — layout, probe, CAS, hint,
+codec, GC — and reads nothing in a document beyond ``location`` (the
+relocation guard), ``properties`` and ``table-uuid``; validating a
+document's content (format version, metadata log) is the caller's job.
+
+All paths *inside* native metadata documents are relative to the
+warehouse; the IO layer absolutizes on open (reference's layering, see
+fileio.py).
 """
 
 from __future__ import annotations
@@ -197,24 +206,19 @@ class TableOperations:
         return self._version or 0
 
     def refresh(self) -> dict:
-        """Resolve the newest metadata: start from the hint, probe forward
-        (reference refresh(), :115-141)."""
-        version = self.find_version()
-        if version == 0:
+        """Resolve and load the newest metadata (reference refresh(),
+        :115-141)."""
+        version, path = self._head()
+        if path is None:
             raise NoSuchTableError(f"no metadata for table at {self.location}")
-        while True:
-            nxt = self._probe_metadata_file(version + 1)
-            if nxt is None:
-                break
-            version += 1
-        meta = self._read_metadata(version)
+        meta = self._read_metadata(path)
         if self._current is not None and meta["table-uuid"] != self._current["table-uuid"]:
             # UUID continuity check (reference :79-85)
             raise RuntimeError("table UUID changed concurrently; refusing stale handle")
         self._current, self._version, self._should_refresh = meta, version, False
         return meta
 
-    def _probe_metadata_file(self, version: int) -> str | None:
+    def find_metadata_file(self, version: int) -> str | None:
         """A30: try each codec extension (reference getMetadataFile, :242-251)."""
         for codec in ("none", "gzip"):
             path = self.metadata_file(version, codec)
@@ -222,22 +226,36 @@ class TableOperations:
                 return path
         return None
 
-    def _read_metadata(self, version: int) -> dict:
-        path = self._probe_metadata_file(version)
-        if path is None:
-            raise NoSuchTableError(f"metadata v{version} missing under {self.metadata_dir}")
+    def _read_metadata(self, path: str) -> dict:
         raw = self.io.read_bytes(path)
         if path.endswith(".gz.metadata.json"):
             raw = gzip.decompress(raw)
         return json.loads(raw)
 
     def find_version(self) -> int:
-        """A28: read version-hint.text; fall back to a directory scan for
-        max v(\\d+) (reference findVersion, :302-337)."""
+        """A28: the head version, 0 when the table has no metadata."""
+        return self._head()[0]
+
+    def _head(self) -> tuple[int, str | None]:
+        """(version, file) of the newest metadata. Start from
+        version-hint.text; when the hint is torn, missing or names a
+        version with no file, scan for the max ``v(\\d+)`` instead
+        (reference findVersion, :302-337). Then probe forward: the hint
+        is written after the commit's rename, so it can trail the head."""
+        version, path = 0, None
         try:
-            return int(self.io.read_bytes(self.version_hint_file()).decode().strip())
+            version = int(self.io.read_bytes(self.version_hint_file()).decode().strip())
+            path = self.find_metadata_file(version)
         except Exception:
             pass
+        if path is None:
+            version = self._scan_max_version()
+            path = self.find_metadata_file(version) if version else None
+        while (nxt := self.find_metadata_file(version + 1)) is not None:
+            version, path = version + 1, nxt
+        return version, path
+
+    def _scan_max_version(self) -> int:
         try:
             listing = self.io.list_prefix(self.metadata_dir)
         except Exception:
@@ -253,16 +271,10 @@ class TableOperations:
     def commit(self, base_version: int, metadata: dict) -> int:
         """A26: optimistic-concurrency atomic commit."""
         current_version = self.find_version()
-        # probe forward like refresh so a stale hint can't hide a newer commit
-        while self._probe_metadata_file(current_version + 1) is not None:
-            current_version += 1
         if current_version != base_version:
             raise CommitFailedError(
                 f"base version {base_version} is stale (current {current_version})"
             )
-        if metadata.get("location") != self.location:
-            # forbid relocation inside commit (reference :155-158)
-            raise CommitFailedError("cannot change table location in a commit")
 
         # the codec for v(base+1) comes from the BASE state, so two
         # racers committing from one base always target ONE filename
@@ -274,17 +286,20 @@ class TableOperations:
         # change takes effect on the commit AFTER the one carrying it
         # (the contract the SQL-frontend test already states).
         if base_version == 0:
-            base_props = metadata.get("properties", {})
+            base = metadata
         elif self._version == base_version and self._current is not None:
-            base_props = self._current.get("properties", {})
+            base = self._current
         else:
             try:
-                base_props = self._read_metadata(base_version).get(
-                    "properties", {}
-                )
-            except Exception:
-                base_props = metadata.get("properties", {})
-        codec = base_props.get("write.metadata.compression", "none")
+                base = self._read_metadata(self.find_metadata_file(base_version))
+            except Exception:  # unreadable or already reaped
+                base = metadata
+        if metadata.get("location") != base.get("location"):
+            # forbid relocation inside commit (reference :155-158); the
+            # base's own location, so a format that stores an absolute
+            # location is held to it too
+            raise CommitFailedError("cannot change table location in a commit")
+        codec = base.get("properties", {}).get("write.metadata.compression", "none")
         payload = json.dumps(metadata, indent=1).encode()
         if codec == "gzip":
             payload = gzip.compress(payload)
@@ -350,7 +365,7 @@ class TableOperations:
         versions = range(max(1, cutoff - 10), cutoff + 1)
 
         def _reap(v: int) -> None:
-            p = self._probe_metadata_file(v)
+            p = self.find_metadata_file(v)
             if p is not None:
                 try:
                     self.io.delete_file(p)

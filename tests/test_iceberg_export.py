@@ -3778,3 +3778,165 @@ def test_mirror_epoch_probe_survives_snapshot_expiry(spark):
         extra_summary={"stream-batch-id": "bare-key"},
     )
     assert iceberg_export.seen_stream_epoch_iceberg(dest, "bare-key")
+
+
+# ---------------------------------------------------------------------------
+# one commit protocol: the mirror commits through TableOperations
+# ---------------------------------------------------------------------------
+
+
+def test_export_into_advanced_mirror_raises_and_keeps_it(spark, sf_dir):
+    """v1 of an export is committed create-if-absent, so exporting into
+    a directory whose mirror has moved past v1 fails instead of writing
+    a v1 the forward probe would never reach; the existing mirror stays
+    the table and reads return its rows."""
+    nation = load_table(spark, sf_dir, "nation")
+    dest = tempfile.mkdtemp(prefix="iceexp_reexport_")
+    iceberg_export.export_iceberg(
+        _table(spark, nation.filter(F.col("n_nationkey") < 5)), dest
+    )
+    iceberg_export.append_iceberg(
+        spark, dest, nation.filter(F.col("n_nationkey") == 5).coalesce(1)
+    )
+    other = _table(spark, nation.filter(F.col("n_nationkey") >= 20))
+    with pytest.raises(ValueError, match="already holds Iceberg metadata"):
+        iceberg_export.export_iceberg(other, dest)
+    assert iceberg_export._current_version(dest) == 2
+    got = sorted(
+        r.n_nationkey for r in iceberg_export.read_iceberg(spark, dest).collect()
+    )
+    assert got == list(range(6))
+
+
+@pytest.mark.parametrize("hint", ["torn", "behind", "past"])
+@pytest.mark.parametrize("fmt", ["native", "mirror"])
+def test_version_hint_recovery_both_formats(spark, fmt, hint):
+    """Both formats resolve their head through one protocol, so each
+    bad ``version-hint.text`` recovers the same way: torn -> directory
+    scan, behind the head -> forward probe, naming a version with no
+    file -> directory scan. Each resolves to the true head (v3), and
+    the next commit lands at v4 and moves the hint there."""
+    import os
+
+    df = spark.createDataFrame(
+        [(i, f"r{i}") for i in range(4)], "id long, name string"
+    )
+    cat = FsCatalog(tempfile.mkdtemp(prefix="hint_wh_"))
+    cat.create_namespace(("ns",))
+    table = RelativeTable(cat.create_table(("ns",), "t", df.schema.jsonValue()))
+    table.append(df.filter("id = 0"))
+    if fmt == "native":
+        table.append(df.filter("id = 1"))  # create + 2 appends: v3
+        meta_dir = table.ops.io.absolute(table.ops.metadata_dir)
+
+        def resolve():
+            ops = cat.load_table(("ns",), "t")
+            return ops.current_version(), RelativeTable(ops).read(spark).count()
+
+        def commit():
+            RelativeTable(cat.load_table(("ns",), "t")).append(df.filter("id = 2"))
+    else:
+        dest = tempfile.mkdtemp(prefix="hint_mirror_")
+        iceberg_export.export_iceberg(table, dest)  # v1
+        for i in (1, 2):  # v2, v3
+            iceberg_export.append_iceberg(
+                spark, dest, df.filter(F.col("id") == i).coalesce(1)
+            )
+        meta_dir = os.path.join(dest, "metadata")
+
+        def resolve():
+            _doc, version = iceberg_export._load_metadata_versioned(dest)
+            assert iceberg_export._current_version(dest) == version
+            return version, iceberg_export.read_iceberg(spark, dest).count()
+
+        def commit():
+            iceberg_export.append_iceberg(
+                spark, dest, df.filter(F.col("id") == 3).coalesce(1)
+            )
+
+    version, rows = resolve()
+    assert version == 3
+    hint_file = os.path.join(meta_dir, "version-hint.text")
+    with open(hint_file, "w") as fh:
+        fh.write({"torn": "", "behind": "1", "past": "7"}[hint])
+    assert resolve() == (3, rows)
+    commit()
+    assert os.path.exists(os.path.join(meta_dir, "v4.metadata.json"))
+    assert not os.path.exists(os.path.join(meta_dir, "v5.metadata.json"))
+    with open(hint_file) as fh:
+        assert fh.read().strip() == "4"
+    assert resolve() == (4, rows + 1)
+
+
+def test_every_mirror_version_commits_through_table_operations(
+    spark, sf_dir, monkeypatch
+):
+    """No module but table_ops writes mirror metadata: for each mirror
+    mutator, the ``v*.metadata.json`` files it adds equal the
+    ``TableOperations.commit`` calls it makes (one each here)."""
+    import glob
+    import os
+
+    from iceberg_relative_io_spark.catalog.table_ops import TableOperations
+
+    nation = load_table(spark, sf_dir, "nation")
+    table = _table(
+        spark, nation.filter(F.col("n_nationkey") < 10),
+        partition_by=["n_regionkey"],
+    )
+    dest = tempfile.mkdtemp(prefix="iceexp_ops_")
+    calls: list[int] = []
+    real_commit = TableOperations.commit
+
+    def counting_commit(self, base_version, metadata):
+        calls.append(base_version)
+        return real_commit(self, base_version, metadata)
+
+    monkeypatch.setattr(TableOperations, "commit", counting_commit)
+
+    def row(key, region):
+        return spark.createDataFrame(
+            [(key, f"N{key}", region)], schema=nation.schema
+        )
+
+    results: dict[str, dict] = {}
+    ie = iceberg_export
+    steps = [
+        ("export_iceberg", lambda: ie.export_iceberg(table, dest)),
+        ("append_iceberg", lambda: ie.append_iceberg(spark, dest, row(30, 0))),
+        ("write_position_deletes", lambda: ie.write_position_deletes(
+            dest, {_first_data_file(dest): [0]})),
+        ("delete_where_iceberg", lambda: ie.delete_where_iceberg(
+            spark, dest, F.col("n_nationkey") == 1, ["n_nationkey"])),
+        ("delete_positions_iceberg", lambda: ie.delete_positions_iceberg(
+            spark, dest, F.col("n_nationkey") == 2)),
+        ("update_where_iceberg", lambda: ie.update_where_iceberg(
+            spark, dest, F.col("n_nationkey") == 3,
+            {"n_name": F.lit("UPD")}, ["n_nationkey"])),
+        ("merge_iceberg", lambda: ie.merge_iceberg(
+            spark, dest, row(4, 4), ["n_nationkey"])),
+        ("overwrite_partitions_iceberg", lambda: ie.overwrite_partitions_iceberg(
+            spark, dest, row(40, 3))),
+        ("compact_iceberg", lambda: ie.compact_iceberg(spark, dest)),
+        ("set_ref_iceberg", lambda: ie.set_ref_iceberg(dest, "tag1")),
+        ("append_iceberg", lambda: ie.append_iceberg(spark, dest, row(31, 1))),
+        ("evolve_schema_iceberg", lambda: ie.evolve_schema_iceberg(
+            dest, add={"n_note": "string"})),
+        ("rewrite_manifests_iceberg", lambda: ie.rewrite_manifests_iceberg(dest)),
+        ("rollback_iceberg", lambda: ie.rollback_iceberg(
+            dest, results["compact_iceberg"]["snapshot-id"])),
+        ("expire_snapshots_iceberg", lambda: ie.expire_snapshots_iceberg(
+            dest, keep_last=1)),
+        ("drop_ref_iceberg", lambda: ie.drop_ref_iceberg(dest, "tag1")),
+    ]
+
+    def versions() -> int:
+        return len(glob.glob(os.path.join(dest, "metadata", "v*.metadata.json")))
+
+    for name, step in steps:
+        before, n_calls = versions(), len(calls)
+        results[name] = step()
+        added, committed = versions() - before, len(calls) - n_calls
+        assert added == committed == 1, (name, added, committed)
+    assert calls == list(range(len(steps)))  # v1..vN, each from its base
+    assert iceberg_export.read_iceberg(spark, dest).count() > 0
