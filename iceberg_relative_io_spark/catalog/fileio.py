@@ -25,6 +25,7 @@ from dataclasses import dataclass, field
 
 from iceberg_relative_io_spark.catalog.paths import (
     absolute_location,
+    crc_sidecar,
     normalize_warehouse,
     relative_location,
 )
@@ -237,6 +238,15 @@ class RelativeFileIO:
             sidecar = location + ".sha256"
             if self.exists(sidecar):  # best-effort: no orphaned sidecars
                 self.fs.delete_file(self._fs_path(sidecar))
+
+    def delete_spark_file(self, location: str) -> None:
+        """Delete a file Spark wrote, with the Hadoop ``.crc`` sidecar
+        beside it when there is one (``paths.crc_sidecar``)."""
+        self.delete_file(location)
+        try:
+            self.fs.delete_file(self._fs_path(crc_sidecar(location)))
+        except OSError:
+            pass  # no sidecar: an object store, or a non-Hadoop writer
 
     def delete_files(self, locations) -> None:
         for loc in locations:

@@ -106,14 +106,20 @@ from pyspark.sql import types as T
 
 from iceberg_relative_io_spark.catalog import avro_ocf
 from iceberg_relative_io_spark.catalog.fileio import RelativeFileIO
-from iceberg_relative_io_spark.catalog.paths import is_absolute
+from iceberg_relative_io_spark.catalog.paths import (
+    crc_sidecar,
+    is_absolute,
+    orphan_sidecars,
+)
 from iceberg_relative_io_spark.catalog.scan import (
     _local_frame, _norm_path_py, net_diff, plan_scan,
 )
 from iceberg_relative_io_spark.catalog.spark_table import (
     _STREAM_EPOCH_PROP,
     RelativeTable,
+    _distribute_by_partition,
     _epoch_key_parts,
+    _transform_column,
     parse_partition_field,
 )
 from iceberg_relative_io_spark.catalog.table_ops import (
@@ -1325,6 +1331,16 @@ def _type_sig(t) -> object:
     }
 
 
+def _unlink_spark_file(path: str) -> None:
+    """Remove a file Spark wrote and the Hadoop ``.crc`` sidecar beside
+    it (``paths.crc_sidecar``), so deleting a file leaves no orphan."""
+    os.unlink(path)
+    try:
+        os.unlink(crc_sidecar(path))
+    except FileNotFoundError:
+        pass
+
+
 def _write_data_files(
     table_dir: str,
     doc: dict,
@@ -1339,12 +1355,16 @@ def _write_data_files(
     (spark_table._transform_column; murmur3 is the only bucket hash an
     exported spec retains, so derived bucket ids agree with existing
     files) — and return the spec-shaped manifest entries (status=ADDED
-    at the given sequence) plus the total row count. Zero-row part files
-    (empty micro-batches, empty partitions) are unlinked, not entered."""
+    at the given sequence) plus the total row count. A partitioned
+    write first clusters rows by their layout columns
+    (spark_table._distribute_by_partition, the native writer's
+    distribution), so each partition value is written as one file, or
+    as several when AQE splits a value past the advisory partition
+    size; an unpartitioned write keeps the input's partitioning.
+    Zero-row part files (empty micro-batches, empty partitions) are
+    unlinked, not entered."""
     import pyarrow.parquet as pq
     from urllib.parse import unquote as _unq
-
-    from iceberg_relative_io_spark.catalog.spark_table import _transform_column
 
     schema_json = next(
         s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
@@ -1375,6 +1395,8 @@ def _write_data_files(
         layout_cols.append(sf["name"])
 
     data_dir = os.path.join(table_dir, "data", f"{prefix}-{uuid.uuid4()}")
+    if layout_cols:
+        out_df = _distribute_by_partition(out_df, layout_cols)
     writer = out_df.write.mode("overwrite")
     if layout_cols:
         writer = writer.partitionBy(*layout_cols)
@@ -1397,7 +1419,7 @@ def _write_data_files(
             md = pq.ParquetFile(fpath).metadata
             rows = int(md.num_rows)
             if rows == 0:
-                os.unlink(fpath)
+                _unlink_spark_file(fpath)
                 continue
             total_rows += rows
             lower, upper = _file_column_bounds(md, bound_fields)
@@ -1834,7 +1856,7 @@ def _write_delete_key_files(
         fpath = os.path.join(del_dir, name)
         rows = int(pq.ParquetFile(fpath).metadata.num_rows)
         if rows == 0:
-            os.unlink(fpath)
+            _unlink_spark_file(fpath)
             continue
         total_rows += rows
         entries.append(
@@ -2067,7 +2089,7 @@ def _write_position_delete_files(
         fpath = os.path.join(del_dir, name)
         rows = int(pq.ParquetFile(fpath).metadata.num_rows)
         if rows == 0:
-            os.unlink(fpath)
+            _unlink_spark_file(fpath)
             continue
         total_rows += rows
         entries.append(
@@ -3011,7 +3033,7 @@ def expire_snapshots_iceberg(table_dir: str, keep_last: int = 1) -> dict:
         if not os.path.realpath(p).startswith(root + os.sep):
             continue
         try:
-            os.unlink(p)
+            _unlink_spark_file(p)
             deleted += 1
         except OSError:
             pass
@@ -3274,9 +3296,12 @@ def remove_orphan_files_iceberg(
     crashed commit leaves exactly this class of file). Only paths
     inside ``table_dir`` are candidates; zero-copy references to the
     source table live outside it and are never touched. Metadata JSON
-    versions, the version hint, and ``_``/``.``-prefixed job markers
-    (_SUCCESS, .crc — the native twin skips them too) are never
-    candidates. ``older_than_s`` guards in-flight commits: a writer
+    versions and the version hint are never candidates; Hadoop's
+    sidecars are reaped only with what they belong to, as the native
+    twin does (``paths.orphan_sidecars``): a ``.crc`` whose file is
+    gone, and a ``_SUCCESS`` marker (with its ``.crc``) of a write none
+    of whose files is left, so the emptied directories go as well.
+    ``older_than_s`` guards in-flight commits: a writer
     that has produced its files but not yet won the metadata CAS is
     indistinguishable from debris, so only files older than the
     threshold reap (Iceberg's own remove_orphan_files has the same
@@ -3304,13 +3329,21 @@ def remove_orphan_files_iceberg(
 
     removed = 0
     data_root = os.path.join(root, "data")
+    kept: set[str] = set()
+    markers: list[str] = []
     for base, _dirs, names in os.walk(data_root):
         for name in names:
+            p = os.path.join(base, name)
             if name.startswith("_") or name.startswith("."):
-                continue  # job markers / checksums of live commits
-            p = os.path.realpath(os.path.join(base, name))
-            if p not in referenced:
-                removed += _reap(p)
+                markers.append(p)  # job markers / checksums: see below
+            elif os.path.realpath(p) in referenced or not _reap(p):
+                kept.add(p)
+            else:
+                removed += 1
+    # a checksum whose file is gone, and the _SUCCESS marker of a write
+    # none of whose files is left, go too (same age gate)
+    for p in orphan_sidecars(kept, markers):
+        removed += _reap(p)
     meta_root = os.path.join(root, "metadata")
     for name in os.listdir(meta_root):
         # only avro manifests / manifest lists and abandoned temp files

@@ -49,3 +49,42 @@ def relative_location(warehouse: str, location: str) -> str:
     if location.startswith(w):
         return location[len(w):]
     return location
+
+
+def crc_sidecar(location: str) -> str:
+    """The ``.<name>.crc`` file Hadoop's ChecksumFileSystem (the local
+    file system Spark writes through) creates beside every file it
+    writes, ``_SUCCESS`` included. Deleting a file any other way leaves
+    it behind, so deleters remove it with the file."""
+    head, sep, name = location.rpartition("/")
+    return f"{head}{sep}.{name}.crc"
+
+
+def orphan_sidecars(kept: set[str], markers: list[str]) -> list[str]:
+    """The Hadoop sidecars nothing needs any more, given the files
+    ``kept`` under a data prefix and the ``_``/``.``-prefixed names
+    ``markers`` listed beside them (full paths, ``/``-separated): a
+    ``_SUCCESS`` marker of a write with no kept file at any depth under
+    its directory, then every ``.<name>.crc`` whose ``<name>`` is
+    neither kept nor a surviving marker. Shared by both formats'
+    orphan sweeps."""
+    held: set[str] = set()
+    for path in kept:
+        d = path.rpartition("/")[0]
+        while d and d not in held:
+            held.add(d)
+            d = d.rpartition("/")[0]
+    doomed = [
+        m for m in markers
+        if m.endswith("/_SUCCESS") and m.rpartition("/")[0] not in held
+    ]
+    survivors = kept | (set(markers) - set(doomed))
+    for m in markers:
+        head, _, name = m.rpartition("/")
+        if (
+            name.startswith(".")
+            and name.endswith(".crc")
+            and f"{head}/{name[1:-4]}" not in survivors
+        ):
+            doomed.append(m)
+    return doomed

@@ -26,6 +26,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
+from iceberg_relative_io_spark.catalog.paths import orphan_sidecars
 from iceberg_relative_io_spark.catalog.scan import net_diff, plan_scan
 from iceberg_relative_io_spark.catalog.table_ops import CommitFailedError, TableOperations
 
@@ -143,6 +144,19 @@ def _transform_column(fdef: dict, bucket_hash: str = "xxhash64", dtype=None):
     return src
 
 
+def _distribute_by_partition(df: DataFrame, layout_cols: list[str]) -> DataFrame:
+    """Cluster rows by their layout columns before a ``partitionBy``
+    write, so each partition value lands in one task and the write
+    emits one file per value; without it every task emits a file per
+    value it holds, tasks × values small files (Iceberg's 'hash'
+    ``write.distribution-mode`` solves the same problem). Spark's
+    REBALANCE hint rather than ``repartition``: at small sizes the two
+    coincide (AQE coalesces to one reducer), but only rebalance lets
+    AQE split a value larger than the advisory partition size across
+    several tasks, so a skewed value is not written by a single task."""
+    return df.hint("rebalance", *layout_cols)
+
+
 def _transform_value(fdef: dict, v):
     """Driver-side mirror of order-preserving transforms, for pruning.
     Returns None when the transform of this value can't be derived here
@@ -227,11 +241,7 @@ class RelativeTable:
             # tight and range pruning can skip most files of a scan
             df = df.repartitionByRange(*sort_order).sortWithinPartitions(*sort_order)
         elif layout_cols:
-            # hash-distribute rows to their partition before partitionBy:
-            # without this every task emits a file per partition value it
-            # sees — tasks × partitions small files at scale (Iceberg's
-            # 'hash' write.distribution-mode solves the same problem)
-            df = df.repartition(*layout_cols)
+            df = _distribute_by_partition(df, layout_cols)
         writer = df.write.mode("overwrite")
         # write.target-file-size-bytes (Iceberg property parity): cap
         # each output file near the target by translating bytes ->
@@ -1454,7 +1464,7 @@ class RelativeTable:
                 continue
             for path in doomed_files:
                 try:
-                    self.ops.io.delete_file(path)
+                    self.ops.io.delete_spark_file(path)
                 except Exception:
                     pass
             for path in doomed_manifests:
@@ -1468,7 +1478,10 @@ class RelativeTable:
     def remove_orphan_files(self) -> list[str]:
         """Iceberg's remove_orphan_files: delete data files under the
         table's data/ prefix that no snapshot (live or tombstoned)
-        references — the debris of failed writes. Returns deleted paths."""
+        references — the debris of failed writes — and the Hadoop
+        sidecars nothing needs any more: a ``.crc`` whose file is gone,
+        and a ``_SUCCESS`` marker (with its ``.crc``) of a write none of
+        whose files is left. Returns deleted paths."""
         meta = self.ops.current()
         referenced: set[str] = set()
         for s in meta["snapshots"]:
@@ -1476,16 +1489,26 @@ class RelativeTable:
             referenced.update(f["path"] for f in man["added-files"])
             referenced.update(d["path"] for d in man.get("delete-files", []))
         deleted = []
+        kept: set[str] = set()
+        markers: list[str] = []
         for fi in self.ops.io.list_prefix(f"{self.ops.location}/data"):
             name = fi.location.rsplit("/", 1)[-1]
             if name.startswith("_") or name.startswith("."):
-                continue
-            if fi.location not in referenced:
+                markers.append(fi.location)
+            elif fi.location in referenced:
+                kept.add(fi.location)
+            else:
                 try:
                     self.ops.io.delete_file(fi.location)
                     deleted.append(fi.location)
                 except Exception:
-                    pass
+                    kept.add(fi.location)
+        for loc in orphan_sidecars(kept, markers):
+            try:
+                self.ops.io.delete_file(loc)
+                deleted.append(loc)
+            except Exception:
+                pass
         return deleted
 
     def compact(self, spark: SparkSession, target_partitions: int = 1) -> dict:

@@ -3940,3 +3940,141 @@ def test_every_mirror_version_commits_through_table_operations(
         assert added == committed == 1, (name, added, committed)
     assert calls == list(range(len(steps)))  # v1..vN, each from its base
     assert iceberg_export.read_iceberg(spark, dest).count() > 0
+
+
+# ---------------------------------------------------------------------------
+# write layout: rows cluster by partition before a partitioned write
+# ---------------------------------------------------------------------------
+
+_LAYOUT_SCHEMA = "id long, part int, v string"
+
+
+def _layout_mirror(spark):
+    """A mirror partitioned by ``part`` (8 values, 6 rows each),
+    exported from a native table, and its rows."""
+    rows = [(i, i % 8, f"r{i}") for i in range(48)]
+    table = _table(
+        spark, spark.createDataFrame(rows, _LAYOUT_SCHEMA), partition_by=["part"]
+    )
+    dest = tempfile.mkdtemp(prefix="iceexp_layout_")
+    iceberg_export.export_iceberg(table, dest)
+    return dest, rows
+
+
+def test_mirror_writes_one_file_per_partition_value(spark):
+    """append, merge and compact each write exactly one data file per
+    partition value from an input of 3 Spark partitions that each span
+    every value: rows are distributed by the layout column before the
+    partitioned write, so no task writes a slice of a value."""
+    from collections import Counter
+
+    dest, rows = _layout_mirror(spark)
+    one_each = {p: 1 for p in range(8)}
+
+    def files_per_part_written_by(step) -> dict:
+        before = {e["data_file"]["file_path"] for e in _head_data_entries(dest)}
+        step()
+        return dict(
+            Counter(
+                e["data_file"]["partition"]["part"]
+                for e in _head_data_entries(dest)
+                if e["data_file"]["file_path"] not in before
+            )
+        )
+
+    batch = [(100 + i, i % 8, "a") for i in range(48)]
+    batch_df = spark.createDataFrame(batch, _LAYOUT_SCHEMA).repartition(3)
+    assert batch_df.rdd.getNumPartitions() == 3
+    assert files_per_part_written_by(
+        lambda: iceberg_export.append_iceberg(spark, dest, batch_df)
+    ) == one_each
+    # 8 matched keys (one per value) and 40 new ones
+    source = [(i, i % 8, "m") for i in range(8)] + [
+        (200 + i, i % 8, "n") for i in range(40)
+    ]
+    source_df = spark.createDataFrame(source, _LAYOUT_SCHEMA).repartition(3)
+    assert files_per_part_written_by(
+        lambda: iceberg_export.merge_iceberg(spark, dest, source_df, ["id"])
+    ) == one_each
+    assert files_per_part_written_by(
+        lambda: iceberg_export.compact_iceberg(spark, dest)
+    ) == one_each
+    expect = {r[0]: r for r in rows + batch}
+    expect.update({r[0]: r for r in source})
+    got = iceberg_export.read_iceberg(spark, dest).select("id", "part", "v")
+    assert sorted(map(tuple, got.collect())) == sorted(expect.values())
+
+
+@pytest.mark.parametrize("fmt", ["native", "mirror"])
+def test_hot_partition_value_splits_across_files(spark, fmt):
+    """A partition value far past the advisory partition size is written
+    by several tasks, as several files (AQE splits the rebalanced
+    partition), in both formats; no row is lost or duplicated."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    saved = spark.conf.get(key, None)
+    # 4000 rows, 95% of them in part=0
+    df = spark.range(4000).select(
+        F.col("id"),
+        F.when(F.col("id") % 20 == 0, F.col("id") % 7 + 1)
+        .otherwise(0)
+        .cast("int")
+        .alias("part"),
+        F.lit("v").alias("v"),
+    ).repartition(4)
+    spark.conf.set(key, "8k")
+    try:
+        if fmt == "native":
+            table = _table(spark, df, partition_by=["part"])
+            parts = [f["partition"]["part"] for f in table.scan_files()]
+            got = table.read(spark)
+        else:
+            table = _table(spark, df.limit(0), partition_by=["part"])
+            dest = tempfile.mkdtemp(prefix="iceexp_hot_")
+            iceberg_export.export_iceberg(table, dest)
+            iceberg_export.append_iceberg(spark, dest, df)
+            parts = [
+                e["data_file"]["partition"]["part"]
+                for e in _head_data_entries(dest)
+            ]
+            got = iceberg_export.read_iceberg(spark, dest)
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+    # the native manifest keeps partition values as strings
+    assert [str(p) for p in parts].count("0") > 1
+    assert sorted(map(tuple, got.select("id", "part", "v").collect())) == sorted(
+        map(tuple, df.collect())
+    )
+
+
+def test_sidecars_reaped_with_their_files(spark):
+    """compact, expire, then an orphan sweep leave no Hadoop ``.crc``
+    without its file and no directory under ``data/`` without a live
+    data file: deleters remove a file's sidecar with it, and the sweep
+    reaps a write's ``_SUCCESS`` once none of its files is left."""
+    import os as _os
+
+    dest, _ = _layout_mirror(spark)
+    batch = spark.createDataFrame(
+        [(100 + i, i % 8, "a") for i in range(24)], _LAYOUT_SCHEMA
+    )
+    iceberg_export.append_iceberg(spark, dest, batch.repartition(3))
+    iceberg_export.delete_where_iceberg(
+        spark, dest, F.col("id") == 100, ["id"]
+    )
+    iceberg_export.delete_positions_iceberg(spark, dest, F.col("id") == 101)
+    iceberg_export.compact_iceberg(spark, dest)
+    iceberg_export.expire_snapshots_iceberg(dest, keep_last=1)
+    iceberg_export.remove_orphan_files_iceberg(dest, older_than_s=0)
+
+    live = {e["data_file"]["file_path"] for e in _head_data_entries(dest)}
+    data_root = _os.path.join(dest, "data")
+    for base, dirs, names in _os.walk(data_root):
+        for name in names:
+            if name.endswith(".crc"):
+                assert name[1:-4] in names, _os.path.join(base, name)
+        if base != data_root:
+            assert any(p.startswith(base + _os.sep) for p in live), base
+    assert iceberg_export.read_iceberg(spark, dest).count() == 48 + 24 - 2

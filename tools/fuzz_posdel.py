@@ -161,31 +161,37 @@ def run_seed(spark, seed: int) -> list[str]:
         # the delete rounds: appended files carry a NEWER sequence, so
         # the pre-export equality delete must NOT touch them (the mirror
         # adds their rows unconditionally, eq_deleted groups included),
-        # while later position-delete rounds may target them freely
+        # while later position-delete rounds may target them freely.
+        # A partitioned mirror append writes one file per grp value, so
+        # on those seeds a round appends 2-3 times: the position-delete
+        # round then still spans several files of one partition
         if rng.random() < 0.5:
-            k = rng.randint(1, 40)
-            new_rows = [
-                (next_id + j, rng.randint(0, 3), round(rng.uniform(-10, 10), 4))
-                for j in range(k)
-            ]
-            next_id += k
-            iceberg_export.append_iceberg(
-                spark,
-                dest,
-                spark.createDataFrame(new_rows, SCHEMA).repartition(
-                    rng.randint(1, 3)
-                ),
-            )
-            fresh = data_paths()
-            for p in fresh:
-                if p in file_rows:
-                    continue
-                for pos, (i, g, v) in enumerate(file_tuples(p)):
-                    mirror[(p, pos)] = (i, g, round(v, 4))
-                file_rows[p] = pq.read_metadata(p).num_rows
-            paths = fresh
-            if spark_rows() != sorted(mirror.values()):
-                failures.append(f"seed {seed} round {rnd}: post-append mismatch")
+            for _ in range(rng.randint(2, 3) if partitioned else 1):
+                k = rng.randint(1, 40)
+                new_rows = [
+                    (next_id + j, rng.randint(0, 3), round(rng.uniform(-10, 10), 4))
+                    for j in range(k)
+                ]
+                next_id += k
+                iceberg_export.append_iceberg(
+                    spark,
+                    dest,
+                    spark.createDataFrame(new_rows, SCHEMA).repartition(
+                        rng.randint(1, 3)
+                    ),
+                )
+                fresh = data_paths()
+                for p in fresh:
+                    if p in file_rows:
+                        continue
+                    for pos, (i, g, v) in enumerate(file_tuples(p)):
+                        mirror[(p, pos)] = (i, g, round(v, 4))
+                    file_rows[p] = pq.read_metadata(p).num_rows
+                paths = fresh
+                if spark_rows() != sorted(mirror.values()):
+                    failures.append(
+                        f"seed {seed} round {rnd}: post-append mismatch"
+                    )
         deletes: dict[str, list[int]] = {}
         for p in rng.sample(paths, rng.randint(1, len(paths))):
             k = rng.randint(1, max(1, file_rows[p] // 3))
