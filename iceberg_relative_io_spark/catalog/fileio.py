@@ -255,6 +255,32 @@ class RelativeFileIO:
     def delete_prefix(self, prefix: str) -> None:
         self.fs.delete_dir(self._fs_path(prefix))
 
+    def delete_empty_dirs(self, prefix: str) -> None:
+        """Remove the empty directories under ``prefix``, deepest first,
+        so a parent whose only children were empty directories goes in
+        the same pass. Only a local delegate has directories to remove:
+        an object store's "directory" is a key prefix that vanishes with
+        its last key. A directory that gains a file after the listing is
+        kept, because ``rmdir`` refuses a non-empty directory."""
+        import os
+
+        from pyarrow import fs as pafs
+
+        if not isinstance(self.fs, pafs.LocalFileSystem):
+            return
+        sel = pafs.FileSelector(
+            self._fs_path(prefix), recursive=True, allow_not_found=True
+        )
+        dirs = [
+            info.path for info in self.fs.get_file_info(sel)
+            if info.type == pafs.FileType.Directory
+        ]
+        for d in sorted(dirs, key=lambda p: -p.count("/")):
+            try:
+                os.rmdir(d)
+            except OSError:
+                pass  # not empty
+
     def list_prefix(self, prefix: str) -> list[FileInfo]:
         """List files under a prefix, reporting *relative* locations
         (reference RelativeFileIO.java:83-87).

@@ -83,6 +83,15 @@ sequence numbers preserved) so a streaming mirror's planning cost stays
 flat; ``import_iceberg`` closes the loop by registering an external v2
 table as a ``RelativeTable`` zero-copy.
 
+Every snapshot, exported or committed on a mirror, comes out of one
+producer: ``_write_manifests`` writes each non-empty group of entries
+as a manifest and derives its manifest-list record (content, file and
+row counts, sequence bounds) from those entries, ``_write_manifest_list``
+writes the list, both through the mirror's ``RelativeFileIO``, and
+``_commit_snapshot`` appends the snapshot, its ``snapshot-log`` entry
+and ``refs.main`` and commits. Each op keeps only its entries, which
+prior manifests it carries forward, and its summary.
+
 If this environment had pyiceberg or DuckDB's iceberg extension the
 export would be externally checkable; neither can be installed here
 (no network), so the gate is the independent reader below plus avro
@@ -107,7 +116,6 @@ from pyspark.sql import types as T
 from iceberg_relative_io_spark.catalog import avro_ocf
 from iceberg_relative_io_spark.catalog.fileio import RelativeFileIO
 from iceberg_relative_io_spark.catalog.paths import (
-    crc_sidecar,
     is_absolute,
     orphan_sidecars,
 )
@@ -124,7 +132,6 @@ from iceberg_relative_io_spark.catalog.spark_table import (
 )
 from iceberg_relative_io_spark.catalog.table_ops import (
     CommitFailedError,
-    NoSuchTableError,
     TableOperations,
 )
 
@@ -611,35 +618,193 @@ _MANIFEST_FILE_SCHEMA = {
 
 
 # ---------------------------------------------------------------------------
+# snapshot producer: every manifest, manifest list and mirror snapshot
+# ---------------------------------------------------------------------------
+
+def _current_schema(doc: dict) -> dict:
+    return next(
+        s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
+    )
+
+
+def _default_spec(doc: dict) -> dict:
+    return next(
+        p for p in doc["partition-specs"] if p["spec-id"] == doc["default-spec-id"]
+    )
+
+
+def _head_manifests(doc: dict) -> list[dict]:
+    """The manifest-list records of the current snapshot (none without
+    one)."""
+    if doc.get("current-snapshot-id") is None:
+        return []
+    cur = next(
+        s for s in doc["snapshots"]
+        if s["snapshot-id"] == doc["current-snapshot-id"]
+    )
+    return _avro_records(cur["manifest-list"])
+
+
+def _next_ids(doc: dict) -> tuple[int, int]:
+    """``(sequence number, snapshot id)`` of the next snapshot."""
+    return (
+        doc["last-sequence-number"] + 1,
+        max((s["snapshot-id"] for s in doc["snapshots"]), default=0) + 1,
+    )
+
+
+def _write_manifests(
+    ops: TableOperations, doc: dict, snap_id: int, *groups: list[dict]
+) -> list[dict]:
+    """Write each non-empty group of manifest entries as one manifest
+    under ``doc``'s current schema and default partition spec, through
+    ``ops.io``, and return the groups' manifest-list records. A record
+    states only what its entries give: delete entries make a delete
+    manifest (``content=1``), the added / existing / deleted file and
+    row counts are the entries with status 1 / 0 / 2 and their
+    ``record_count``, and the sequence bounds are the max and min of
+    their ``sequence_number``. An empty group writes nothing."""
+    spec_fields = _spec_fields_from_doc(doc)
+    entry_schema = _manifest_entry_schema(spec_fields)
+    stamp = {
+        "schema": json.dumps(_current_schema(doc)),
+        "schema-id": str(doc["current-schema-id"]),
+        "partition-spec": json.dumps(_default_spec(doc)["fields"]),
+        "partition-spec-id": str(doc["default-spec-id"]),
+        "format-version": "2",
+    }
+    records = []
+    for entries in groups:
+        if not entries:
+            continue
+        content = int(entries[0]["data_file"]["content"] != 0)
+        path = ops.io.absolute(
+            f"{ops.metadata_dir}/{uuid.uuid4()}-m{content}.avro"
+        )
+        data = avro_ocf.write_ocf(
+            entry_schema,
+            entries,
+            metadata={**stamp, "content": "deletes" if content else "data"},
+        )
+        ops.io.write_bytes(path, data)
+        files = [0, 0, 0]  # by status: EXISTING, ADDED, DELETED
+        rows = [0, 0, 0]
+        for e in entries:
+            files[e["status"]] += 1
+            rows[e["status"]] += int(e["data_file"].get("record_count") or 0)
+        seqs = [e["sequence_number"] for e in entries]
+        records.append(
+            {
+                "manifest_path": path,
+                "manifest_length": len(data),
+                "partition_spec_id": doc["default-spec-id"],
+                "content": content,
+                "sequence_number": max(seqs),
+                "min_sequence_number": min(seqs),
+                "added_snapshot_id": snap_id,
+                "added_data_files_count": files[1],
+                "existing_data_files_count": files[0],
+                "deleted_data_files_count": files[2],
+                "added_rows_count": rows[1],
+                "existing_rows_count": rows[0],
+                "deleted_rows_count": rows[2],
+            }
+        )
+    return records
+
+
+def _write_manifest_list(
+    ops: TableOperations, snap_id: int, records: list[dict]
+) -> str:
+    """Write a snapshot's manifest list through ``ops.io``; returns its
+    absolute path."""
+    path = ops.io.absolute(
+        f"{ops.metadata_dir}/snap-{snap_id}-1-{uuid.uuid4()}.avro"
+    )
+    ops.io.write_bytes(
+        path,
+        avro_ocf.write_ocf(
+            _MANIFEST_FILE_SCHEMA, records, metadata={"format-version": "2"}
+        ),
+    )
+    return path
+
+
+def _commit_snapshot(
+    ops: TableOperations,
+    version: int,
+    doc: dict,
+    snap_id: int,
+    seq: int,
+    ml_path: str,
+    summary: dict,
+    properties: dict | None = None,
+) -> str:
+    """Commit a mirror snapshot over the manifest list ``ml_path``:
+    append it (parented on the current snapshot) with its
+    ``snapshot-log`` entry, move ``refs.main`` and the current snapshot
+    to it, raise ``last-sequence-number`` to ``seq`` (never lower it: a
+    manifest rewrite keeps the sequence, a pinned position delete may
+    sit below it), replace ``properties`` when given, and commit through
+    ``_commit_mirror``. Returns the new metadata file's absolute path."""
+    now_ms = int(time.time() * 1000)
+    snap = {
+        "sequence-number": seq,
+        "snapshot-id": snap_id,
+        "timestamp-ms": now_ms,
+        "summary": summary,
+        "manifest-list": ml_path,
+        "schema-id": doc["current-schema-id"],
+    }
+    if doc.get("current-snapshot-id") is not None:
+        snap["parent-snapshot-id"] = doc["current-snapshot-id"]
+    new_doc = {
+        **doc,
+        "last-sequence-number": max(doc["last-sequence-number"], seq),
+        "last-updated-ms": now_ms,
+        "current-snapshot-id": snap_id,
+        "refs": {
+            **doc.get("refs", {}),
+            "main": {"snapshot-id": snap_id, "type": "branch"},
+        },
+        "snapshots": doc["snapshots"] + [snap],
+        "snapshot-log": doc.get("snapshot-log", [])
+        + [{"timestamp-ms": now_ms, "snapshot-id": snap_id}],
+    }
+    if properties is not None:
+        new_doc["properties"] = properties
+    return _commit_mirror(ops, version, doc, new_doc)
+
+
+# ---------------------------------------------------------------------------
 # export
 # ---------------------------------------------------------------------------
 
 def _export_one_snapshot(
     table: RelativeTable,
-    dest_dir: str,
+    mirror: TableOperations,
+    doc: dict,
     meta: dict,
     sid: int | None,
     export_id: int,
     seq_of: dict,
-    schema_json: dict,
-    clean_spec: list[dict],
     spec_fields: list[dict],
-    entry_schema: dict,
     field_ids: dict,
     rows_cache: dict | None = None,
 ) -> dict:
     """Write the data manifest, the delete manifest (when the snapshot
     carries live equality deletes) and the manifest list for ONE
-    snapshot; returns paths + counts + the snapshot's sequence number.
-    ``rows_cache`` (path -> num_rows) is shared across a history export
-    so each delete file's footer is read once, not once per snapshot."""
+    snapshot through the producer, under the export's ``doc``; returns
+    paths + counts + the snapshot's sequence number. ``rows_cache``
+    (path -> num_rows) is shared across a history export so each delete
+    file's footer is read once, not once per snapshot."""
     ops = table.ops
     files = table._data_files(meta, sid) if sid is not None else []
     dels = table._delete_files(meta, sid) if sid is not None else []
 
     entries = []
     total_rows = 0
-    bound_fields = _boundable_fields(schema_json)
+    bound_fields = _boundable_fields(_current_schema(doc))
     # bucket-hash migration era point (migrate_bucket_hash): files at or
     # below it carry LEGACY xxhash64 bucket tuples, which must export as
     # NULL — Iceberg's spec-evolution rule (null partition values are
@@ -729,100 +894,17 @@ def _export_one_snapshot(
             }
         )
 
-    def _seq_bounds(es: list[dict]) -> tuple[int, int]:
-        seqs = [e["sequence_number"] for e in es] or [1]
-        return min(seqs), max(seqs)
-
-    manifest_path = os.path.join(
-        dest_dir, "metadata", f"{uuid.uuid4()}-m0.avro"
-    )
-    manifest_bytes = avro_ocf.write_ocf(
-        entry_schema,
-        entries,
-        metadata={
-            "schema": json.dumps(schema_json),
-            "schema-id": "0",
-            "partition-spec": json.dumps(clean_spec),
-            "partition-spec-id": "0",
-            "format-version": "2",
-            "content": "data",
-        },
-    )
-    with open(manifest_path, "wb") as fh:
-        fh.write(manifest_bytes)
-    lo, hi = _seq_bounds(entries)
-    ml_records = [
-        {
-            "manifest_path": manifest_path,
-            "manifest_length": len(manifest_bytes),
-            "partition_spec_id": 0,
-            "content": 0,  # data
-            "sequence_number": hi,
-            "min_sequence_number": lo,
-            "added_snapshot_id": export_id,
-            "added_data_files_count": len(entries),
-            "existing_data_files_count": 0,
-            "deleted_data_files_count": 0,
-            "added_rows_count": total_rows,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
-    ]
-    del_manifest_path = None
-    if del_entries:
-        del_manifest_path = os.path.join(
-            dest_dir, "metadata", f"{uuid.uuid4()}-m1.avro"
-        )
-        del_bytes = avro_ocf.write_ocf(
-            entry_schema,
-            del_entries,
-            metadata={
-                "schema": json.dumps(schema_json),
-                "schema-id": "0",
-                "partition-spec": json.dumps(clean_spec),
-                "partition-spec-id": "0",
-                "format-version": "2",
-                "content": "deletes",
-            },
-        )
-        with open(del_manifest_path, "wb") as fh:
-            fh.write(del_bytes)
-        lo, hi = _seq_bounds(del_entries)
-        ml_records.append(
-            {
-                "manifest_path": del_manifest_path,
-                "manifest_length": len(del_bytes),
-                "partition_spec_id": 0,
-                "content": 1,  # deletes
-                "sequence_number": hi,
-                "min_sequence_number": lo,
-                "added_snapshot_id": export_id,
-                "added_data_files_count": len(del_entries),
-                "existing_data_files_count": 0,
-                "deleted_data_files_count": 0,
-                "added_rows_count": total_del_rows,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        )
-
-    ml_path = os.path.join(
-        dest_dir, "metadata", f"snap-{export_id}-1-{uuid.uuid4()}.avro"
-    )
-    ml_bytes = avro_ocf.write_ocf(
-        _MANIFEST_FILE_SCHEMA, ml_records, metadata={"format-version": "2"}
-    )
-    with open(ml_path, "wb") as fh:
-        fh.write(ml_bytes)
+    records = _write_manifests(mirror, doc, export_id, entries, del_entries)
+    by_content = {r["content"]: r["manifest_path"] for r in records}
     snap_seq = max(
         [seq_of.get(f["_snap"], 1) for f in files]
         + [seq_of.get(d["_snap"], 1) for d in dels]
         + [1]
     )
     return {
-        "manifest-list": ml_path,
-        "manifest": manifest_path,
-        "delete-manifest": del_manifest_path,
+        "manifest-list": _write_manifest_list(mirror, export_id, records),
+        "manifest": by_content.get(0),
+        "delete-manifest": by_content.get(1),
         "data-files": len(entries),
         "delete-files": len(del_entries),
         "records": total_rows,
@@ -895,7 +977,6 @@ def export_iceberg(
 
     schema_json, last_col = iceberg_schema(table.schema(), meta.get("column-ids"))
     spec_fields = _exportable_spec(table, schema_json["fields"])
-    entry_schema = _manifest_entry_schema(spec_fields)
     field_ids = {f["name"]: f["id"] for f in schema_json["fields"]}
     clean_spec = [
         {k: v for k, v in sf.items() if not k.startswith("_")}
@@ -970,59 +1051,10 @@ def export_iceberg(
                         "compact() before export"
                     )
 
-    os.makedirs(os.path.join(dest_dir, "metadata"), exist_ok=True)
+    # --- table metadata (snapshots are filled in below) --------------------
     now_ms = int(time.time() * 1000)
-
-    snapshots_meta = []
-    snapshot_log = []
-    prev: int | None = None
-    prev_total_files = 0
-    head_info: dict = {}
-    head_export_id = 1
-    rows_cache: dict = {}
-    for s in chain:
-        export_id = int(s) if s is not None else 1
-        info = _export_one_snapshot(
-            table, dest_dir, meta, s, export_id, seq_of,
-            schema_json, clean_spec, spec_fields, entry_schema, field_ids,
-            rows_cache=rows_cache,
-        )
-        src_entry = table._snapshot_entry(meta, s) if s is not None else {}
-        ts = int(src_entry.get("timestamp-ms", now_ms))
-        snap_doc = {
-            "sequence-number": info["sequence-number"],
-            "snapshot-id": export_id,
-            "timestamp-ms": ts,
-            "summary": {
-                "operation": _ICEBERG_OPERATION.get(
-                    src_entry.get("operation", "append"), "append"
-                ),
-                # appends grow the file set monotonically, so the total
-                # delta IS the added count (consumed by the streaming
-                # tail's admission control); non-append totals can
-                # shrink, hence the floor
-                "added-data-files": str(
-                    max(0, info["data-files"] - prev_total_files)
-                ),
-                "total-records": str(info["records"]),
-                "total-data-files": str(info["data-files"]),
-                "total-delete-files": str(info["delete-files"]),
-                "total-position-deletes": "0",
-                "total-equality-deletes": str(info["delete-records"]),
-            },
-            "manifest-list": info["manifest-list"],
-            "schema-id": 0,
-        }
-        if prev is not None:
-            snap_doc["parent-snapshot-id"] = prev
-        snapshots_meta.append(snap_doc)
-        snapshot_log.append({"timestamp-ms": ts, "snapshot-id": export_id})
-        prev = export_id
-        prev_total_files = info["data-files"]
-        head_info = info
-        head_export_id = export_id
-
-    # --- table metadata ----------------------------------------------------
+    snapshots_meta: list[dict] = []
+    snapshot_log: list[dict] = []
     doc = {
         "format-version": 2,
         "table-uuid": str(uuid.uuid4()),
@@ -1073,8 +1105,8 @@ def export_iceberg(
             "write.format.default": "parquet",
             "schema.name-mapping.default": json.dumps(name_mapping),
         },
-        "current-snapshot-id": head_export_id,
-        "refs": {"main": {"snapshot-id": head_export_id, "type": "branch"}},
+        "current-snapshot-id": None,
+        "refs": {},
         "snapshots": snapshots_meta,
         "statistics": [],
         "partition-statistics": [],
@@ -1086,9 +1118,57 @@ def export_iceberg(
     # HadoopRelativeTableOperations.java:160-162)
     if meta.get("properties", {}).get("write.metadata.compression") == "gzip":
         doc["properties"]["write.metadata.compression"] = "gzip"
-    ops = _mirror_ops(dest_dir)
+    mirror = _mirror_ops(dest_dir)
+    prev: int | None = None
+    prev_total_files = 0
+    head_info: dict = {}
+    head_export_id = 1
+    rows_cache: dict = {}
+    for s in chain:
+        export_id = int(s) if s is not None else 1
+        info = _export_one_snapshot(
+            table, mirror, doc, meta, s, export_id, seq_of, spec_fields,
+            field_ids, rows_cache=rows_cache,
+        )
+        src_entry = table._snapshot_entry(meta, s) if s is not None else {}
+        ts = int(src_entry.get("timestamp-ms", now_ms))
+        snap_doc = {
+            "sequence-number": info["sequence-number"],
+            "snapshot-id": export_id,
+            "timestamp-ms": ts,
+            "summary": {
+                "operation": _ICEBERG_OPERATION.get(
+                    src_entry.get("operation", "append"), "append"
+                ),
+                # appends grow the file set monotonically, so the total
+                # delta IS the added count (consumed by the streaming
+                # tail's admission control); non-append totals can
+                # shrink, hence the floor
+                "added-data-files": str(
+                    max(0, info["data-files"] - prev_total_files)
+                ),
+                "total-records": str(info["records"]),
+                "total-data-files": str(info["data-files"]),
+                "total-delete-files": str(info["delete-files"]),
+                "total-position-deletes": "0",
+                "total-equality-deletes": str(info["delete-records"]),
+            },
+            "manifest-list": info["manifest-list"],
+            "schema-id": 0,
+        }
+        if prev is not None:
+            snap_doc["parent-snapshot-id"] = prev
+        snapshots_meta.append(snap_doc)
+        snapshot_log.append({"timestamp-ms": ts, "snapshot-id": export_id})
+        prev = export_id
+        prev_total_files = info["data-files"]
+        head_info = info
+        head_export_id = export_id
+
+    doc["current-snapshot-id"] = head_export_id
+    doc["refs"] = {"main": {"snapshot-id": head_export_id, "type": "branch"}}
     try:
-        ops.commit(0, doc)
+        mirror.commit(0, doc)
     except CommitFailedError as exc:
         # v1 is create-if-absent: over an existing mirror the forward
         # probe would never reach a rewritten v1, so refuse instead
@@ -1096,7 +1176,7 @@ def export_iceberg(
             f"export_iceberg: {dest_dir} already holds Iceberg metadata "
             f"({exc}); export into an empty directory"
         ) from None
-    meta_path = ops.io.absolute(ops.find_metadata_file(1))
+    meta_path = mirror.io.absolute(mirror.find_metadata_file(1))
     return {
         "metadata": meta_path,
         "manifest-list": head_info["manifest-list"],
@@ -1119,15 +1199,9 @@ def _spec_fields_from_doc(doc: dict) -> list[dict]:
     consume) from an exported table's metadata document — used when
     appending artifacts to an EXISTING v2 directory rather than
     exporting from a RelativeTable."""
-    schema = next(
-        s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
-    )
-    by_id = {f["id"]: f for f in schema["fields"]}
-    spec = next(
-        p for p in doc["partition-specs"] if p["spec-id"] == doc["default-spec-id"]
-    )
+    by_id = {f["id"]: f for f in _current_schema(doc)["fields"]}
     out = []
-    for pf in spec["fields"]:
+    for pf in _default_spec(doc)["fields"]:
         tr = pf["transform"]
         if tr.startswith("bucket["):
             kind = "bucket"
@@ -1169,10 +1243,9 @@ def write_position_deletes(
 
     ops, doc, version = _open_mirror(table_dir)
     spec_fields = _spec_fields_from_doc(doc)
-    entry_schema = _manifest_entry_schema(spec_fields)
-
-    seq = int(sequence) if sequence is not None else doc["last-sequence-number"] + 1
-    snap_id = max((s["snapshot-id"] for s in doc["snapshots"]), default=0) + 1
+    seq, snap_id = _next_ids(doc)
+    if sequence is not None:
+        seq = int(sequence)
 
     # spec: delete rows sorted by file_path then pos, reserved field ids
     rows = sorted(
@@ -1217,94 +1290,20 @@ def write_position_deletes(
             "equality_ids": None,
         },
     }
-    manifest_path = os.path.join(
-        table_dir, "metadata", f"{uuid.uuid4()}-m0.avro"
-    )
-    clean_spec = [
-        {k: v for k, v in f.items() if not k.startswith("_")}
-        for f in spec_fields
-    ]
-    schema_json = next(
-        s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
-    )
-    mbytes = avro_ocf.write_ocf(
-        entry_schema,
-        [entry],
-        metadata={
-            "schema": json.dumps(schema_json),
-            "schema-id": str(doc["current-schema-id"]),
-            "partition-spec": json.dumps(clean_spec),
-            "partition-spec-id": str(doc["default-spec-id"]),
-            "format-version": "2",
-            "content": "deletes",
+    records = _write_manifests(ops, doc, snap_id, [entry])
+    # every prior manifest carried forward + ours
+    ml_path = _write_manifest_list(ops, snap_id, _head_manifests(doc) + records)
+    meta_path = _commit_snapshot(
+        ops, version, doc, snap_id, seq, ml_path,
+        {
+            "operation": "delete",
+            "total-position-deletes": str(len(rows)),
+            "total-equality-deletes": "0",
         },
     )
-    with open(manifest_path, "wb") as fh:
-        fh.write(mbytes)
-
-    # new manifest list = every prior manifest carried forward + ours
-    cur = next(
-        s for s in doc["snapshots"]
-        if s["snapshot-id"] == doc["current-snapshot-id"]
-    )
-    prior = _avro_records(cur["manifest-list"])
-    ml_records = list(prior) + [
-        {
-            "manifest_path": manifest_path,
-            "manifest_length": len(mbytes),
-            "partition_spec_id": doc["default-spec-id"],
-            "content": 1,  # deletes
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snap_id,
-            "added_data_files_count": 1,
-            "existing_data_files_count": 0,
-            "deleted_data_files_count": 0,
-            "added_rows_count": len(rows),
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
-    ]
-    ml_path = os.path.join(
-        table_dir, "metadata", f"snap-{snap_id}-1-{uuid.uuid4()}.avro"
-    )
-    ml_bytes = avro_ocf.write_ocf(
-        _MANIFEST_FILE_SCHEMA, ml_records, metadata={"format-version": "2"}
-    )
-    with open(ml_path, "wb") as fh:
-        fh.write(ml_bytes)
-
-    now_ms = int(time.time() * 1000)
-    new_doc = dict(doc)
-    new_doc["last-sequence-number"] = max(doc["last-sequence-number"], seq)
-    new_doc["last-updated-ms"] = now_ms
-    new_doc["current-snapshot-id"] = snap_id
-    new_doc["refs"] = {
-        **doc.get("refs", {}),
-        "main": {"snapshot-id": snap_id, "type": "branch"},
-    }
-    new_doc["snapshots"] = doc["snapshots"] + [
-        {
-            "sequence-number": seq,
-            "snapshot-id": snap_id,
-            "parent-snapshot-id": doc["current-snapshot-id"],
-            "timestamp-ms": now_ms,
-            "summary": {
-                "operation": "delete",
-                "total-position-deletes": str(len(rows)),
-                "total-equality-deletes": "0",
-            },
-            "manifest-list": ml_path,
-            "schema-id": doc["current-schema-id"],
-        }
-    ]
-    new_doc["snapshot-log"] = doc.get("snapshot-log", []) + [
-        {"timestamp-ms": now_ms, "snapshot-id": snap_id}
-    ]
-    meta_path = _commit_mirror(ops, version, doc, new_doc)
     return {
         "delete-file": del_path,
-        "manifest": manifest_path,
+        "manifest": records[0]["manifest_path"],
         "manifest-list": ml_path,
         "metadata": meta_path,
         "snapshot-id": snap_id,
@@ -1331,17 +1330,8 @@ def _type_sig(t) -> object:
     }
 
 
-def _unlink_spark_file(path: str) -> None:
-    """Remove a file Spark wrote and the Hadoop ``.crc`` sidecar beside
-    it (``paths.crc_sidecar``), so deleting a file leaves no orphan."""
-    os.unlink(path)
-    try:
-        os.unlink(crc_sidecar(path))
-    except FileNotFoundError:
-        pass
-
-
 def _write_data_files(
+    io: RelativeFileIO,
     table_dir: str,
     doc: dict,
     df: DataFrame,
@@ -1362,13 +1352,11 @@ def _write_data_files(
     as several when AQE splits a value past the advisory partition
     size; an unpartitioned write keeps the input's partitioning.
     Zero-row part files (empty micro-batches, empty partitions) are
-    unlinked, not entered."""
+    deleted through ``io``, not entered."""
     import pyarrow.parquet as pq
     from urllib.parse import unquote as _unq
 
-    schema_json = next(
-        s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
-    )
+    schema_json = _current_schema(doc)
     spec_fields = _spec_fields_from_doc(doc)
     by_id = {f["id"]: f for f in schema_json["fields"]}
     out_df = df
@@ -1419,7 +1407,7 @@ def _write_data_files(
             md = pq.ParquetFile(fpath).metadata
             rows = int(md.num_rows)
             if rows == 0:
-                _unlink_spark_file(fpath)
+                io.delete_spark_file(fpath)
                 continue
             total_rows += rows
             lower, upper = _file_column_bounds(md, bound_fields)
@@ -1485,13 +1473,7 @@ def append_iceberg(
     with the remedy in the message: schema mismatch, and truncate on
     non-string sources (the native layout never produces those)."""
     ops, doc, version = _open_mirror(table_dir)
-
-    spec = next(
-        p for p in doc["partition-specs"] if p["spec-id"] == doc["default-spec-id"]
-    )
-    schema_json = next(
-        s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
-    )
+    schema_json = _current_schema(doc)
     incoming, _ = iceberg_schema(df.schema, None)
     want = [(f["name"], _type_sig(f["type"])) for f in schema_json["fields"]]
     got = [(f["name"], _type_sig(f["type"])) for f in incoming["fields"]]
@@ -1500,98 +1482,28 @@ def append_iceberg(
             f"schema mismatch: table expects {want}, dataframe has {got}"
         )
 
-    spec_fields = _spec_fields_from_doc(doc)
-    seq = doc["last-sequence-number"] + 1
-    snap_id = max((s["snapshot-id"] for s in doc["snapshots"]), default=0) + 1
+    seq, snap_id = _next_ids(doc)
     entries, total_rows = _write_data_files(
-        table_dir, doc, df, seq, snap_id, prefix="append"
+        ops.io, table_dir, doc, df, seq, snap_id, prefix="append"
     )
-    entry_schema = _manifest_entry_schema(spec_fields)
-
-    manifest_path = os.path.join(
-        table_dir, "metadata", f"{uuid.uuid4()}-m0.avro"
-    )
-    mbytes = avro_ocf.write_ocf(
-        entry_schema,
-        entries,
-        metadata={
-            "schema": json.dumps(schema_json),
-            "schema-id": str(doc["current-schema-id"]),
-            "partition-spec": json.dumps(spec["fields"]),
-            "partition-spec-id": str(doc["default-spec-id"]),
-            "format-version": "2",
-            "content": "data",
-        },
-    )
-    with open(manifest_path, "wb") as fh:
-        fh.write(mbytes)
-
+    records = _write_manifests(ops, doc, snap_id, entries)
     # carry every prior manifest forward (deletes keep their scoping)
-    prior = []
-    if doc.get("current-snapshot-id") is not None:
-        cur = next(
-            s for s in doc["snapshots"]
-            if s["snapshot-id"] == doc["current-snapshot-id"]
-        )
-        prior = _avro_records(cur["manifest-list"])
-    ml_records = list(prior) + [
-        {
-            "manifest_path": manifest_path,
-            "manifest_length": len(mbytes),
-            "partition_spec_id": doc["default-spec-id"],
-            "content": 0,  # data
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snap_id,
-            "added_data_files_count": len(entries),
-            "existing_data_files_count": 0,
-            "deleted_data_files_count": 0,
-            "added_rows_count": total_rows,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
-    ]
-    ml_path = os.path.join(
-        table_dir, "metadata", f"snap-{snap_id}-1-{uuid.uuid4()}.avro"
-    )
-    ml_bytes = avro_ocf.write_ocf(
-        _MANIFEST_FILE_SCHEMA, ml_records, metadata={"format-version": "2"}
-    )
-    with open(ml_path, "wb") as fh:
-        fh.write(ml_bytes)
-
-    now_ms = int(time.time() * 1000)
-    new_doc = dict(doc)
-    new_doc["last-sequence-number"] = seq
-    new_doc["last-updated-ms"] = now_ms
-    new_doc["current-snapshot-id"] = snap_id
-    new_doc["refs"] = {
-        **doc.get("refs", {}),
-        "main": {"snapshot-id": snap_id, "type": "branch"},
+    ml_path = _write_manifest_list(ops, snap_id, _head_manifests(doc) + records)
+    summary = {
+        "operation": "append",
+        "added-data-files": str(len(entries)),
+        "added-records": str(total_rows),
+        # extra_summary: idempotent stream sinks record their epoch
+        # key here (stream-batch-id) — same hook as the native format
+        **(extra_summary or {}),
     }
-    snap_doc = {
-        "sequence-number": seq,
-        "snapshot-id": snap_id,
-        "timestamp-ms": now_ms,
-        "summary": {
-            "operation": "append",
-            "added-data-files": str(len(entries)),
-            "added-records": str(total_rows),
-            # extra_summary: idempotent stream sinks record their epoch
-            # key here (stream-batch-id) — same hook as the native format
-            **(extra_summary or {}),
-        },
-        "manifest-list": ml_path,
-        "schema-id": doc["current-schema-id"],
-    }
-    if doc.get("current-snapshot-id") is not None:
-        snap_doc["parent-snapshot-id"] = doc["current-snapshot-id"]
     # checkpoint-scoped epoch keys ALSO persist as a table property
     # (max committed batch id per checkpoint) inside this same atomic
     # metadata commit: properties ride metadata, not snapshots, so the
     # idempotence probe (seen_stream_epoch_iceberg) survives
     # expire_snapshots_iceberg reaping the marker snapshot — the same
     # expiry-proof contract as the native format's _commit_snapshot
+    props = None
     ek_parts = _epoch_key_parts((extra_summary or {}).get("stream-batch-id"))
     if ek_parts is not None:
         prop = _STREAM_EPOCH_PROP + ek_parts[0]
@@ -1600,15 +1512,12 @@ def append_iceberg(
         props[prop] = str(
             max(ek_parts[1], int(prev_max)) if prev_max is not None else ek_parts[1]
         )
-        new_doc["properties"] = props
-    new_doc["snapshots"] = doc["snapshots"] + [snap_doc]
-    new_doc["snapshot-log"] = doc.get("snapshot-log", []) + [
-        {"timestamp-ms": now_ms, "snapshot-id": snap_id}
-    ]
-    meta_path = _commit_mirror(ops, version, doc, new_doc)
+    meta_path = _commit_snapshot(
+        ops, version, doc, snap_id, seq, ml_path, summary, props
+    )
     return {
         "metadata": meta_path,
-        "manifest": manifest_path,
+        "manifest": records[0]["manifest_path"] if records else None,
         "manifest-list": ml_path,
         "snapshot-id": snap_id,
         "sequence-number": seq,
@@ -1695,13 +1604,6 @@ def _commit_mirror(
     return ops.io.absolute(ops.find_metadata_file(new_version))
 
 
-def _commit_next_metadata(
-    table_dir: str, version: int, doc: dict, new_doc: dict
-) -> str:
-    """``_commit_mirror`` on a fresh ops for ``table_dir``."""
-    return _commit_mirror(_mirror_ops(table_dir), version, doc, new_doc)
-
-
 def rewrite_manifests_iceberg(table_dir: str) -> dict:
     """Merge the current snapshot's DATA manifests into one — the
     maintenance op that keeps a per-batch ``append_iceberg`` mirror
@@ -1717,112 +1619,34 @@ def rewrite_manifests_iceberg(table_dir: str) -> dict:
     path. No data file is touched: cost is O(manifest entries), metadata
     only — the exported twin of ``RelativeTable.rewrite_manifests``."""
     ops, doc, version = _open_mirror(table_dir)
-    cur = next(
-        s for s in doc["snapshots"]
-        if s["snapshot-id"] == doc["current-snapshot-id"]
-    )
-    mls = _avro_records(cur["manifest-list"])
-
-    spec_fields = _spec_fields_from_doc(doc)
-    entry_schema = _manifest_entry_schema(spec_fields)
-    schema_json = next(
-        s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
-    )
-    spec = next(
-        p for p in doc["partition-specs"] if p["spec-id"] == doc["default-spec-id"]
-    )
-
     merged: list[dict] = []
     delete_mfs: list[dict] = []
     n_data_manifests = 0
-    total_rows = 0
-    for mf in mls:
+    for mf in _head_manifests(doc):
         if mf["content"] != 0:
             delete_mfs.append(mf)
             continue
         n_data_manifests += 1
-        entries = _avro_records(mf["manifest_path"])
-        for e in entries:
+        for e in _avro_records(mf["manifest_path"]):
             if e["status"] == 2:  # DELETED — drop from the merge
                 continue
             merged.append({**e, "status": 0})  # EXISTING, sequences kept
-            total_rows += int(e["data_file"].get("record_count") or 0)
 
-    snap_id = max((s["snapshot-id"] for s in doc["snapshots"]), default=0) + 1
-    manifest_path = os.path.join(
-        table_dir, "metadata", f"{uuid.uuid4()}-m0.avro"
-    )
-    mbytes = avro_ocf.write_ocf(
-        entry_schema,
-        merged,
-        metadata={
-            "schema": json.dumps(schema_json),
-            "schema-id": str(doc["current-schema-id"]),
-            "partition-spec": json.dumps(spec["fields"]),
-            "partition-spec-id": str(doc["default-spec-id"]),
-            "format-version": "2",
-            "content": "data",
+    snap_id = _next_ids(doc)[1]
+    records = _write_manifests(ops, doc, snap_id, merged)
+    ml_path = _write_manifest_list(ops, snap_id, records + delete_mfs)
+    # metadata-only: the snapshot keeps the table's sequence number
+    meta_path = _commit_snapshot(
+        ops, version, doc, snap_id, doc["last-sequence-number"], ml_path,
+        {
+            "operation": "replace",
+            "manifests-replaced": str(n_data_manifests),
+            "manifests-created": str(len(records)),
         },
     )
-    with open(manifest_path, "wb") as fh:
-        fh.write(mbytes)
-    seqs = [e["sequence_number"] for e in merged] or [1]
-    ml_records = [
-        {
-            "manifest_path": manifest_path,
-            "manifest_length": len(mbytes),
-            "partition_spec_id": doc["default-spec-id"],
-            "content": 0,
-            "sequence_number": max(seqs),
-            "min_sequence_number": min(seqs),
-            "added_snapshot_id": snap_id,
-            "added_data_files_count": 0,
-            "existing_data_files_count": len(merged),
-            "deleted_data_files_count": 0,
-            "added_rows_count": 0,
-            "existing_rows_count": total_rows,
-            "deleted_rows_count": 0,
-        }
-    ] + delete_mfs
-    ml_path = os.path.join(
-        table_dir, "metadata", f"snap-{snap_id}-1-{uuid.uuid4()}.avro"
-    )
-    ml_bytes = avro_ocf.write_ocf(
-        _MANIFEST_FILE_SCHEMA, ml_records, metadata={"format-version": "2"}
-    )
-    with open(ml_path, "wb") as fh:
-        fh.write(ml_bytes)
-
-    now_ms = int(time.time() * 1000)
-    new_doc = dict(doc)
-    new_doc["last-updated-ms"] = now_ms
-    new_doc["current-snapshot-id"] = snap_id
-    new_doc["refs"] = {
-        **doc.get("refs", {}),
-        "main": {"snapshot-id": snap_id, "type": "branch"},
-    }
-    new_doc["snapshots"] = doc["snapshots"] + [
-        {
-            "sequence-number": doc["last-sequence-number"],
-            "snapshot-id": snap_id,
-            "parent-snapshot-id": doc["current-snapshot-id"],
-            "timestamp-ms": now_ms,
-            "summary": {
-                "operation": "replace",
-                "manifests-replaced": str(n_data_manifests),
-                "manifests-created": "1",
-            },
-            "manifest-list": ml_path,
-            "schema-id": doc["current-schema-id"],
-        }
-    ]
-    new_doc["snapshot-log"] = doc.get("snapshot-log", []) + [
-        {"timestamp-ms": now_ms, "snapshot-id": snap_id}
-    ]
-    meta_path = _commit_mirror(ops, version, doc, new_doc)
     return {
         "metadata": meta_path,
-        "manifest": manifest_path,
+        "manifest": records[0]["manifest_path"] if records else None,
         "manifest-list": ml_path,
         "snapshot-id": snap_id,
         "merged-manifests": n_data_manifests,
@@ -1831,6 +1655,7 @@ def rewrite_manifests_iceberg(table_dir: str) -> dict:
 
 
 def _write_delete_key_files(
+    io: RelativeFileIO,
     table_dir: str,
     keys: DataFrame,
     spec_fields: list[dict],
@@ -1842,7 +1667,7 @@ def _write_delete_key_files(
     ``<table>/data/delete-<uuid>`` (a DISTRIBUTED Spark write — no row
     visits the driver) and return the spec-shaped ``content=2`` manifest
     entries plus the total key-tuple count. Zero-row part files are
-    unlinked, not entered. Shared by ``delete_where_iceberg``,
+    deleted through ``io``, not entered. Shared by ``delete_where_iceberg``,
     ``update_where_iceberg``, and ``merge_iceberg``."""
     import pyarrow.parquet as pq
 
@@ -1856,7 +1681,7 @@ def _write_delete_key_files(
         fpath = os.path.join(del_dir, name)
         rows = int(pq.ParquetFile(fpath).metadata.num_rows)
         if rows == 0:
-            _unlink_spark_file(fpath)
+            io.delete_spark_file(fpath)
             continue
         total_rows += rows
         entries.append(
@@ -1903,10 +1728,7 @@ def delete_where_iceberg(
     ``RelativeTable.delete_where_mor`` (spark_table.py), re-expressed as
     external Iceberg artifacts."""
     ops, doc, version = _open_mirror(table_dir)
-    schema_json = next(
-        s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
-    )
-    by_name = {f["name"]: f for f in schema_json["fields"]}
+    by_name = {f["name"]: f for f in _current_schema(doc)["fields"]}
     missing = [c for c in equality_cols if c not in by_name]
     if missing:
         raise ValueError(f"equality columns not in schema: {missing}")
@@ -1918,30 +1740,30 @@ def delete_where_iceberg(
         .select(*equality_cols)
         .distinct()
     )
-    spec_fields = _spec_fields_from_doc(doc)
-    seq = doc["last-sequence-number"] + 1
-    snap_id = max((s["snapshot-id"] for s in doc["snapshots"]), default=0) + 1
+    seq, snap_id = _next_ids(doc)
     entries, total_rows = _write_delete_key_files(
-        table_dir, keys, spec_fields, eq_ids, seq, snap_id
-    )
-
-    # shared MOR-delete commit tail (one copy — a second one drifted
-    # apart from this helper before the round-7 review merged them)
-    return _commit_delete_manifest(
-        table_dir,
-        ops,
-        doc,
-        version,
-        entries,
-        total_rows,
-        seq,
+        ops.io, table_dir, keys, _spec_fields_from_doc(doc), eq_ids, seq,
         snap_id,
+    )
+    records = _write_manifests(ops, doc, snap_id, entries)
+    ml_path = _write_manifest_list(ops, snap_id, _head_manifests(doc) + records)
+    meta_path = _commit_snapshot(
+        ops, version, doc, snap_id, seq, ml_path,
         {
             "operation": "delete",
             "total-equality-deletes": str(total_rows),
             "total-position-deletes": "0",
         },
     )
+    return {
+        "metadata": meta_path,
+        "manifest": records[0]["manifest_path"] if records else None,
+        "manifest-list": ml_path,
+        "snapshot-id": snap_id,
+        "sequence-number": seq,
+        "delete-files": len(entries),
+        "delete-records": total_rows,
+    }
 
 
 def delete_positions_iceberg(
@@ -1993,11 +1815,9 @@ def delete_positions_iceberg(
         .select("file_path", "pos")
     )
 
-    seq = doc["last-sequence-number"] + 1
-    snap_id = max((s["snapshot-id"] for s in doc["snapshots"]), default=0) + 1
-    spec_fields = _spec_fields_from_doc(doc)
+    seq, snap_id = _next_ids(doc)
     entries, total_rows = _write_position_delete_files(
-        table_dir, hits, spec_fields, seq, snap_id
+        ops.io, table_dir, hits, _spec_fields_from_doc(doc), seq, snap_id
     )
     if not entries:
         return {
@@ -2007,21 +1827,25 @@ def delete_positions_iceberg(
             "delete-files": 0,
             "delete-records": 0,
         }
-    return _commit_delete_manifest(
-        table_dir,
-        ops,
-        doc,
-        version,
-        entries,
-        total_rows,
-        seq,
-        snap_id,
+    records = _write_manifests(ops, doc, snap_id, entries)
+    ml_path = _write_manifest_list(ops, snap_id, _head_manifests(doc) + records)
+    meta_path = _commit_snapshot(
+        ops, version, doc, snap_id, seq, ml_path,
         {
             "operation": "delete",
             "total-equality-deletes": "0",
             "total-position-deletes": str(total_rows),
         },
     )
+    return {
+        "metadata": meta_path,
+        "manifest": records[0]["manifest_path"] if records else None,
+        "manifest-list": ml_path,
+        "snapshot-id": snap_id,
+        "sequence-number": seq,
+        "delete-files": len(entries),
+        "delete-records": total_rows,
+    }
 
 
 def _head_data_file_paths(doc: dict) -> dict[str, str]:
@@ -2029,18 +1853,10 @@ def _head_data_file_paths(doc: dict) -> dict[str, str]:
     file of the current snapshot. O(files) metadata work, no data
     read."""
     out: dict[str, str] = {}
-    if doc.get("current-snapshot-id") is None:
-        return out
-    cur = next(
-        s for s in doc["snapshots"]
-        if s["snapshot-id"] == doc["current-snapshot-id"]
-    )
-    manifests = _avro_records(cur["manifest-list"])
-    for mf in manifests:
+    for mf in _head_manifests(doc):
         if mf["content"] == 1:
             continue
-        mf_entries = _avro_records(mf["manifest_path"])
-        for e in mf_entries:
+        for e in _avro_records(mf["manifest_path"]):
             if e["status"] == 2 or e["data_file"]["content"] != 0:
                 continue
             p = e["data_file"]["file_path"]
@@ -2049,6 +1865,7 @@ def _head_data_file_paths(doc: dict) -> dict[str, str]:
 
 
 def _write_position_delete_files(
+    io: RelativeFileIO,
     table_dir: str,
     hits: DataFrame,
     spec_fields: list[dict],
@@ -2089,7 +1906,7 @@ def _write_position_delete_files(
         fpath = os.path.join(del_dir, name)
         rows = int(pq.ParquetFile(fpath).metadata.num_rows)
         if rows == 0:
-            _unlink_spark_file(fpath)
+            io.delete_spark_file(fpath)
             continue
         total_rows += rows
         entries.append(
@@ -2118,115 +1935,6 @@ def _write_position_delete_files(
 
         shutil.rmtree(del_dir, ignore_errors=True)
     return entries, total_rows
-
-
-def _commit_delete_manifest(
-    table_dir: str,
-    ops: TableOperations,
-    doc: dict,
-    version: int,
-    entries: list[dict],
-    total_rows: int,
-    seq: int,
-    snap_id: int,
-    summary: dict,
-) -> dict:
-    """Commit delete-file manifest entries as one ``content=1``
-    manifest in a new snapshot, carrying every prior manifest forward —
-    the shared tail of the MOR delete ops."""
-    spec_fields = _spec_fields_from_doc(doc)
-    entry_schema = _manifest_entry_schema(spec_fields)
-    schema_json = next(
-        s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
-    )
-    spec = next(
-        p for p in doc["partition-specs"]
-        if p["spec-id"] == doc["default-spec-id"]
-    )
-    manifest_path = os.path.join(
-        table_dir, "metadata", f"{uuid.uuid4()}-m1.avro"
-    )
-    mbytes = avro_ocf.write_ocf(
-        entry_schema,
-        entries,
-        metadata={
-            "schema": json.dumps(schema_json),
-            "schema-id": str(doc["current-schema-id"]),
-            "partition-spec": json.dumps(spec["fields"]),
-            "partition-spec-id": str(doc["default-spec-id"]),
-            "format-version": "2",
-            "content": "deletes",
-        },
-    )
-    with open(manifest_path, "wb") as fh:
-        fh.write(mbytes)
-
-    prior = []
-    if doc.get("current-snapshot-id") is not None:
-        cur = next(
-            s for s in doc["snapshots"]
-            if s["snapshot-id"] == doc["current-snapshot-id"]
-        )
-        prior = _avro_records(cur["manifest-list"])
-    ml_records = list(prior) + [
-        {
-            "manifest_path": manifest_path,
-            "manifest_length": len(mbytes),
-            "partition_spec_id": doc["default-spec-id"],
-            "content": 1,  # deletes
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snap_id,
-            "added_data_files_count": len(entries),
-            "existing_data_files_count": 0,
-            "deleted_data_files_count": 0,
-            "added_rows_count": total_rows,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
-    ]
-    ml_path = os.path.join(
-        table_dir, "metadata", f"snap-{snap_id}-1-{uuid.uuid4()}.avro"
-    )
-    ml_bytes = avro_ocf.write_ocf(
-        _MANIFEST_FILE_SCHEMA, ml_records, metadata={"format-version": "2"}
-    )
-    with open(ml_path, "wb") as fh:
-        fh.write(ml_bytes)
-
-    now_ms = int(time.time() * 1000)
-    new_doc = dict(doc)
-    new_doc["last-sequence-number"] = seq
-    new_doc["last-updated-ms"] = now_ms
-    new_doc["current-snapshot-id"] = snap_id
-    new_doc["refs"] = {
-        **doc.get("refs", {}),
-        "main": {"snapshot-id": snap_id, "type": "branch"},
-    }
-    new_doc["snapshots"] = doc["snapshots"] + [
-        {
-            "sequence-number": seq,
-            "snapshot-id": snap_id,
-            "parent-snapshot-id": doc["current-snapshot-id"],
-            "timestamp-ms": now_ms,
-            "summary": summary,
-            "manifest-list": ml_path,
-            "schema-id": doc["current-schema-id"],
-        }
-    ]
-    new_doc["snapshot-log"] = doc.get("snapshot-log", []) + [
-        {"timestamp-ms": now_ms, "snapshot-id": snap_id}
-    ]
-    meta_path = _commit_mirror(ops, version, doc, new_doc)
-    return {
-        "metadata": meta_path,
-        "manifest": manifest_path,
-        "manifest-list": ml_path,
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "delete-files": len(entries),
-        "delete-records": total_rows,
-    }
 
 
 def update_where_iceberg(
@@ -2260,9 +1968,7 @@ def update_where_iceberg(
     external Iceberg v2 artifacts; parity target is the reference's
     Iceberg 1.6.1 / format-version 2 row-level DML (README.md:25,94)."""
     ops, doc, version = _open_mirror(table_dir)
-    schema_json = next(
-        s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
-    )
+    schema_json = _current_schema(doc)
     by_name = {f["name"]: f for f in schema_json["fields"]}
     missing = [c for c in equality_cols if c not in by_name]
     if missing:
@@ -2293,17 +1999,14 @@ def update_where_iceberg(
             f"produces {got} — cast the expression back to the column type"
         )
 
-    spec_fields = _spec_fields_from_doc(doc)
-    seq = doc["last-sequence-number"] + 1
-    snap_id = max((s["snapshot-id"] for s in doc["snapshots"]), default=0) + 1
-
+    seq, snap_id = _next_ids(doc)
     data_entries, updated_rows = _write_data_files(
-        table_dir, doc, updated, seq, snap_id, prefix="update"
+        ops.io, table_dir, doc, updated, seq, snap_id, prefix="update"
     )
-
     keys = matched.select(*equality_cols).distinct()
     del_entries, del_rows = _write_delete_key_files(
-        table_dir, keys, spec_fields, eq_ids, seq, snap_id
+        ops.io, table_dir, keys, _spec_fields_from_doc(doc), eq_ids, seq,
+        snap_id,
     )
 
     if not del_entries and not data_entries:
@@ -2315,17 +2018,19 @@ def update_where_iceberg(
             "updated-records": 0,
         }
 
-    meta_path, ml_path = _commit_mor_overwrite(
-        table_dir,
-        ops,
-        version,
-        doc,
-        data_entries,
-        updated_rows,
-        del_entries,
-        del_rows,
-        seq,
-        snap_id,
+    # ONE overwrite snapshot: the delete manifest and the data manifest
+    # share the sequence number, so strict-< delete scoping erases the
+    # old copies and leaves the replacement rows
+    records = _write_manifests(ops, doc, snap_id, del_entries, data_entries)
+    ml_path = _write_manifest_list(ops, snap_id, _head_manifests(doc) + records)
+    meta_path = _commit_snapshot(
+        ops, version, doc, snap_id, seq, ml_path,
+        {
+            "operation": "overwrite",
+            "added-data-files": str(len(data_entries)),
+            "added-records": str(updated_rows),
+            "total-equality-deletes": str(del_rows),
+        },
     )
     return {
         "metadata": meta_path,
@@ -2335,121 +2040,6 @@ def update_where_iceberg(
         "updated-records": updated_rows,
         "delete-records": del_rows,
     }
-
-
-def _commit_mor_overwrite(
-    table_dir: str,
-    ops: TableOperations,
-    version: int,
-    doc: dict,
-    data_entries: list[dict],
-    data_rows: int,
-    del_entries: list[dict],
-    del_rows: int,
-    seq: int,
-    snap_id: int,
-) -> tuple[str, str]:
-    """Commit ONE ``overwrite`` snapshot carrying an equality-delete
-    manifest and/or a data manifest, both at the same sequence number —
-    the atomic MOR shape shared by ``update_where_iceberg`` and
-    ``merge_iceberg`` (the spec's strict-< delete scoping erases old
-    copies while leaving the same-sequence replacement rows untouched).
-    Empty manifests are skipped. Returns ``(metadata_path, ml_path)``."""
-    schema_json = next(
-        s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
-    )
-    spec = next(
-        p for p in doc["partition-specs"] if p["spec-id"] == doc["default-spec-id"]
-    )
-    spec_fields = _spec_fields_from_doc(doc)
-    entry_schema = _manifest_entry_schema(spec_fields)
-    manifest_meta = {
-        "schema": json.dumps(schema_json),
-        "schema-id": str(doc["current-schema-id"]),
-        "partition-spec": json.dumps(spec["fields"]),
-        "partition-spec-id": str(doc["default-spec-id"]),
-        "format-version": "2",
-    }
-    new_ml_records = []
-    for tag, content_name, content_id, entries, rows in (
-        ("m1", "deletes", 1, del_entries, del_rows),
-        ("m0", "data", 0, data_entries, data_rows),
-    ):
-        if not entries:
-            continue
-        mpath = os.path.join(table_dir, "metadata", f"{uuid.uuid4()}-{tag}.avro")
-        mbytes = avro_ocf.write_ocf(
-            entry_schema,
-            entries,
-            metadata={**manifest_meta, "content": content_name},
-        )
-        with open(mpath, "wb") as fh:
-            fh.write(mbytes)
-        new_ml_records.append(
-            {
-                "manifest_path": mpath,
-                "manifest_length": len(mbytes),
-                "partition_spec_id": doc["default-spec-id"],
-                "content": content_id,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snap_id,
-                "added_data_files_count": len(entries),
-                "existing_data_files_count": 0,
-                "deleted_data_files_count": 0,
-                "added_rows_count": rows,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        )
-
-    prior = []
-    if doc.get("current-snapshot-id") is not None:
-        cur = next(
-            s for s in doc["snapshots"]
-            if s["snapshot-id"] == doc["current-snapshot-id"]
-        )
-        prior = _avro_records(cur["manifest-list"])
-    ml_records = list(prior) + new_ml_records
-    ml_path = os.path.join(
-        table_dir, "metadata", f"snap-{snap_id}-1-{uuid.uuid4()}.avro"
-    )
-    ml_bytes = avro_ocf.write_ocf(
-        _MANIFEST_FILE_SCHEMA, ml_records, metadata={"format-version": "2"}
-    )
-    with open(ml_path, "wb") as fh:
-        fh.write(ml_bytes)
-
-    now_ms = int(time.time() * 1000)
-    new_doc = dict(doc)
-    new_doc["last-sequence-number"] = seq
-    new_doc["last-updated-ms"] = now_ms
-    new_doc["current-snapshot-id"] = snap_id
-    new_doc["refs"] = {
-        **doc.get("refs", {}),
-        "main": {"snapshot-id": snap_id, "type": "branch"},
-    }
-    snap_doc = {
-        "sequence-number": seq,
-        "snapshot-id": snap_id,
-        "timestamp-ms": now_ms,
-        "summary": {
-            "operation": "overwrite",
-            "added-data-files": str(len(data_entries)),
-            "added-records": str(data_rows),
-            "total-equality-deletes": str(del_rows),
-        },
-        "manifest-list": ml_path,
-        "schema-id": doc["current-schema-id"],
-    }
-    if doc.get("current-snapshot-id") is not None:
-        snap_doc["parent-snapshot-id"] = doc["current-snapshot-id"]
-    new_doc["snapshots"] = doc["snapshots"] + [snap_doc]
-    new_doc["snapshot-log"] = doc.get("snapshot-log", []) + [
-        {"timestamp-ms": now_ms, "snapshot-id": snap_id}
-    ]
-    meta_path = _commit_mirror(ops, version, doc, new_doc)
-    return meta_path, ml_path
 
 
 def _merge_matched_keys(
@@ -2508,9 +2098,7 @@ def merge_iceberg(
         raise ValueError(f"when_not_matched must be 'insert' or None, got {when_not_matched!r}")
 
     ops, doc, version = _open_mirror(table_dir)
-    schema_json = next(
-        s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
-    )
+    schema_json = _current_schema(doc)
     by_name = {f["name"]: f for f in schema_json["fields"]}
     missing = [c for c in on if c not in by_name]
     if missing:
@@ -2580,18 +2168,16 @@ def merge_iceberg(
             else None
         )
 
-    spec_fields = _spec_fields_from_doc(doc)
-    seq = doc["last-sequence-number"] + 1
-    snap_id = max((s["snapshot-id"] for s in doc["snapshots"]), default=0) + 1
-
+    seq, snap_id = _next_ids(doc)
     data_entries: list[dict] = []
     data_rows = 0
     if rows is not None:
         data_entries, data_rows = _write_data_files(
-            table_dir, doc, rows, seq, snap_id, prefix="merge"
+            ops.io, table_dir, doc, rows, seq, snap_id, prefix="merge"
         )
     del_entries, del_rows = _write_delete_key_files(
-        table_dir, matched_keys, spec_fields, eq_ids, seq, snap_id
+        ops.io, table_dir, matched_keys, _spec_fields_from_doc(doc), eq_ids,
+        seq, snap_id,
     )
     if persisted is not None:
         persisted.unpersist()
@@ -2606,17 +2192,19 @@ def merge_iceberg(
             "delete-records": 0,
         }
 
-    meta_path, ml_path = _commit_mor_overwrite(
-        table_dir,
-        ops,
-        version,
-        doc,
-        data_entries,
-        data_rows,
-        del_entries,
-        del_rows,
-        seq,
-        snap_id,
+    # ONE overwrite snapshot: the delete manifest and the data manifest
+    # share the sequence number, so strict-< delete scoping erases the
+    # old copies and leaves the replacement rows
+    records = _write_manifests(ops, doc, snap_id, del_entries, data_entries)
+    ml_path = _write_manifest_list(ops, snap_id, _head_manifests(doc) + records)
+    meta_path = _commit_snapshot(
+        ops, version, doc, snap_id, seq, ml_path,
+        {
+            "operation": "overwrite",
+            "added-data-files": str(len(data_entries)),
+            "added-records": str(data_rows),
+            "total-equality-deletes": str(del_rows),
+        },
     )
     return {
         "metadata": meta_path,
@@ -2653,9 +2241,7 @@ def overwrite_partitions_iceberg(
     not be comparable), and truncate-on-non-string layouts (via
     ``_write_data_files``)."""
     ops, doc, version = _open_mirror(table_dir)
-    schema_json = next(
-        s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
-    )
+    schema_json = _current_schema(doc)
     incoming, _ = iceberg_schema(df.schema, None)
     want = [(f["name"], _type_sig(f["type"])) for f in schema_json["fields"]]
     got = [(f["name"], _type_sig(f["type"])) for f in incoming["fields"]]
@@ -2666,15 +2252,9 @@ def overwrite_partitions_iceberg(
 
     spec_fields = _spec_fields_from_doc(doc)
     field_names = [sf["name"] for sf in spec_fields]
-    entry_schema = _manifest_entry_schema(spec_fields)
-    spec = next(
-        p for p in doc["partition-specs"] if p["spec-id"] == doc["default-spec-id"]
-    )
-    seq = doc["last-sequence-number"] + 1
-    snap_id = max((s["snapshot-id"] for s in doc["snapshots"]), default=0) + 1
-
+    seq, snap_id = _next_ids(doc)
     new_entries, new_rows = _write_data_files(
-        table_dir, doc, df, seq, snap_id, prefix="overwrite"
+        ops.io, table_dir, doc, df, seq, snap_id, prefix="overwrite"
     )
     if not new_entries:
         # empty source touches no partition: nothing to replace
@@ -2709,18 +2289,10 @@ def overwrite_partitions_iceberg(
 
     # rewrite prior data manifests: doomed entries -> DELETED (sequences
     # preserved), survivors -> EXISTING; delete manifests carry through
-    prior_mls: list[dict] = []
-    if doc.get("current-snapshot-id") is not None:
-        cur = next(
-            s for s in doc["snapshots"]
-            if s["snapshot-id"] == doc["current-snapshot-id"]
-        )
-        prior_mls = _avro_records(cur["manifest-list"])
     delete_mfs: list[dict] = []
     rewritten: list[dict] = []
-    kept_rows = doomed_rows = 0
-    n_doomed = n_kept = 0
-    for mf in prior_mls:
+    doomed_rows = n_doomed = 0
+    for mf in _head_manifests(doc):
         if mf["content"] != 0:
             delete_mfs.append(mf)
             continue
@@ -2735,96 +2307,20 @@ def overwrite_partitions_iceberg(
         for e in entries:
             if e["status"] == 2:
                 continue
-            part = _part_tuple(e["data_file"]["partition"])
-            rows = int(e["data_file"].get("record_count") or 0)
-            if part in touched:
+            if _part_tuple(e["data_file"]["partition"]) in touched:
                 rewritten.append(
                     {**e, "status": 2, "snapshot_id": snap_id}
                 )
                 n_doomed += 1
-                doomed_rows += rows
+                doomed_rows += int(e["data_file"].get("record_count") or 0)
             else:
                 rewritten.append({**e, "status": 0})
-                n_kept += 1
-                kept_rows += rows
 
-    manifest_meta = {
-        "schema": json.dumps(schema_json),
-        "schema-id": str(doc["current-schema-id"]),
-        "partition-spec": json.dumps(spec["fields"]),
-        "partition-spec-id": str(doc["default-spec-id"]),
-        "format-version": "2",
-        "content": "data",
-    }
-    ml_records: list[dict] = []
-    if rewritten:
-        rw_path = os.path.join(table_dir, "metadata", f"{uuid.uuid4()}-m0.avro")
-        rw_bytes = avro_ocf.write_ocf(entry_schema, rewritten, metadata=manifest_meta)
-        with open(rw_path, "wb") as fh:
-            fh.write(rw_bytes)
-        seqs = [e["sequence_number"] for e in rewritten]
-        ml_records.append(
-            {
-                "manifest_path": rw_path,
-                "manifest_length": len(rw_bytes),
-                "partition_spec_id": doc["default-spec-id"],
-                "content": 0,
-                "sequence_number": max(seqs),
-                "min_sequence_number": min(seqs),
-                "added_snapshot_id": snap_id,
-                "added_data_files_count": 0,
-                "existing_data_files_count": n_kept,
-                "deleted_data_files_count": n_doomed,
-                "added_rows_count": 0,
-                "existing_rows_count": kept_rows,
-                "deleted_rows_count": doomed_rows,
-            }
-        )
-    add_path = os.path.join(table_dir, "metadata", f"{uuid.uuid4()}-m1.avro")
-    add_bytes = avro_ocf.write_ocf(entry_schema, new_entries, metadata=manifest_meta)
-    with open(add_path, "wb") as fh:
-        fh.write(add_bytes)
-    ml_records.append(
+    records = _write_manifests(ops, doc, snap_id, rewritten, new_entries)
+    ml_path = _write_manifest_list(ops, snap_id, records + delete_mfs)
+    meta_path = _commit_snapshot(
+        ops, version, doc, snap_id, seq, ml_path,
         {
-            "manifest_path": add_path,
-            "manifest_length": len(add_bytes),
-            "partition_spec_id": doc["default-spec-id"],
-            "content": 0,
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snap_id,
-            "added_data_files_count": len(new_entries),
-            "existing_data_files_count": 0,
-            "deleted_data_files_count": 0,
-            "added_rows_count": new_rows,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
-    )
-    ml_records += delete_mfs
-    ml_path = os.path.join(
-        table_dir, "metadata", f"snap-{snap_id}-1-{uuid.uuid4()}.avro"
-    )
-    ml_bytes = avro_ocf.write_ocf(
-        _MANIFEST_FILE_SCHEMA, ml_records, metadata={"format-version": "2"}
-    )
-    with open(ml_path, "wb") as fh:
-        fh.write(ml_bytes)
-
-    now_ms = int(time.time() * 1000)
-    new_doc = dict(doc)
-    new_doc["last-sequence-number"] = seq
-    new_doc["last-updated-ms"] = now_ms
-    new_doc["current-snapshot-id"] = snap_id
-    new_doc["refs"] = {
-        **doc.get("refs", {}),
-        "main": {"snapshot-id": snap_id, "type": "branch"},
-    }
-    snap_doc = {
-        "sequence-number": seq,
-        "snapshot-id": snap_id,
-        "timestamp-ms": now_ms,
-        "summary": {
             "operation": "overwrite",
             "replace-partitions": "true",
             "added-data-files": str(len(new_entries)),
@@ -2832,16 +2328,7 @@ def overwrite_partitions_iceberg(
             "deleted-data-files": str(n_doomed),
             "deleted-records": str(doomed_rows),
         },
-        "manifest-list": ml_path,
-        "schema-id": doc["current-schema-id"],
-    }
-    if doc.get("current-snapshot-id") is not None:
-        snap_doc["parent-snapshot-id"] = doc["current-snapshot-id"]
-    new_doc["snapshots"] = doc["snapshots"] + [snap_doc]
-    new_doc["snapshot-log"] = doc.get("snapshot-log", []) + [
-        {"timestamp-ms": now_ms, "snapshot-id": snap_id}
-    ]
-    meta_path = _commit_mirror(ops, version, doc, new_doc)
+    )
     return {
         "metadata": meta_path,
         "manifest-list": ml_path,
@@ -2867,97 +2354,27 @@ def compact_iceberg(spark: SparkSession, table_dir: str) -> dict:
     unlock for ``import_iceberg`` on position-deleted tables: compact in
     place, then import the materialized state zero-copy."""
     ops, doc, version = _open_mirror(table_dir)
-    schema_json = next(
-        s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
-    )
-    spec = next(
-        p for p in doc["partition-specs"] if p["spec-id"] == doc["default-spec-id"]
-    )
-    spec_fields = _spec_fields_from_doc(doc)
     live = read_iceberg(spark, table_dir).select(
-        *[f["name"] for f in schema_json["fields"]]
+        *[f["name"] for f in _current_schema(doc)["fields"]]
     )
-    seq = doc["last-sequence-number"] + 1
-    snap_id = max((s["snapshot-id"] for s in doc["snapshots"]), default=0) + 1
+    seq, snap_id = _next_ids(doc)
     entries, total_rows = _write_data_files(
-        table_dir, doc, live, seq, snap_id, prefix="compact"
+        ops.io, table_dir, doc, live, seq, snap_id, prefix="compact"
     )
-    entry_schema = _manifest_entry_schema(spec_fields)
-    manifest_path = os.path.join(
-        table_dir, "metadata", f"{uuid.uuid4()}-m0.avro"
-    )
-    mbytes = avro_ocf.write_ocf(
-        entry_schema,
-        entries,
-        metadata={
-            "schema": json.dumps(schema_json),
-            "schema-id": str(doc["current-schema-id"]),
-            "partition-spec": json.dumps(spec["fields"]),
-            "partition-spec-id": str(doc["default-spec-id"]),
-            "format-version": "2",
-            "content": "data",
+    records = _write_manifests(ops, doc, snap_id, entries)
+    # REPLACE: only the new manifest — deletes are materialized, gone
+    ml_path = _write_manifest_list(ops, snap_id, records)
+    meta_path = _commit_snapshot(
+        ops, version, doc, snap_id, seq, ml_path,
+        {
+            "operation": "replace",
+            "added-data-files": str(len(entries)),
+            "added-records": str(total_rows),
         },
     )
-    with open(manifest_path, "wb") as fh:
-        fh.write(mbytes)
-    # REPLACE: only the new manifest — deletes are materialized, gone
-    ml_records = [
-        {
-            "manifest_path": manifest_path,
-            "manifest_length": len(mbytes),
-            "partition_spec_id": doc["default-spec-id"],
-            "content": 0,
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snap_id,
-            "added_data_files_count": len(entries),
-            "existing_data_files_count": 0,
-            "deleted_data_files_count": 0,
-            "added_rows_count": total_rows,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
-    ]
-    ml_path = os.path.join(
-        table_dir, "metadata", f"snap-{snap_id}-1-{uuid.uuid4()}.avro"
-    )
-    ml_bytes = avro_ocf.write_ocf(
-        _MANIFEST_FILE_SCHEMA, ml_records, metadata={"format-version": "2"}
-    )
-    with open(ml_path, "wb") as fh:
-        fh.write(ml_bytes)
-
-    now_ms = int(time.time() * 1000)
-    new_doc = dict(doc)
-    new_doc["last-sequence-number"] = seq
-    new_doc["last-updated-ms"] = now_ms
-    new_doc["current-snapshot-id"] = snap_id
-    new_doc["refs"] = {
-        **doc.get("refs", {}),
-        "main": {"snapshot-id": snap_id, "type": "branch"},
-    }
-    new_doc["snapshots"] = doc["snapshots"] + [
-        {
-            "sequence-number": seq,
-            "snapshot-id": snap_id,
-            "parent-snapshot-id": doc["current-snapshot-id"],
-            "timestamp-ms": now_ms,
-            "summary": {
-                "operation": "replace",
-                "added-data-files": str(len(entries)),
-                "added-records": str(total_rows),
-            },
-            "manifest-list": ml_path,
-            "schema-id": doc["current-schema-id"],
-        }
-    ]
-    new_doc["snapshot-log"] = doc.get("snapshot-log", []) + [
-        {"timestamp-ms": now_ms, "snapshot-id": snap_id}
-    ]
-    meta_path = _commit_mirror(ops, version, doc, new_doc)
     return {
         "metadata": meta_path,
-        "manifest": manifest_path,
+        "manifest": records[0]["manifest_path"] if records else None,
         "manifest-list": ml_path,
         "snapshot-id": snap_id,
         "data-files": len(entries),
@@ -3033,7 +2450,7 @@ def expire_snapshots_iceberg(table_dir: str, keep_last: int = 1) -> dict:
         if not os.path.realpath(p).startswith(root + os.sep):
             continue
         try:
-            _unlink_spark_file(p)
+            ops.io.delete_spark_file(p)
             deleted += 1
         except OSError:
             pass
@@ -3094,9 +2511,7 @@ def evolve_schema_iceberg(
         raise ValueError("nothing to evolve: pass add=, rename=, or drop=")
 
     ops, doc, version = _open_mirror(table_dir)
-    schema_json = next(
-        s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
-    )
+    schema_json = _current_schema(doc)
     fields = [dict(f) for f in schema_json["fields"]]
     by_name = {f["name"]: f for f in fields}
 
@@ -3155,9 +2570,7 @@ def evolve_schema_iceberg(
             )
 
     # partition sources cannot be dropped (renames are fine: id-based)
-    spec = next(
-        p for p in doc["partition-specs"] if p["spec-id"] == doc["default-spec-id"]
-    )
+    spec = _default_spec(doc)
     src_ids = {pf["source-id"] for pf in spec["fields"]}
     for c in drop:
         if by_name[c]["id"] in src_ids:
@@ -3354,18 +2767,7 @@ def remove_orphan_files_iceberg(
         p = os.path.realpath(os.path.join(meta_root, name))
         if p not in referenced:
             removed += _reap(p)
-    # empty data subdirectories left behind by reaped files — deepest
-    # first so a parent whose only children were just-removed dirs
-    # empties in the SAME pass
-    all_dirs = sorted(
-        (os.path.join(b, d) for b, ds, _ in os.walk(data_root) for d in ds),
-        key=lambda p: -p.count(os.sep),
-    )
-    for d in all_dirs:
-        try:
-            os.rmdir(d)  # fails (kept) unless empty
-        except OSError:
-            pass
+    _mirror_ops(table_dir).io.delete_empty_dirs(data_root)
     return {"removed": removed, "referenced": len(referenced)}
 
 
@@ -3666,19 +3068,6 @@ def _open_mirror(table_dir: str) -> tuple[TableOperations, dict, int]:
     return ops, doc, ops.current_version()
 
 
-def _current_version(table_dir: str) -> int:
-    """The mirror's head version (``TableOperations.find_version``)."""
-    version = _mirror_ops(table_dir).find_version()
-    if version == 0:
-        raise NoSuchTableError(f"no metadata versions under {table_dir}/metadata")
-    return version
-
-
-def _load_metadata_versioned(table_dir: str) -> tuple[dict, int]:
-    """``(doc, version)`` of the mirror's current metadata."""
-    return _open_mirror(table_dir)[1:]
-
-
 def _load_metadata(table_dir: str) -> dict:
     """The mirror's current metadata document — the one loader shared by
     ``read_iceberg`` and ``import_iceberg`` so the entry points cannot
@@ -3945,9 +3334,7 @@ def read_iceberg(
             if s["schema-id"] == doc["current-schema-id"]
         ),
     )
-    spec = next(
-        p for p in doc["partition-specs"] if p["spec-id"] == doc["default-spec-id"]
-    )
+    spec = _default_spec(doc)
     fields_by_id = {f["id"]: f for f in schema["fields"]}
     fields_by_name = {f["name"]: f for f in schema["fields"]}
     identity = [
@@ -4181,9 +3568,7 @@ def import_iceberg(spark: SparkSession, catalog, namespace, name: str,
     mapping = json.loads(
         doc.get("properties", {}).get("schema.name-mapping.default", "[]")
     )
-    cur_schema = next(
-        s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
-    )
+    cur_schema = _current_schema(doc)
     cur_name_of = {f["id"]: f["name"] for f in cur_schema["fields"]}
     for m in mapping:
         cur = cur_name_of.get(m.get("field-id"))
@@ -4194,9 +3579,7 @@ def import_iceberg(spark: SparkSession, catalog, namespace, name: str,
                 "engine before import"
             )
 
-    schema = next(
-        s for s in doc["schemas"] if s["schema-id"] == doc["current-schema-id"]
-    )
+    schema = _current_schema(doc)
     fields = []
     for f in schema["fields"]:
         t = f["type"]
@@ -4210,9 +3593,7 @@ def import_iceberg(spark: SparkSession, catalog, namespace, name: str,
     fields_by_id = {f["id"]: f for f in schema["fields"]}
 
     # partition spec -> our transform dialect
-    spec = next(
-        p for p in doc["partition-specs"] if p["spec-id"] == doc["default-spec-id"]
-    )
+    spec = _default_spec(doc)
     partition_by = []
     layout_names = []
     for pf in spec["fields"]:

@@ -1481,7 +1481,8 @@ class RelativeTable:
         references — the debris of failed writes — and the Hadoop
         sidecars nothing needs any more: a ``.crc`` whose file is gone,
         and a ``_SUCCESS`` marker (with its ``.crc``) of a write none of
-        whose files is left. Returns deleted paths."""
+        whose files is left — and the directories that leaves empty.
+        Returns deleted file paths."""
         meta = self.ops.current()
         referenced: set[str] = set()
         for s in meta["snapshots"]:
@@ -1509,6 +1510,7 @@ class RelativeTable:
                 deleted.append(loc)
             except Exception:
                 pass
+        self.ops.io.delete_empty_dirs(f"{self.ops.location}/data")
         return deleted
 
     def compact(self, spark: SparkSession, target_partitions: int = 1) -> dict:

@@ -724,6 +724,35 @@ def test_remove_orphan_files(spark, catalog):
     assert [r.id for r in table.read(spark).collect()] == [1]
 
 
+def test_remove_orphan_files_removes_emptied_directories(spark, catalog):
+    """After compaction and expiry have reaped every superseded write,
+    the sweep leaves no empty directory under data/: three appends to a
+    four-partition table, compact, expire_snapshots(keep_last=1), sweep."""
+    import os
+
+    catalog.create_namespace(("ord",))
+    df = spark.createDataFrame(
+        [(i, f"p{i % 4}") for i in range(12)], "id long, part string"
+    )
+    table = RelativeTable(
+        catalog.create_table(
+            ("ord",), "t", df.schema.jsonValue(), partition_by=["part"]
+        )
+    )
+    for lo in (0, 4, 8):
+        table.append(df.filter(f"id >= {lo} and id < {lo + 4}"))
+    table.compact(spark)
+    table.expire_snapshots(keep_last=1)
+    table.remove_orphan_files()
+    data_root = table.ops.io.absolute(f"{table.ops.location}/data")
+    empty = [
+        d for d, subdirs, names in os.walk(data_root)
+        if not subdirs and not names
+    ]
+    assert empty == []
+    assert sorted(r.id for r in table.read(spark).collect()) == list(range(12))
+
+
 # -- row-level ops + branches --------------------------------------------------
 
 def test_delete_where_copy_on_write(spark, catalog):

@@ -1102,9 +1102,7 @@ def test_mirror_stream_cap_totals_only_era(spark):
     import os
 
     from iceberg_relative_io_spark.catalog import iceberg_export
-    from iceberg_relative_io_spark.catalog.iceberg_export import (
-        _current_version,
-    )
+    from iceberg_relative_io_spark.catalog.iceberg_export import _mirror_ops
     from iceberg_relative_io_spark.sources.iceberg_mirror_source import (
         IcebergMirrorStreamReader,
     )
@@ -1131,7 +1129,7 @@ def test_mirror_stream_cap_totals_only_era(spark):
     # age the metadata into the totals-only era: strip added-data-files,
     # keep a cumulative total-data-files per append snapshot
     meta = os.path.join(
-        dest, "metadata", f"v{_current_version(dest)}.metadata.json"
+        dest, "metadata", f"v{_mirror_ops(dest).find_version()}.metadata.json"
     )
     with open(meta) as fh:
         doc = json.load(fh)

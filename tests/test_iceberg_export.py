@@ -1324,7 +1324,7 @@ def test_append_iceberg_concurrent_commit_raises(spark, sf_dir):
     table = _table(spark, nation)
     dest = tempfile.mkdtemp(prefix="iceexp_out_")
     iceberg_export.export_iceberg(table, dest)
-    doc, version = iceberg_export._load_metadata_versioned(dest)
+    _ops, doc, version = iceberg_export._open_mirror(dest)
     assert version == 1
     # a racing winner claimed v2 (complete, valid content)
     shutil.copyfile(
@@ -1333,7 +1333,9 @@ def test_append_iceberg_concurrent_commit_raises(spark, sf_dir):
     )
     # the CAS itself refuses the claimed slot
     with pytest.raises(ValueError, match="concurrent commit"):
-        iceberg_export._commit_next_metadata(dest, version, doc, dict(doc))
+        iceberg_export._commit_mirror(
+            iceberg_export._mirror_ops(dest), version, doc, dict(doc)
+        )
     # but a fresh committer probes PAST the stale hint and lands v3
     info = iceberg_export.append_iceberg(
         spark, dest, nation.limit(1).coalesce(1)
@@ -1342,7 +1344,7 @@ def test_append_iceberg_concurrent_commit_raises(spark, sf_dir):
     # corrupt hint: reads recover via forward probe + directory scan
     with open(os.path.join(dest, "metadata", "version-hint.text"), "w") as fh:
         fh.write("")  # torn hint
-    assert iceberg_export._current_version(dest) == 3
+    assert iceberg_export._mirror_ops(dest).find_version() == 3
     assert iceberg_export.read_iceberg(spark, dest).count() == nation.count() + 1
 
 
@@ -1379,7 +1381,7 @@ def test_rewrite_manifests_iceberg_merges_and_preserves_scoping(spark, sf_dir):
     iceberg_export.append_iceberg(spark, dest, reborn)
     iceberg_export.append_iceberg(
         spark, dest, nation.limit(0).coalesce(1)
-    )  # empty batch: still a commit
+    )  # empty batch: still a commit, but it lists no manifest
     want = sorted(
         (r.n_nationkey, "REBORN" if r.n_nationkey == 3 else r.n_name)
         for r in nation.collect()
@@ -1400,11 +1402,11 @@ def test_rewrite_manifests_iceberg_merges_and_preserves_scoping(spark, sf_dir):
         )
 
     n_data, n_del, doc = ml_counts()
-    assert n_data == 3 and n_del == 1  # export + 2 appends, 1 delete mf
+    assert n_data == 2 and n_del == 1  # export + reborn, 1 delete mf
     pre_rewrite_head = doc["current-snapshot-id"]
 
     info = iceberg_export.rewrite_manifests_iceberg(dest)
-    assert info["merged-manifests"] == 3
+    assert info["merged-manifests"] == 2
     n_data, n_del, doc = ml_counts()
     assert n_data == 1 and n_del == 1  # merged + the carried delete mf
     got = sorted(
@@ -3154,8 +3156,9 @@ def _conform(dest):
 def test_spec_conformance_full_lifecycle(spark, sf_dir):
     """The full mirror DML lifecycle stays spec-conformant under the
     independent byte-level checker: partitioned export, equality +
-    position deletes, append, atomic update, merge, tag, evolution,
-    manifest rewrite, expiry."""
+    position deletes, append, atomic update, merge, dynamic partition
+    overwrite, hand-written position deletes, tag, evolution, manifest
+    rewrite, compaction, expiry."""
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_nationkey"
     )
@@ -3187,9 +3190,23 @@ def test_spec_conformance_full_lifecycle(spark, sf_dir):
         cust.filter(F.col("c_custkey") < 3).withColumn("c_name", F.lit("M")),
         ["c_custkey"],
     )
+    _conform(dest)
+    iceberg_export.overwrite_partitions_iceberg(
+        spark, dest, cust.filter(F.col("c_nationkey") == 3)
+    )
+    _conform(dest)
+    first = sorted(
+        iceberg_export._head_data_file_paths(
+            iceberg_export._load_metadata(dest)
+        ).values()
+    )[0]
+    iceberg_export.write_position_deletes(dest, {first: [0, 2]})
+    _conform(dest)
     iceberg_export.set_ref_iceberg(dest, "v1", ref_type="tag")
     iceberg_export.evolve_schema_iceberg(dest, add={"extra": "string"})
     iceberg_export.rewrite_manifests_iceberg(dest)
+    _conform(dest)
+    iceberg_export.compact_iceberg(spark, dest)
     _conform(dest)
     iceberg_export.expire_snapshots_iceberg(dest, keep_last=3)
     _conform(dest)
@@ -3220,8 +3237,9 @@ def test_spec_conformance_gzip_and_buckets(spark, sf_dir):
 
 def test_spec_conformance_mutation_kill(spark, sf_dir):
     """The gate actually bites: perturbing a spec field id, dropping a
-    metadata key, truncating a bound value width, or unsorting a
-    position delete each flips the checker to FAIL. Every mutation is
+    metadata key, truncating a bound value width, unsorting a position
+    delete, or a manifest-list row count its entries do not give each
+    flips the checker to FAIL. Every mutation is
     applied IN PLACE to a fresh fixture (the metadata records absolute
     paths, so a copied tree would still validate the original)."""
     import os
@@ -3343,6 +3361,117 @@ def test_spec_conformance_mutation_kill(spark, sf_dir):
     rewrite_ocf(snap["manifest-list"], lschema, mls, lmeta)
     errs = check_table(dest)
     assert any("value width" in e for e in errs), errs
+
+    # 6: a manifest-list added_rows_count one off what its entries give
+    dest = fresh()
+    _, snap = head_snapshot(dest)
+    with open(snap["manifest-list"], "rb") as fh:
+        lschema, lmeta, mls = avro_ocf.read_ocf(fh.read())
+    mls[0]["added_rows_count"] += 1
+    rewrite_ocf(snap["manifest-list"], lschema, mls, lmeta)
+    errs = check_table(dest)
+    assert any("added_rows_count" in e for e in errs), errs
+
+
+# ---------------------------------------------------------------------------
+# one empty-manifest rule: the snapshot producer writes no manifest
+# without entries
+# ---------------------------------------------------------------------------
+
+
+def _manifest_entry_counts(dest) -> list[int]:
+    """Entry count of every manifest any retained snapshot lists."""
+    counts = []
+    for snap in iceberg_export._load_metadata(dest)["snapshots"]:
+        for mf in iceberg_export._avro_records(snap["manifest-list"]):
+            counts.append(len(iceberg_export._avro_records(mf["manifest_path"])))
+    return counts
+
+
+def _stream_mirror(spark, dest, name) -> tuple[list, object]:
+    """Rows and schema a fresh ``iceberg_mirror`` stream reads from
+    ``dest`` (its surviving snapshot log, drained once)."""
+    from iceberg_relative_io_spark.sources.iceberg_mirror_source import (
+        IcebergMirrorDataSource,
+    )
+
+    try:
+        spark.dataSource.register(IcebergMirrorDataSource)
+    except Exception:
+        pass
+    stream = spark.readStream.format("iceberg_mirror").option("path", dest).load()
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", tempfile.mkdtemp(prefix=f"ckpt_{name}_"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return [tuple(r) for r in spark.table(name).collect()], stream.schema
+
+
+def test_mirror_compact_of_empty_table_writes_no_manifest(spark, sf_dir):
+    """Deleting every row and compacting leaves a snapshot whose
+    manifest list is empty: no zero-entry manifest anywhere, reads
+    return no rows under the table schema, a stream started on the
+    compacted table reads nothing and then tails a later append, and
+    the byte-level gate passes."""
+    nation = load_table(spark, sf_dir, "nation").select(
+        "n_nationkey", "n_name", "n_regionkey"
+    )
+    dest = tempfile.mkdtemp(prefix="iceexp_empty_compact_")
+    iceberg_export.export_iceberg(
+        _table(spark, nation, partition_by=["n_regionkey"]), dest
+    )
+    iceberg_export.delete_where_iceberg(
+        spark, dest, F.lit(True), ["n_nationkey"]
+    )
+    info = iceberg_export.compact_iceberg(spark, dest)
+    assert info["data-files"] == 0 and info["manifest"] is None
+    assert 0 not in _manifest_entry_counts(dest)
+    got = iceberg_export.read_iceberg(spark, dest)
+    assert got.collect() == []
+    assert got.select(*nation.columns).schema == nation.schema
+    _conform(dest)
+
+    iceberg_export.expire_snapshots_iceberg(dest, keep_last=1)
+    rows, schema = _stream_mirror(spark, dest, "empty_compact_tail")
+    assert rows == []
+    assert [f.name for f in schema.fields] == nation.columns
+    iceberg_export.append_iceberg(
+        spark, dest, nation.filter(F.col("n_nationkey") == 7)
+    )
+    want = [tuple(r) for r in nation.filter(F.col("n_nationkey") == 7).collect()]
+    got = iceberg_export.read_iceberg(spark, dest).select(*nation.columns)
+    assert [tuple(r) for r in got.collect()] == want
+    assert 0 not in _manifest_entry_counts(dest)
+    _conform(dest)
+
+
+def test_mirror_empty_append_writes_no_manifest(spark, sf_dir):
+    """An append of an empty DataFrame commits its snapshot without a
+    manifest: every row reads back through both read paths with the
+    table schema, no zero-entry manifest is listed, and the byte-level
+    gate passes."""
+    nation = load_table(spark, sf_dir, "nation").select(
+        "n_nationkey", "n_name", "n_regionkey"
+    )
+    dest = tempfile.mkdtemp(prefix="iceexp_empty_append_")
+    iceberg_export.export_iceberg(_table(spark, nation), dest)
+    info = iceberg_export.append_iceberg(spark, dest, nation.limit(0))
+    assert info["data-files"] == 0 and info["manifest"] is None
+    assert 0 not in _manifest_entry_counts(dest)
+    want = sorted(tuple(r) for r in nation.collect())
+    got = iceberg_export.read_iceberg(spark, dest).select(*nation.columns)
+    assert got.schema == nation.schema
+    assert sorted(tuple(r) for r in got.collect()) == want
+    rows, schema = _stream_mirror(spark, dest, "empty_append_tail")
+    assert [f.name for f in schema.fields] == nation.columns
+    assert sorted(rows) == want
+    _conform(dest)
 
 
 def test_migrated_bucket_table_exports_bucket_field(spark, sf_dir):
@@ -3801,7 +3930,7 @@ def test_export_into_advanced_mirror_raises_and_keeps_it(spark, sf_dir):
     other = _table(spark, nation.filter(F.col("n_nationkey") >= 20))
     with pytest.raises(ValueError, match="already holds Iceberg metadata"):
         iceberg_export.export_iceberg(other, dest)
-    assert iceberg_export._current_version(dest) == 2
+    assert iceberg_export._mirror_ops(dest).find_version() == 2
     got = sorted(
         r.n_nationkey for r in iceberg_export.read_iceberg(spark, dest).collect()
     )
@@ -3845,8 +3974,8 @@ def test_version_hint_recovery_both_formats(spark, fmt, hint):
         meta_dir = os.path.join(dest, "metadata")
 
         def resolve():
-            _doc, version = iceberg_export._load_metadata_versioned(dest)
-            assert iceberg_export._current_version(dest) == version
+            _ops, _doc, version = iceberg_export._open_mirror(dest)
+            assert iceberg_export._mirror_ops(dest).find_version() == version
             return version, iceberg_export.read_iceberg(spark, dest).count()
 
         def commit():

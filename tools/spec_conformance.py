@@ -27,7 +27,13 @@ Checked, per the Iceberg v2 table spec and the reference example
   map carries avro.schema + a supported avro.codec, every block sealed
   by the header's 16-byte sync marker; the declared schema's field ids
   are EXACTLY the spec's manifest_file ids (500-517); decoded entries
-  have content in {0,1} and sequence_number >= min_sequence_number.
+  have content in {0,1} and sequence_number >= min_sequence_number;
+  each record's added / existing / deleted file and row counts equal
+  its manifest's entries with status 1 / 0 / 2 (their count and summed
+  record_count), and its sequence_number / min_sequence_number equal
+  the max / min of the entries' sequence numbers (every entry, status=2
+  included: a min at or below the spec's live-entry min never makes a
+  reader skip a delete it needs).
 - every manifest: OCF as above; manifest_entry ids (0,1,3,4,2) and
   data_file ids (134 content, 100 file_path, 101 file_format,
   102 partition, 103 record_count, 104 file_size_in_bytes,
@@ -402,6 +408,7 @@ def check_table(table_dir: str) -> list[str]:
         pq = None
 
     checked_manifests: set[str] = set()
+    derived: dict[str, dict | None] = {}
     for s in doc.get("snapshots", []):
         ml_path = s.get("manifest-list", "")
         if not os.path.exists(ml_path):
@@ -436,6 +443,14 @@ def check_table(table_dir: str) -> list[str]:
                 )
             if mf["partition_spec_id"] not in specs_by_id:
                 err("manifest partition_spec_id resolves to no spec")
+            if mf["manifest_path"] not in derived:
+                derived[mf["manifest_path"]] = _derived_record(mf)
+            for key, want in (derived[mf["manifest_path"]] or {}).items():
+                if mf[key] != want:
+                    err(
+                        f"manifest-list {key} {mf[key]} != {want} from the "
+                        f"entries of {mf['manifest_path']}"
+                    )
             if not head or mf["manifest_path"] in checked_manifests:
                 continue
             checked_manifests.add(mf["manifest_path"])
@@ -444,6 +459,33 @@ def check_table(table_dir: str) -> list[str]:
                 err, pq,
             )
     return errs
+
+
+def _derived_record(mf: dict) -> dict | None:
+    """The manifest-list counts and sequence bounds that the entries of
+    manifest ``mf`` give, or None when the manifest does not decode
+    (``_check_manifest`` reports that for the head snapshot). Entries
+    with a null sequence number inherit the record's."""
+    try:
+        _, _, entries = read_ocf(open(mf["manifest_path"], "rb").read())
+    except ValueError:
+        return None
+    out = {}
+    for word, status in (("added", 1), ("existing", 0), ("deleted", 2)):
+        mine = [e for e in entries if e["status"] == status]
+        out[f"{word}_data_files_count"] = len(mine)
+        out[f"{word}_rows_count"] = sum(
+            e["data_file"]["record_count"] for e in mine
+        )
+    seqs = [
+        mf["sequence_number"] if e["sequence_number"] is None
+        else e["sequence_number"]
+        for e in entries
+    ]
+    if seqs:
+        out["sequence_number"] = max(seqs)
+        out["min_sequence_number"] = min(seqs)
+    return out
 
 
 def _check_manifest(
