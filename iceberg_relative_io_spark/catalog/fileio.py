@@ -211,12 +211,17 @@ class RelativeFileIO:
 
     def parquet_table(self, location: str, columns=None):
         """Read a parquet file THROUGH the delegate FS (stats/bloom
-        harvesting must work on any registered store, not just schemes
-        pyarrow's default resolver knows)."""
+        harvesting and driver-side delete reads must work on any
+        registered store, not just schemes pyarrow's default resolver
+        knows). INT96 timestamps, which Spark writes by default, read at
+        Spark's microsecond unit, so values past 2262 do not overflow."""
         import pyarrow.parquet as pq
 
         return pq.read_table(
-            self._fs_path(location), columns=columns, filesystem=self.fs
+            self._fs_path(location),
+            columns=columns,
+            filesystem=self.fs,
+            coerce_int96_timestamp_unit="us",
         )
 
     def parquet_metadata(self, location: str):

@@ -1711,6 +1711,18 @@ def _write_delete_key_files(
     return entries, total_rows
 
 
+def _no_delete() -> dict:
+    """What a mirror delete whose predicate matches nothing returns: it
+    commits nothing."""
+    return {
+        "metadata": None,
+        "snapshot-id": None,
+        "sequence-number": None,
+        "delete-files": 0,
+        "delete-records": 0,
+    }
+
+
 def delete_where_iceberg(
     spark: SparkSession,
     table_dir: str,
@@ -1726,7 +1738,8 @@ def delete_where_iceberg(
     delete applies to every data file that exists now and to none
     appended later — the exact semantics of the native
     ``RelativeTable.delete_where_mor`` (spark_table.py), re-expressed as
-    external Iceberg artifacts."""
+    external Iceberg artifacts. A predicate matching nothing commits
+    nothing."""
     ops, doc, version = _open_mirror(table_dir)
     by_name = {f["name"]: f for f in _current_schema(doc)["fields"]}
     missing = [c for c in equality_cols if c not in by_name]
@@ -1745,6 +1758,8 @@ def delete_where_iceberg(
         ops.io, table_dir, keys, _spec_fields_from_doc(doc), eq_ids, seq,
         snap_id,
     )
+    if not entries:
+        return _no_delete()
     records = _write_manifests(ops, doc, snap_id, entries)
     ml_path = _write_manifest_list(ops, snap_id, _head_manifests(doc) + records)
     meta_path = _commit_snapshot(
@@ -1820,13 +1835,7 @@ def delete_positions_iceberg(
         ops.io, table_dir, hits, _spec_fields_from_doc(doc), seq, snap_id
     )
     if not entries:
-        return {
-            "metadata": None,
-            "snapshot-id": None,
-            "sequence-number": None,
-            "delete-files": 0,
-            "delete-records": 0,
-        }
+        return _no_delete()
     records = _write_manifests(ops, doc, snap_id, entries)
     ml_path = _write_manifest_list(ops, snap_id, _head_manifests(doc) + records)
     meta_path = _commit_snapshot(
@@ -3264,14 +3273,17 @@ def read_iceberg(
     the exported spec.
 
     The read is one plan of the merge-on-read planner both formats
-    share (``scan.plan_scan``): one data scan, one scan per delete kind,
-    sequence-scoped anti-joins. Its inputs come from the avro manifests
-    and metadata.json alone — scan schemas from the resolved era schema
-    plus every ``schema.name-mapping.default`` alias, never from a file
-    footer — and never from the source table's JSON manifests, so a
-    round-trip equality against the source table still checks the
-    export end to end. The only job building a read can start is
-    Spark's listing of a scan over more than 32 paths."""
+    share (``scan.plan_scan``): one data scan and sequence-scoped
+    anti-joins, one per delete kind. Which files to read, and how, comes
+    from the avro manifests and metadata.json alone — scan schemas from
+    the resolved era schema plus every ``schema.name-mapping.default``
+    alias, never from a file footer — and never from the source table's
+    JSON manifests, so a round-trip equality against the source table
+    still checks the export end to end. A delete kind the manifests'
+    sizes and record counts prove small is read on the driver through
+    the mirror's ``RelativeFileIO`` and joined as a local relation; a
+    larger one is a Spark scan. The only job building a read can start
+    is Spark's listing of a scan over more than 32 paths."""
     doc = _load_metadata(table_dir)
     if sum(x is not None for x in (ref, snapshot_id, as_of_ms)) > 1:
         raise ValueError("pass at most one of ref / snapshot_id / as_of_ms")
@@ -3444,6 +3456,7 @@ def read_iceberg(
     }
     # an empty read types what it cannot scan as string
     default = None if data_entries else T.StringType()
+    io = _mirror_ops(table_dir).io
     data = plan_scan(
         spark,
         [
@@ -3469,6 +3482,7 @@ def read_iceberg(
         [{**d, "kind": "pos"} for d in pos_deletes]
         + [{**d, "kind": "eq", "names": [era[c] for c in d["cols"]]} for d in eq_deletes],
         {0: {"cols": era}},
+        lambda d, columns: io.parquet_table(d["path"], columns),
         [
             T.StructField(src["name"], _spark_type_of(src["type"], T.StringType()))
             for _, src in identity

@@ -1,12 +1,15 @@
 """Merge-on-read scan planning, shared by both table formats.
 
-A read is planned from table metadata alone, never from the file system
-(the Iceberg spec's "Scan Planning"): the caller resolves which data and
-delete files are live, their sequence numbers, identity-partition
+A read is planned from table metadata, never from the file system (the
+Iceberg spec's "Scan Planning"): the caller resolves which data and
+delete files are live, their sequence numbers, sizes, identity-partition
 values and column eras, and :func:`plan_scan` turns that into ONE Spark
-plan. The native format (``RelativeTable``, spark_table.py) and the
-Iceberg-v2 mirror (``read_iceberg``, iceberg_export.py) each adapt their
-own metadata to its inputs; this module imports neither of them.
+plan. A delete kind the metadata proves small is read on the driver,
+through the table's file IO, and joined as a local relation; a larger
+one is scanned by Spark. The native format (``RelativeTable``,
+spark_table.py) and the Iceberg-v2 mirror (``read_iceberg``,
+iceberg_export.py) each adapt their own metadata to its inputs; this
+module imports neither of them.
 """
 
 from __future__ import annotations
@@ -19,15 +22,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # A delete build side is only broadcast while it provably fits in every
-# executor (and the driver, which relays the broadcast): parquet decodes
-# to roughly 5-10x its on-disk size, so cap the compressed bytes far
-# below any sane spark.sql.autoBroadcastJoinThreshold. Above the cap the
-# anti-join becomes a SHUFFLE_HASH join instead — both sides partition
-# by (file, pos) / equality key and the delete side is hash-built per
-# partition, so the 100 TB probe side is never sorted (SMJ would) and no
-# single JVM ever holds the whole delete set. Manifests carry each
-# delete file's size (and, in the mirror, its exact record count), so
-# the choice is made from metadata alone, before any scan.
+# executor (and the driver, which reads it and relays the broadcast):
+# parquet decodes to roughly 5-10x its on-disk size, so cap the
+# compressed bytes far below any sane spark.sql.autoBroadcastJoinThreshold.
+# Below the cap the driver reads the delete files itself and the build
+# side is a local relation — no Spark scan, listing or reader setup per
+# delete kind. Above it the anti-join becomes a SHUFFLE_HASH join over a
+# Spark scan instead — both sides partition by (file, pos) / equality key
+# and the delete side is hash-built per partition, so the 100 TB probe
+# side is never sorted (SMJ would) and no single JVM ever holds the
+# whole delete set. Manifests carry each delete file's size (and, in the
+# mirror, its exact record count), so the choice is made from metadata
+# alone, before any read.
 _BROADCAST_DELETE_MAX_BYTES = 32 << 20
 _BROADCAST_DELETE_MAX_ROWS = 4_000_000
 
@@ -168,16 +174,64 @@ def _scan_groups(eras: dict, used: list) -> list:
     return groups
 
 
-def _anti_join(left: DataFrame, dkeys: DataFrame, cond, dels: list[dict]):
-    """Left-anti join against a delete kind, broadcast or shuffled hash
-    as the metadata's delete sizes decide."""
+def _fits_driver(dels: list[dict]) -> bool:
+    """Whether a delete kind provably fits the driver and every
+    executor, from the metadata's delete sizes alone."""
     rows = sum(d.get("rows", 0) for d in dels)
     nbytes = sum(d["bytes"] for d in dels)
-    if rows <= _BROADCAST_DELETE_MAX_ROWS and nbytes <= _BROADCAST_DELETE_MAX_BYTES:
-        dkeys = F.broadcast(dkeys)
-    else:
-        dkeys = dkeys.hint("shuffle_hash")
-    return left.join(dkeys, cond, "left_anti")
+    return rows <= _BROADCAST_DELETE_MAX_ROWS and nbytes <= _BROADCAST_DELETE_MAX_BYTES
+
+
+def _pos_keys(read, dels: list[dict], file_seq: dict):
+    """The position-delete build side, decided on the driver: every
+    ``(file_path, pos)`` row of ``dels`` with its path normalized, kept
+    only when its file is in the scan (``file_seq``: normalized path ->
+    data sequence) at or below the delete's sequence (the spec's
+    ``<=``). Paths are normalized once per distinct value."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    parts = []
+    for d in dels:
+        t = read(d, ["file_path", "pos"])
+        paths = t.column("file_path")
+        uniq = pc.unique(paths)
+        norm = [p if p is None else _norm_path_py(p) for p in uniq.to_pylist()]
+        keep = pa.array([file_seq.get(n, d["seq"] + 1) <= d["seq"] for n in norm])
+        at = pc.index_in(paths, value_set=uniq)
+        parts.append(
+            pa.table(
+                {
+                    "__ir_dfp": pc.take(pa.array(norm, pa.string()), at),
+                    "__ir_dpos": t.column("pos").cast(pa.int64()),
+                }
+            ).filter(pc.take(keep, at))
+        )
+    return pa.concat_tables(parts)
+
+
+def _eq_keys(read, dels: list[dict], schema: T.StructType, scoped: bool):
+    """An equality-delete build side, read on the driver: per delete
+    file, key ``i`` under the first of ``names[i]`` the file holds
+    (case-insensitively, as Spark resolves parquet columns; none reads
+    NULL), cast through Arrow to ``schema``'s key type, plus the
+    delete's sequence as ``__ir_dseq`` when ``scoped``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    parts = []
+    for d in dels:
+        t = read(d, None)
+        held = {n.lower(): n for n in t.column_names}
+        cols = []
+        for names, f in zip(d["names"], arrow):
+            p = next((held[n.lower()] for n in names if n.lower() in held), None)
+            cols.append(t.column(p).cast(f.type) if p else pa.nulls(t.num_rows, f.type))
+        if scoped:
+            cols.append(pa.nulls(t.num_rows, pa.int64()).fill_null(d["seq"]))
+        parts.append(pa.Table.from_arrays(cols, schema=arrow))
+    return pa.concat_tables(parts)
 
 
 def plan_scan(
@@ -186,10 +240,11 @@ def plan_scan(
     files: list[dict],
     deletes: list[dict],
     eras: dict,
+    read,
     identity: list[T.StructField] = (),
     with_positions: bool = False,
 ) -> DataFrame:
-    """Plan a merge-on-read scan as one Spark plan, from metadata alone.
+    """Plan a merge-on-read scan as one Spark plan.
 
     - ``fields``: the output schema, in order.
     - ``files``: per data file, ``path`` (as Spark reads it), ``seq``
@@ -200,22 +255,32 @@ def plan_scan(
       predate it, NULL); ``other`` lists names held for no current
       field (dropped columns).
     - ``deletes``: per delete file, ``kind`` (``"pos"``/``"eq"``),
-      ``path``, ``seq``, ``bytes``, optionally ``rows``, and for an
-      equality delete its key fields ``cols`` and their physical
-      ``names`` (one list of candidates per key).
+      ``path`` (as Spark reads it), ``seq``, ``bytes``, optionally
+      ``rows``, and for an equality delete its key fields ``cols`` and
+      their physical ``names`` (one list of candidates per key).
+    - ``read(delete, columns)``: a delete file's contents as a pyarrow
+      Table (``columns`` None: every column), through the table's
+      file IO.
     - ``identity``: the fields ``ident`` restores, declared with the
       type of its values; a file without a value keeps its column.
 
     One parquet scan reads every data file (unless eras re-use a name,
-    see ``_scan_groups``) and one scan each delete kind — position
-    deletes, equality deletes per key set — applied by one left-anti
-    join whose condition carries the spec's scoping: an equality delete
-    to files with a strictly smaller sequence, a position delete to
-    files at or below its own, matched on ``_metadata.row_index`` (the
-    spec's ``pos``). Sequence numbers and identity values attach through
-    one broadcast side table built from Arrow, so no Python worker
-    starts; it is left out when no delete needs a sequence condition and
-    nothing is restored. Deletes that scope no file are never read.
+    see ``_scan_groups``). Each delete kind — position deletes,
+    equality deletes per key set — is applied by one left-anti join
+    whose condition carries the spec's scoping: an equality delete to
+    files with a strictly smaller sequence, matching NULL keys as equal
+    (the spec's ``IS NULL`` rule); a position delete to files at or
+    below its own, matched on ``_metadata.row_index`` (the spec's
+    ``pos``). A kind within ``_BROADCAST_DELETE_MAX_*`` is read here,
+    on the driver, and broadcast as a local relation built from Arrow:
+    position deletes are pruned to the scan's files and their ``<=``
+    rule, so they join on (file, pos) alone, and a kind left empty
+    joins nothing. A larger kind is one Spark scan, tagged with each
+    row's delete sequence, under a shuffled hash join. Sequence
+    numbers and identity values attach through one broadcast side
+    table built from Arrow, so no Python worker starts; it is left out
+    when no join needs a sequence condition and nothing is restored.
+    Deletes that scope no file are never read.
 
     ``with_positions`` adds ``__ir_fp`` (normalized path) and
     ``__ir_pos`` (row ordinal) to the output."""
@@ -229,18 +294,76 @@ def plan_scan(
 
     seqs = [e["seq"] for e in files]
     lo, hi = min(seqs), max(seqs)
+    dseq = T.StructField("__ir_dseq", T.LongType(), False)
+    # per delete kind: (build side, anti-join condition, driver-built,
+    # whether the condition reads the data file's __ir_seq)
+    joins = []
+
     live_pos = [d for d in deletes if d["kind"] == "pos" and d["seq"] >= lo]
-    pos_scoped = any(d["seq"] < hi for d in live_pos)
+    pos_cond = (F.col("__ir_fp") == F.col("__ir_dfp")) & (
+        F.col("__ir_pos") == F.col("__ir_dpos")
+    )
+    if live_pos and _fits_driver(live_pos):
+        file_seq = {_norm_path_py(e["path"]): e["seq"] for e in files}
+        keys = _pos_keys(read, live_pos, file_seq)
+        if keys.num_rows:
+            schema = T.StructType.fromDDL("__ir_dfp string, __ir_dpos long")
+            joins.append((spark.createDataFrame(keys, schema), pos_cond, True, False))
+    elif live_pos:
+        # no .distinct(): anti-join is set semantics, so duplicate
+        # (file, pos) rows (the spec allows re-deletion) are harmless,
+        # and a distinct would cost an extra Exchange of the delete set
+        # in the shuffle path. The schema is the spec's fixed one, so
+        # no footer is sampled.
+        scan = spark.read.schema("file_path string, pos long").parquet(
+            *[d["path"] for d in live_pos]
+        )
+        dkeys = [
+            _norm_path(F.col("file_path")).alias("__ir_dfp"),
+            F.col("pos").alias("__ir_dpos"),
+        ]
+        scoped = any(d["seq"] < hi for d in live_pos)
+        if scoped:
+            dkeys.append(_seq_tag(live_pos).alias("__ir_dseq"))
+            pos_cond = pos_cond & (F.col("__ir_dseq") >= F.col("__ir_seq"))
+        joins.append((scan.select(*dkeys), pos_cond, False, scoped))
+    has_pos = bool(joins)
+
     eq_sets: dict[tuple, list[dict]] = {}
     for d in deletes:
         if d["kind"] == "eq" and d["seq"] > lo:
             eq_sets.setdefault(tuple(d["cols"]), []).append(d)
-    eq_scoped = {
-        cols: any(d["seq"] <= hi for d in dels)
-        for cols, dels in eq_sets.items()
-    }
+    for cols, dels in eq_sets.items():
+        scoped = any(d["seq"] <= hi for d in dels)
+        keys = [f"__ir_k{i}" for i in range(len(cols))]
+        conds = [F.col(c).eqNullSafe(F.col(k)) for c, k in zip(cols, keys)]
+        if scoped:
+            conds.append(F.col("__ir_dseq") > F.col("__ir_seq"))
+        cond = reduce(lambda a, b: a & b, conds)
+        if _fits_driver(dels):
+            schema = T.StructType(
+                [T.StructField(k, types[c]) for c, k in zip(cols, keys)]
+                + ([dseq] if scoped else [])
+            )
+            table = _eq_keys(read, dels, schema, scoped)
+            if table.num_rows:
+                joins.append((spark.createDataFrame(table, schema), cond, True, scoped))
+            continue
+        # a key column renamed between delete files sits under another
+        # physical name in each; the scan reads every one of them
+        key_names = [[p for d in dels for p in d["names"][i]] for i in range(len(cols))]
+        scan = spark.read.schema(
+            _scan_schema({p: c for c, ns in zip(cols, key_names) for p in ns}, types)
+        ).parquet(*[d["path"] for d in dels])
+        if scoped:
+            # tagged on the raw scan, where _metadata still resolves
+            scan = scan.select("*", _seq_tag(dels).alias("__ir_dseq"))
+        dkeys = [_resolve_aliases(ns).alias(k) for ns, k in zip(key_names, keys)]
+        if scoped:
+            dkeys.append(F.col("__ir_dseq"))
+        joins.append((scan.select(*dkeys), cond, False, scoped))
 
-    side = bool(identity) or pos_scoped or any(eq_scoped.values())
+    side = bool(identity) or any(scoped for *_, scoped in joins)
     side_table = F.broadcast(_file_side_table(spark, files, identity)) if side else None
     restore = {f.name: i for i, f in enumerate(identity)}
 
@@ -252,11 +375,11 @@ def plan_scan(
         # provenance is captured on the raw scan, where _metadata
         # resolves; __ir_fp also keys the side table
         prov = []
-        if side or live_pos or with_positions:
+        if side or has_pos or with_positions:
             prov.append(
                 _norm_meta_path(F.col("_metadata.file_path")).alias("__ir_fp")
             )
-        if live_pos or with_positions:
+        if has_pos or with_positions:
             prov.append(F.col("_metadata.row_index").alias("__ir_pos"))
         if prov:
             data = data.select("*", *prov)
@@ -279,44 +402,9 @@ def plan_scan(
         parts.append(data.select(*out, *keep))
     data = reduce(DataFrame.unionByName, parts)
 
-    if live_pos:
-        # no .distinct(): anti-join is set semantics, so duplicate
-        # (file, pos) rows (the spec allows re-deletion) are harmless,
-        # and a distinct would cost an extra Exchange of the delete set
-        # in the shuffle path. The schema is the spec's fixed one, so
-        # no footer is sampled.
-        scan = spark.read.schema("file_path string, pos long").parquet(
-            *[d["path"] for d in live_pos]
-        )
-        dkeys = [
-            _norm_path(F.col("file_path")).alias("__ir_dfp"),
-            F.col("pos").alias("__ir_dpos"),
-        ]
-        cond = (F.col("__ir_fp") == F.col("__ir_dfp")) & (
-            F.col("__ir_pos") == F.col("__ir_dpos")
-        )
-        if pos_scoped:
-            dkeys.append(_seq_tag(live_pos).alias("__ir_dseq"))
-            cond = cond & (F.col("__ir_dseq") >= F.col("__ir_seq"))
-        data = _anti_join(data, scan.select(*dkeys), cond, live_pos)
-
-    for cols, dels in eq_sets.items():
-        # a key column renamed between delete files sits under another
-        # physical name in each; the scan reads every one of them
-        key_names = [[p for d in dels for p in d["names"][i]] for i in range(len(cols))]
-        scan = spark.read.schema(
-            _scan_schema({p: c for c, ns in zip(cols, key_names) for p in ns}, types)
-        ).parquet(*[d["path"] for d in dels])
-        if eq_scoped[cols]:
-            # tagged on the raw scan, where _metadata still resolves
-            scan = scan.select("*", _seq_tag(dels).alias("__ir_dseq"))
-        keys = [f"__ir_k{i}" for i in range(len(cols))]
-        dkeys = [_resolve_aliases(ns).alias(k) for ns, k in zip(key_names, keys)]
-        conds = [F.col(c) == F.col(k) for c, k in zip(cols, keys)]
-        if eq_scoped[cols]:
-            dkeys.append(F.col("__ir_dseq"))
-            conds.append(F.col("__ir_dseq") > F.col("__ir_seq"))
-        data = _anti_join(data, scan.select(*dkeys), reduce(lambda a, b: a & b, conds), dels)
+    for build, cond, local, _ in joins:
+        build = F.broadcast(build) if local else build.hint("shuffle_hash")
+        data = data.join(build, cond, "left_anti")
 
     return data.select(*[f.name for f in fields + internal])
 

@@ -1286,7 +1286,8 @@ class RelativeTable:
         deletes: list[dict] = (),
     ) -> DataFrame:
         """Read manifest entries under the current schema, as one plan of
-        the merge-on-read planner both formats share (``scan.plan_scan``).
+        the merge-on-read planner both formats share (``scan.plan_scan``),
+        which reads small delete files through ``ops.io``.
         An entry's data sequence is its ``_snap``; each ``column-ids``
         map is a column era, resolving the file's physical names to the
         current fields by id (a renamed column resolves; an id the file
@@ -1332,6 +1333,7 @@ class RelativeTable:
                 {
                     "kind": "eq",
                     "path": self.ops.io.spark_path(d["path"]),
+                    "file": d["path"],
                     "seq": d["_snap"],
                     "bytes": int(d.get("size-bytes") or 0),
                     "cols": [cur for _, cur in keys],
@@ -1340,7 +1342,11 @@ class RelativeTable:
             )
         identity = dict.fromkeys(f for x in files for f in x["ident"])
         identity = [StructField(f, StringType()) for f in identity]
-        return plan_scan(spark, schema.fields, files, dels, eras, identity)
+        return plan_scan(
+            spark, schema.fields, files, dels, eras,
+            lambda d, columns: self.ops.io.parquet_table(d["file"], columns),
+            identity,
+        )
 
     def incremental_files(
         self, from_snapshot_id: int | None, to_snapshot_id: int | None = None

@@ -1469,14 +1469,17 @@ def test_partitioned_reads_across_multiple_appends(spark, catalog):
     assert {r.id for r in table.read(spark, partition_filter={"k": "x"}).collect()} == {1, 3}
 
 
-def test_native_read_is_one_plan_with_sequence_scoped_anti_joins(spark, catalog):
+def test_native_read_is_one_plan_with_sequence_scoped_anti_joins(
+    spark, catalog, anti_join_builds
+):
     """An identity-partitioned table with appends in several snapshot
     dirs and two MOR equality deletes at different sequences reads as
-    ONE plan: one parquet scan over every data file, at most one scan
-    per equality key set, and no pickled-RDD relation. Building a
-    pruned read starts no Spark job: every schema and partition value
-    comes from the manifests. The scoping holds inside the plan: a key
-    re-appended after its delete survives."""
+    ONE plan: one parquet scan, over every data file, and one left-anti
+    join per equality key set whose build side is a local relation the
+    driver read from the delete files, with no pickled-RDD relation.
+    Building a read, pruned or not, starts no Spark job: every schema
+    and partition value comes from the manifests. The scoping holds
+    inside the plan: a key re-appended after its delete survives."""
     import time
     import uuid
     from urllib.parse import unquote
@@ -1547,15 +1550,79 @@ def test_native_read_is_one_plan_with_sequence_scoped_anti_joins(spark, catalog)
         if node.nodeName().startswith("Scan parquet"):
             files = node.relation().location().inputFiles()
             scans.append({_norm_path_py(unquote(f)) for f in files})
-    assert [s for s in scans if s & data_files] == [data_files]
-    delete_scans = [s for s in scans if not s & data_files]
-    assert len(scans) == 1 + len(delete_scans) and len(delete_scans) <= len(kinds)
-    for s in delete_scans:
-        assert sum(s <= files for files in kinds.values()) == 1
+    assert scans == [data_files]
+    assert anti_join_builds(df) == [{"LocalTableScan"}] * len(kinds)
     assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()
 
     assert sorted(map(tuple, df.collect())) == sorted(rows)
     assert sorted(map(tuple, pruned.collect())) == sorted(r for r in rows if r[2] == 1)
+
+
+def test_mor_delete_matches_null_keys_in_both_readers(spark, catalog, warehouse):
+    """An equality delete whose key tuple holds NULL deletes every row
+    whose key IS NULL (the spec's ``id = 4 AND category IS NULL``
+    rule), in the native read and the DSv2 ``relative`` read alike. A
+    merge afterwards still inserts NULL-key source rows: under the
+    merge's SQL equality NULL matches nothing."""
+    from pyspark.sql import functions as F
+
+    rows = [(1, "a"), (None, "b"), (None, "c"), (2, "d")]
+    table = _make_table(spark, catalog, rows, ns=("nk",), name="t")
+    table.delete_where_mor(spark, F.col("name") == "b", ["id"])
+    table.ops._should_refresh = True
+    want = {(1, "a"), (2, "d")}
+    for df in _both_reads(spark, warehouse, table, "nk.t"):
+        assert {(r.id, r.name) for r in df.collect()} == want
+
+    source = spark.createDataFrame([(None, "n"), (2, "D")], "id long, name string")
+    table.merge(spark, source, ["id"])
+    table.ops._should_refresh = True
+    want = {(1, "a"), (2, "D"), (None, "n")}
+    for df in _both_reads(spark, warehouse, table, "nk.t"):
+        assert sorted(map(tuple, df.collect()), key=str) == sorted(want, key=str)
+
+
+def test_typed_equality_delete_keys_read_alike_in_both_tiers(
+    spark, catalog, monkeypatch, typed_keys
+):
+    """Equality deletes keyed on date, timestamp (year 3000), decimal,
+    unicode string, binary, boolean and NULL values, one of them keyed
+    on a column renamed between two deletes, read the same rows from
+    the driver-built build sides as from the Spark-scan tier (caps
+    forced to 0), and both match a NULL-safe model."""
+    from pyspark.sql import functions as F
+
+    from iceberg_relative_io_spark.catalog import scan
+
+    catalog.create_namespace(("ty",))
+    df = spark.createDataFrame(typed_keys.rows, typed_keys.schema)
+    table = RelativeTable(catalog.create_table(("ty",), "t", df.schema.jsonValue()))
+    table.append(df)
+    cols = df.columns
+    want = [tuple(r) for r in df.collect()]
+    for keys, ids in typed_keys.deletes:
+        table.delete_where_mor(spark, F.col("id").isin(*ids), keys)
+        table.ops._should_refresh = True
+        want = typed_keys.model(want, cols, keys, ids)
+    table.rename_column("s", "s2")
+    table.ops._should_refresh = True
+    cols = [("s2" if c == "s" else c) for c in cols]
+    table.delete_where_mor(spark, F.col("id") == 2, ["dec", "s2"])
+    table.ops._should_refresh = True
+    want = typed_keys.model(want, cols, ["dec", "s2"], {2})
+    # a deleted key re-appended later survives (the sequence column)
+    back = [r for r in typed_keys.rows if r[0] == 5]
+    table.append(spark.createDataFrame(back, table.read(spark).schema))
+    table.ops._should_refresh = True
+    want += back
+
+    local = sorted(map(tuple, table.read(spark).collect()), key=repr)
+    with monkeypatch.context() as m:
+        m.setattr(scan, "_BROADCAST_DELETE_MAX_BYTES", 0)
+        m.setattr(scan, "_BROADCAST_DELETE_MAX_ROWS", 0)
+        scanned = sorted(map(tuple, table.read(spark).collect()), key=repr)
+    assert local == scanned == sorted(want, key=repr)
+    assert sorted(r[0] for r in local) == [0, 5, 7, 10, 11]
 
 
 def test_metadata_gc_runs_parallel_and_keeps_window(tmp_path):

@@ -906,15 +906,17 @@ def _live_files(dest) -> tuple[set, dict]:
 
 
 def test_read_iceberg_is_one_plan_with_sequence_scoped_anti_joins(
-    spark, sf_dir
+    spark, sf_dir, anti_join_builds
 ):
     """A mirror whose data files see different delete sets (an append
     after an equality delete, position deletes, a merge, an equality
     delete keyed on the identity partition column) reads as ONE plan:
-    one parquet scan over every data file, at most one scan per delete
-    kind and key set, and no pickled-RDD relation (no Python worker).
-    The spec's scoping holds inside that plan: a key re-appended after
-    its equality delete survives (strict <), a position delete does not
+    one parquet scan, over every data file, and one left-anti join per
+    delete kind and key set whose build side is a local relation the
+    driver read from the delete files, with no pickled-RDD relation
+    (no Python worker). Building the read starts no Spark job. The
+    spec's scoping holds inside that plan: a key re-appended after its
+    equality delete survives (strict <), a position delete does not
     touch a file with a higher sequence (<=), and an equality delete
     keyed on the partition column applies through the restored
     column."""
@@ -952,17 +954,12 @@ def test_read_iceberg_is_one_plan_with_sequence_scoped_anti_joins(
         spark, dest, spark.createDataFrame([(103, 3, "after")], schema)
     )
 
-    df = iceberg_export.read_iceberg(spark, dest)
+    df, jobs = _jobs_started(spark, lambda: iceberg_export.read_iceberg(spark, dest))
+    assert jobs == []
     data_files, kinds = _live_files(dest)
     assert len(kinds) == 3  # position, equality on id, equality on p
-    scans = _plan_file_scans(df)
-    data_scans = [s for s in scans if s & data_files]
-    assert data_scans == [data_files]
-    delete_scans = [s for s in scans if not s & data_files]
-    assert len(scans) == 1 + len(delete_scans)
-    assert len(delete_scans) <= len(kinds)
-    for s in delete_scans:
-        assert sum(s <= files for files in kinds.values()) == 1
+    assert _plan_file_scans(df) == [data_files]
+    assert anti_join_builds(df) == [{"LocalTableScan"}] * len(kinds)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" not in plan
 
@@ -1509,6 +1506,111 @@ def test_expire_snapshots_iceberg_keeps_delete_scoping(spark, sf_dir):
     rows = {r.n_nationkey: r.n_name
             for r in iceberg_export.read_iceberg(spark, dest).collect()}
     assert rows[5] == "REBORN" and len(rows) == 25
+
+
+def test_delete_where_iceberg_matching_nothing_commits_nothing(spark):
+    """A mirror equality delete whose predicate matches no row commits
+    nothing: the snapshot count, ``last-sequence-number`` and metadata
+    version stay as they were, and it returns the no-op shape of
+    ``delete_positions_iceberg``."""
+    df = spark.createDataFrame([(i, f"n{i}") for i in range(4)], "id long, name string")
+    dest = tempfile.mkdtemp(prefix="iceexp_noop_del_")
+    iceberg_export.export_iceberg(_table(spark, df), dest)
+
+    def state():
+        doc = iceberg_export._load_metadata(dest)
+        return (
+            len(doc["snapshots"]),
+            doc["last-sequence-number"],
+            iceberg_export._mirror_ops(dest).find_version(),
+        )
+
+    before = state()
+    info = iceberg_export.delete_where_iceberg(spark, dest, F.col("id") > 100, ["id"])
+    assert state() == before
+    noop = iceberg_export.delete_positions_iceberg(spark, dest, F.col("id") > 100)
+    assert info == noop and info["metadata"] is None
+    assert state() == before
+
+
+def _both_tiers(spark, dest, monkeypatch) -> list[list[tuple]]:
+    """The mirror's rows as the driver-built delete tier reads them and
+    as the Spark-scan tier (caps forced to 0) does, each sorted."""
+    def rows():
+        got = iceberg_export.read_iceberg(spark, dest).collect()
+        return sorted(map(tuple, got), key=repr)
+
+    local = rows()
+    with monkeypatch.context() as m:
+        m.setattr(scan, "_BROADCAST_DELETE_MAX_BYTES", 0)
+        m.setattr(scan, "_BROADCAST_DELETE_MAX_ROWS", 0)
+        return [local, rows()]
+
+
+def test_mirror_delete_and_merge_match_null_keys(spark, monkeypatch):
+    """A mirror equality delete whose key tuple holds NULL deletes every
+    row whose key IS NULL (the spec's ``IS NULL`` rule) in both read
+    tiers, and a merge afterwards still inserts NULL-key source rows."""
+    schema = "id long, name string"
+    df = spark.createDataFrame([(1, "a"), (None, "b"), (None, "c"), (2, "d")], schema)
+    dest = tempfile.mkdtemp(prefix="iceexp_nullkey_")
+    iceberg_export.export_iceberg(_table(spark, df), dest)
+    iceberg_export.delete_where_iceberg(spark, dest, F.col("name") == "b", ["id"])
+    for got in _both_tiers(spark, dest, monkeypatch):
+        assert got == [(1, "a"), (2, "d")]
+    source = spark.createDataFrame([(None, "n"), (2, "D")], schema)
+    iceberg_export.merge_iceberg(spark, dest, source, ["id"])
+    want = sorted([(1, "a"), (2, "D"), (None, "n")], key=repr)
+    for got in _both_tiers(spark, dest, monkeypatch):
+        assert got == want
+
+
+def test_mirror_update_of_null_key_row_leaves_one_copy(spark, monkeypatch):
+    """``update_where_iceberg`` on a row whose key is NULL replaces it:
+    the equality delete matches the NULL key, so the old and the new
+    copy are not both left, in either read tier."""
+    schema = "id long, name string"
+    df = spark.createDataFrame([(1, "a"), (None, "b"), (2, "c")], schema)
+    dest = tempfile.mkdtemp(prefix="iceexp_nullkey_upd_")
+    iceberg_export.export_iceberg(_table(spark, df), dest)
+    iceberg_export.update_where_iceberg(
+        spark, dest, F.col("name") == "b", {"name": F.lit("B")}, ["id"]
+    )
+    want = sorted([(1, "a"), (None, "B"), (2, "c")], key=repr)
+    for got in _both_tiers(spark, dest, monkeypatch):
+        assert got == want
+
+
+def test_mirror_typed_equality_delete_keys_read_alike_in_both_tiers(
+    spark, monkeypatch, typed_keys
+):
+    """The mirror twin of the native typed-key test: equality deletes
+    keyed on date, timestamp (year 3000, which Spark writes as INT96),
+    decimal(38,10), unicode string, binary, boolean and NULL values,
+    one key column renamed between two deletes, read the same rows in
+    the driver-built tier and the Spark-scan tier, matching a NULL-safe
+    model."""
+    df = spark.createDataFrame(typed_keys.rows, typed_keys.schema)
+    dest = tempfile.mkdtemp(prefix="iceexp_typed_")
+    iceberg_export.export_iceberg(_table(spark, df), dest)
+    cols = df.columns
+    want = [tuple(r) for r in df.collect()]
+    for keys, ids in typed_keys.deletes:
+        iceberg_export.delete_where_iceberg(spark, dest, F.col("id").isin(*ids), keys)
+        want = typed_keys.model(want, cols, keys, ids)
+    iceberg_export.evolve_schema_iceberg(dest, rename={"s": "s2"})
+    cols = [("s2" if c == "s" else c) for c in cols]
+    iceberg_export.delete_where_iceberg(spark, dest, F.col("id") == 2, ["dec", "s2"])
+    want = typed_keys.model(want, cols, ["dec", "s2"], {2})
+    back = [r for r in typed_keys.rows if r[0] == 5]
+    iceberg_export.append_iceberg(
+        spark, dest,
+        spark.createDataFrame(back, iceberg_export.read_iceberg(spark, dest).schema),
+    )
+    want = sorted(want + back, key=repr)
+    local, scanned = _both_tiers(spark, dest, monkeypatch)
+    assert local == scanned == want
+    assert sorted(r[0] for r in local) == [0, 5, 7, 10, 11]
 
 
 def test_delete_where_iceberg_mor_commit(spark, sf_dir):

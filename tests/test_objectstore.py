@@ -541,6 +541,42 @@ def test_mock_s3_manifests_record_relative_paths(spark, tmp_path):
     assert sorted(r.id for r in table.read(spark).collect()) == [1, 2]
 
 
+def test_mock_s3_mor_delete_reads_through_relative_file_io(
+    spark, tmp_path, monkeypatch
+):
+    """A native table on the object store reads right after a
+    merge-on-read delete: the delete file, recorded relative, is read on
+    the driver through the table's ``RelativeFileIO`` (the mock store's
+    paths mean nothing to a plain ``open``) and applied as a local
+    relation, so no Spark scan of it is planned. The Spark-scan tier
+    (caps forced to 0) reads the same rows."""
+    from pyspark.sql import functions as F
+
+    from iceberg_relative_io_spark.catalog import FsCatalog, RelativeTable, scan
+    from iceberg_relative_io_spark.catalog.mock_s3 import enable_mock_s3
+
+    root = str(tmp_path / "s3mor")
+    impl = enable_mock_s3(root)
+    cat = FsCatalog("s3://bkt-d/wh", io_impl=impl, lock_impl="in-memory")
+    cat.create_namespace(("ns",))
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(6)], "id long, v string")
+    table = RelativeTable(cat.create_table(("ns",), "t", df.schema.jsonValue()))
+    table.append(df)
+    table.delete_where_mor(spark, F.col("id").isin(1, 4), ["id"])
+    table.ops._should_refresh = True
+    meta = table.ops.current()
+    (delete,) = table._delete_files(meta, meta["current-snapshot-id"])
+    assert not delete["path"].startswith("/") and "bkt-d" not in delete["path"]
+
+    got = table.read(spark)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "LeftAnti" in plan
+    assert plan.count("FileScan parquet") == 1
+    assert sorted(r.id for r in got.collect()) == [0, 2, 3, 5]
+    monkeypatch.setattr(scan, "_BROADCAST_DELETE_MAX_BYTES", 0)
+    assert sorted(r.id for r in table.read(spark).collect()) == [0, 2, 3, 5]
+
+
 def test_inmemory_lock_nonowner_release_is_noop_and_entries_prune():
     """release() from a non-owner thread must not free the holder's
     critical section (lock.locked() is true for ANY holder), and
